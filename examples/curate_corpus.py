@@ -12,8 +12,8 @@ Run: python examples/curate_corpus.py [sf_dir]   (default sf0.001)
 Every stage is a lazy DataFrame transform; nothing collects until the final
 summary. At 100 TB the same plan holds: quality predicates push into the
 scan, dedup shuffles on shingle/pair keys, clustering adapts
-(driver union-find for the tiny pair graph, distributed propagation past
-a threshold), survivors anti-join.
+(driver union-find for the tiny pair graph, distributed star contraction
+past a threshold), survivors anti-join.
 """
 
 from __future__ import annotations

@@ -32,8 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions.text import FP_MOD, shingle_hash, word_shingles
-from ..functions.vectors import cosine_sim_q, quantize_vec
+from ..functions.text import FP_MOD, shingle_hash
+from ..functions.vectors import quantize_vec
 
 #: Default boilerplate gate for the exact-pair operators: shingles whose
 #: document frequency exceeds this fraction of all SHINGLED documents are
@@ -103,12 +103,6 @@ def _spread(df: DataFrame) -> DataFrame:
     handful of cores regardless of cluster size."""
     par = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(par)
-
-
-def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    return _spread(df).select(
-        F.col(id_col).alias("__id"), word_shingles(text_col, n).alias("__sh")
-    ).filter(F.size("__sh") > 0)
 
 
 def _hashed_shingled_native(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
@@ -1849,13 +1843,6 @@ def simhash_pairs(
     )
 
 
-#: Deep-frontier contraction trigger (round 11): engage star contraction
-#: when round >= 2 still moves more than this fraction of the round-0
-#: frontier — a shallow graph is at ~0.02% by then, a chain-heavy deep
-#: graph at ~38% (measured traces in the trigger comment below).
-_CC_DEEP_FRONTIER_FRAC = 0.15
-
-
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -1867,476 +1854,259 @@ def connected_components(
 ) -> DataFrame:
     """(node, component) over an undirected pair graph; component = min node
     id in the connected set — the clustering step between near-dup pair
-    generation and survivor selection.
+    generation and survivor selection. Both columns keep the input's id
+    type; a node seen only in self-loop pairs is its own component.
 
-    Adaptive execution (both paths produce identical labels):
+    Adaptive execution (both paths produce identical rows and schema):
 
     - edge list <= ``driver_threshold``: collect + union-find on the driver.
       The pair graph is the OUTPUT of near-dup detection — orders of
       magnitude smaller than the corpus — so this is the common case even
       at large scale, and it avoids paying ~1s of scheduler overhead per
-      propagation round on a graph that fits in memory.
-    - larger: distributed min-label propagation to a fixpoint
-      (Pregel-style), driver-coordinated: each round joins labels to the
-      undirected edge list, takes the min neighbor label, stops when no
-      label changed. Rounds = graph diameter; the convergence check makes
-      every RETURNED result exact — a graph whose diameter exceeds
-      ``max_iter`` RAISES instead of returning silently-split components
-      (resume from ``state_dir`` with a higher budget). Each round is one
-      shuffle join + groupBy, and each label generation is CHECKPOINTED to
-      truncate lineage (the standard Pregel guard — without it the result
-      plan nests one join/agg layer per round). With
-      ``spark.sparkContext.setCheckpointDir(...)`` configured the
-      checkpoint is reliable (recoverable on executor loss — set it on a
-      real cluster, with ``spark.cleaner.referenceTracking.cleanCheckpoints``
-      to reap superseded files); otherwise ``localCheckpoint`` is used,
-      which stores blocks on executors and is NOT recoverable if one dies
-      mid-run. Superseded generations are freed by the context cleaner as
-      their frames are garbage collected.
+      distributed round on a graph that fits in memory.
+    - larger: alternating large-star / small-star rounds (Kiveris et al.,
+      "Connected Components in MapReduce and Beyond", SoCC 2014) over the
+      canonical edge set: each edge is stored once as ``src > dst``, and a
+      ``(v, v)`` row marks a star root (or a self-loop-only node). With
+      ``m(u)`` the minimum of ``u`` and its smaller neighbours, large-star
+      rewires each edge ``(v, u)`` to ``(v, m(u))``; small-star then links
+      ``v`` and every smaller neighbour of ``v`` to ``m(v)``. Every component
+      contracts to a star rooted at its minimum in O(log² n) rounds, with
+      no trigger and no tuning. Each round also measures, in the same job,
+      how many rows of its input are not yet in star form (a row whose
+      target is not a marked root, or a node's second row); at 0 the edge
+      set IS the (node, component) table, so the loop stops and returns it.
+      A graph that has not converged after ``max_iter`` rounds RAISES
+      instead of returning silently-split components (resume from
+      ``state_dir`` with a higher budget). Each round's edge set is
+      CHECKPOINTED eagerly to truncate lineage: reliably when
+      ``spark.sparkContext.setCheckpointDir(...)`` is configured
+      (recoverable on executor loss — set it on a real cluster, with
+      ``spark.cleaner.referenceTracking.cleanCheckpoints`` to reap
+      superseded files), else with ``localCheckpoint``, which is NOT
+      recoverable if an executor dies mid-run.
+
+    ``on_round(i, n)`` (distributed path only) is called after each round
+    with its 0-based index and the count ``n`` of rows not yet in star
+    form; it reads 0 on the converging round.
 
     ``state_dir`` (distributed path only) makes the loop RESTARTABLE
-    across driver crashes: each label generation is written to
-    ``state_dir/gen=N`` parquet (the atomic ``_SUCCESS`` marker commits
-    it) and read back — serving as the round's lineage-truncation
-    checkpoint AND as durable state. On entry the loop resumes from the
-    highest COMPLETE generation (a partially-written directory without
-    ``_SUCCESS`` — a mid-generation crash — is ignored and overwritten),
-    so kill/resume at any point yields labels identical to an
-    uninterrupted run: min-label propagation is monotone, and re-running
-    a round from a committed generation is idempotent. The state is
-    GUARDED BY AN INPUT FINGERPRINT (edge count + order-independent
-    xxhash64 sum, stored in ``state_dir/_meta``): resuming with a
-    DIFFERENT pair graph — e.g. a nightly job reusing yesterday's dir —
-    clears the stale generations and starts fresh instead of silently
-    returning the old graph's labels. The fingerprint costs one extra
-    pass over the edge list, only on the opt-in durable path.
+    across driver crashes: the canonical edge set and each round's edge
+    set are written to ``state_dir/gen=N`` parquet (the atomic
+    ``_SUCCESS`` marker commits it) and read back — serving as the
+    round's lineage-truncation checkpoint AND as durable state. On entry
+    the loop resumes from the highest COMPLETE generation (a
+    partially-written directory without ``_SUCCESS`` — a mid-generation
+    crash — is ignored and overwritten), so kill/resume at any point
+    yields labels identical to an uninterrupted run: every generation is
+    an edge set with the same components, and the loop converges from any
+    of them to the same min-id stars. The state is GUARDED BY AN INPUT
+    FINGERPRINT (edge count + order-independent xxhash64 xor, stored in
+    ``state_dir/_meta``): resuming with a DIFFERENT pair graph — e.g. a
+    nightly job reusing yesterday's dir — clears the stale generations and
+    starts fresh instead of silently returning the old graph's labels. The
+    fingerprint costs one extra pass over the edge list, only on the
+    opt-in durable path.
     """
+    from pyspark.sql import Observation, Window
+    from pyspark.sql.types import StructField, StructType
+
     # cache BEFORE the size probe: the pair graph's lineage is typically the
     # expensive part (near-dup pair generation, ER match scoring) — without
     # the cache an over-threshold graph re-runs that whole pipeline for the
     # distributed edge build after already running it for the probe
     # (measured: ~18s of redundant ER match scoring at the 100x stress).
-    # Partition-grained caching makes this free-or-better in every case: an
-    # under-threshold probe scans (and caches) everything it would have
-    # scanned anyway, and the cache is dropped before returning.
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).cache()
-    if driver_threshold > 0:
-        # one-action size probe: collect at most threshold+1 edges — if they
-        # all fit, that IS the edge list (no separate count pass); only an
-        # overflow pays for a second (now cached) execution
-        rows = edges.limit(driver_threshold + 1).collect()
-        if len(rows) <= driver_threshold:
-            edges.unpersist()
-            parent: dict = {}
-
-            def find(x):
-                root = x
-                while parent[root] != root:
-                    root = parent[root]
-                while parent[x] != root:  # path compression
-                    parent[x], x = root, parent[x]
-                return root
-
-            for r in rows:
-                a, b = r["src"], r["dst"]
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:  # union by min id keeps label = component min
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-            spark = pairs.sparkSession
-            if not parent:
-                return spark.createDataFrame([], "node long, component long")
-            # Arrow-path conversion (pandas) — ~4x faster than the
-            # row-at-a-time list-of-tuples serializer for 10^4+ labels
-            import pandas as _pd
-
-            nodes = list(parent)
-            out = _pd.DataFrame(
-                {
-                    "node": _pd.Series(nodes, dtype="int64"),
-                    "component": _pd.Series((find(n) for n in nodes), dtype="int64"),
-                }
-            )
-            return spark.createDataFrame(out)
-    # distributed path: only the undirected edge list is reused (every
-    # propagation round), so that is the one worth caching. Each label
-    # generation is checkpointed eagerly — reliable checkpoint when a
-    # checkpoint dir is configured (executor-loss-recoverable; set one on a
-    # real cluster), localCheckpoint otherwise — which both serves as the
-    # round's cache AND truncates lineage, so after d rounds the result
-    # plan is one scan instead of d nested join/agg layers (the standard
-    # Pregel lineage guard; a long-diameter graph would otherwise blow up
-    # planning time and driver stack depth).
     spark = pairs.sparkSession
-    sc = spark.sparkContext
-    reliable = sc.getCheckpointDir() is not None
+    # the id type the distributed path computes in; the driver path matches it
+    id_type = edges.select(F.greatest("src", "dst")).schema[0].dataType
+    schema = StructType(
+        [StructField("node", id_type), StructField("component", id_type)]
+    )
+    try:
+        if driver_threshold > 0:
+            # one-action size probe: collect at most threshold+1 edges — if
+            # they all fit, that IS the edge list (no separate count pass)
+            rows = edges.limit(driver_threshold + 1).collect()
+            if len(rows) <= driver_threshold:
+                parent: dict = {}
 
-    gen_counter = [0]
+                def find(x):
+                    root = x
+                    while parent[root] != root:
+                        root = parent[root]
+                    while parent[x] != root:  # path compression
+                        parent[x], x = root, parent[x]
+                    return root
 
-    def _gen_path(n: int) -> str:
-        return f"{state_dir.rstrip('/')}/gen={n}"
+                for r in rows:
+                    a, b = r["src"], r["dst"]
+                    parent.setdefault(a, a)
+                    parent.setdefault(b, b)
+                    ra, rb = find(a), find(b)
+                    if ra != rb:  # union by min id keeps label = component min
+                        if rb < ra:
+                            ra, rb = rb, ra
+                        parent[rb] = ra
+                if not parent:
+                    return spark.createDataFrame([], schema)
+                # Arrow-path conversion (pandas) — ~4x faster than the
+                # row-at-a-time list-of-tuples serializer for 10^4+ labels
+                import pandas as _pd
 
-    def _fs():
-        jvm = sc._jvm
-        root = jvm.org.apache.hadoop.fs.Path(state_dir)
-        return jvm, root.getFileSystem(sc._jsc.hadoopConfiguration()), root
+                nodes = list(parent)
+                return spark.createDataFrame(
+                    _pd.DataFrame(
+                        {"node": nodes, "component": [find(n) for n in nodes]}
+                    ),
+                    schema,
+                )
+        elif edges.isEmpty():
+            # the round loop's Observations need rows: Spark prunes an
+            # empty subtree together with its observer
+            return spark.createDataFrame([], schema)
+        sc = spark.sparkContext
+        reliable = sc.getCheckpointDir() is not None
 
-    def _complete_gens() -> list[int]:
-        """Committed generations under state_dir (Hadoop FS — works on any
-        cluster filesystem, not just local)."""
-        jvm, fs, root = _fs()
-        if not fs.exists(root):
-            return []
-        gens = []
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if not name.startswith("gen="):
-                continue
-            ok = jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
-            if fs.exists(ok):  # no _SUCCESS = mid-generation crash, ignore
-                gens.append(int(name.split("=", 1)[1]))
-        return sorted(gens)
+        def _gen_path(n: int) -> str:
+            return f"{state_dir.rstrip('/')}/gen={n}"
 
-    def _check_fingerprint(und_edges: DataFrame) -> None:
-        """Resume only onto state produced from the SAME pair graph:
-        mismatch clears gen dirs (meta last, so a crash mid-clear is
-        re-detected next run) and a fresh meta is committed."""
-        # bit_xor: order-independent, overflow-free (sum of hashes would
-        # overflow int64 under ANSI); edges are distinct so xor can't
-        # self-cancel a duplicate
-        row = und_edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
-        ).collect()[0]
-        fp = f"{row['n']}:{row['h']}"
-        jvm, fs, root = _fs()
-        meta = jvm.org.apache.hadoop.fs.Path(f"{state_dir.rstrip('/')}/_meta")
-        stored = None
-        if fs.exists(meta):
-            # a kill mid-write can leave a torn _meta (dir with no
-            # committed part file): read defensively and treat torn or
-            # unreadable state as a mismatch, never as a permanent brick
-            try:
-                rows = spark.read.text(f"{state_dir.rstrip('/')}/_meta").collect()
-                stored = rows[0][0] if rows else None
-            except Exception:  # noqa: BLE001 — torn/garbled meta
+        def _fs():
+            jvm = sc._jvm
+            root = jvm.org.apache.hadoop.fs.Path(state_dir)
+            return jvm, root.getFileSystem(sc._jsc.hadoopConfiguration()), root
+
+        def _complete_gens() -> list[int]:
+            """Committed generations under state_dir (Hadoop FS — works on
+            any cluster filesystem, not just local)."""
+            jvm, fs, root = _fs()
+            if not fs.exists(root):
+                return []
+            gens = []
+            for st in fs.listStatus(root):
+                name = st.getPath().getName()
+                if not name.startswith("gen="):
+                    continue
+                ok = jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
+                if fs.exists(ok):  # no _SUCCESS = mid-generation crash, ignore
+                    gens.append(int(name.split("=", 1)[1]))
+            return sorted(gens)
+
+        def _check_fingerprint(canon: DataFrame) -> None:
+            """Resume only onto state produced from the SAME pair graph:
+            mismatch clears gen dirs (meta last, so a crash mid-clear is
+            re-detected next run) and a fresh meta is committed."""
+            # bit_xor: order-independent, overflow-free (sum of hashes would
+            # overflow int64 under ANSI); edges are distinct so xor can't
+            # self-cancel a duplicate
+            row = canon.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
+            ).collect()[0]
+            fp = f"{row['n']}:{row['h']}"
+            jvm, fs, root = _fs()
+            meta = jvm.org.apache.hadoop.fs.Path(f"{state_dir.rstrip('/')}/_meta")
+            stored = None
+            if fs.exists(meta):
+                # a kill mid-write can leave a torn _meta (dir with no
+                # committed part file): read defensively and treat torn or
+                # unreadable state as a mismatch, never as a permanent brick
+                try:
+                    rows = spark.read.text(f"{state_dir.rstrip('/')}/_meta").collect()
+                    stored = rows[0][0] if rows else None
+                except Exception:  # noqa: BLE001 — torn/garbled meta
+                    stored = None
+                if stored is None:
+                    stored = "__torn__"
+            if stored is not None and stored != fp:
+                # unknown or different input: clear every generation (torn
+                # ones included) BEFORE the meta, so a crash mid-clear is
+                # re-detected and finished on the next run
+                for st in fs.listStatus(root):
+                    if st.getPath().getName().startswith("gen="):
+                        fs.delete(st.getPath(), True)
+                fs.delete(meta, True)
                 stored = None
             if stored is None:
-                stored = "__torn__"
-        if stored is not None and stored != fp:
-            # unknown or different input: clear every generation (torn
-            # ones included) BEFORE the meta, so a crash mid-clear is
-            # re-detected and finished on the next run
-            for st in fs.listStatus(root):
-                if st.getPath().getName().startswith("gen="):
-                    fs.delete(st.getPath(), True)
-            fs.delete(meta, True)
-            stored = None
-        if stored is None:
-            spark.createDataFrame([(fp,)], "value string").coalesce(1).write.mode(
-                "overwrite"
-            ).text(f"{state_dir.rstrip('/')}/_meta")
+                spark.createDataFrame([(fp,)], "value string").coalesce(1).write.mode(
+                    "overwrite"
+                ).text(f"{state_dir.rstrip('/')}/_meta")
 
-    def ckpt(df: DataFrame) -> DataFrame:
+        def ckpt(df: DataFrame, gen: int) -> DataFrame:
+            if state_dir is not None:
+                # parquet generation = durable, resumable checkpoint
+                df.write.mode("overwrite").parquet(_gen_path(gen))
+                return spark.read.parquet(_gen_path(gen))
+            return df.checkpoint(eager=True) if reliable else df.localCheckpoint()
+
+        def distinct(df: DataFrame) -> DataFrame:
+            # exchange on src, then dedup partition-local on that layout —
+            # which is also the layout the next round's groupBy(src) needs
+            return df.repartition("src").dropDuplicates()
+
+        # canonical edge set: a self-loop pair (v, v) stays as v's root marker
+        state = distinct(
+            edges.select(
+                F.greatest("src", "dst").alias("src"),
+                F.least("src", "dst").alias("dst"),
+            )
+        )
+        gen = 0
         if state_dir is not None:
-            # parquet generation = durable, resumable checkpoint
-            n = gen_counter[0]
-            gen_counter[0] = n + 1
-            df.write.mode("overwrite").parquet(_gen_path(n))
-            return spark.read.parquet(_gen_path(n))
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint()
-
-    def ickpt(df: DataFrame) -> DataFrame:
-        """Eager lineage-cutting checkpoint that stays OUT of the
-        state_dir gen sequence — for intermediate states whose durability
-        the resume protocol does not need (the outer-round gen is the
-        resume point)."""
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint()
-
-    def ckpt_count(df: DataFrame, flag: str) -> tuple[DataFrame, int]:
-        """Checkpoint ``df`` and return (checkpointed df, count of rows
-        where ``flag`` is true) in ONE job: the count rides the
-        materialization action as an Observation instead of a second
-        scan-and-count over the fresh generation. Every loop round below
-        needs exactly this pair (new generation + how many labels moved),
-        so fusing them halves the jobs-per-round — on a real cluster
-        that's one fewer stage barrier per round, and the convergence
-        check stays exact (the observation aggregates the same rows the
-        checkpoint writes)."""
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        seen = df.observe(obs, F.sum(F.col(flag).cast("long")).alias("n"))
-        out = ckpt(seen)
-        n = obs.get["n"]
-        return out, int(n) if n is not None else 0
-
-    # cached PRE-PARTITIONED on dst: every propagation round joins on
-    # und.dst, so hash-partitioning the cached blocks once lets each
-    # round's sort-merge/hash join reuse the layout instead of
-    # re-exchanging the (unchanging) edge list per round.
-    # Round 11 (guide §2.4): repartition BEFORE deduplicating —
-    # hashpartitioning(dst) satisfies the dedup's clustering requirement
-    # (equal (src, dst) rows share a dst), so the distinct aggregate runs
-    # partition-local on top of the one exchange the cache layout needs
-    # anyway, instead of paying its own full edge shuffle first (two 30M-row
-    # exchanges -> one at the 100x ER graph; 4.5 -> 3.3 s min-of-3
-    # same-session, identical row counts).
-    und = (
-        edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition(F.col("dst"))
-        .dropDuplicates()
-        .cache()
-    )
-    und.count()  # materialize so the edge cache (and its lineage) can drop now
-    edges.unpersist()
-    resumed = False
-    if state_dir is not None:
-        _check_fingerprint(und)
-        done = _complete_gens()
-        if done:
-            latest = done[-1]
-            gen_counter[0] = latest + 1
-            labels = spark.read.parquet(_gen_path(latest)).select("node", "label")
-            resumed = True
-    if not resumed:
-        labels = ckpt(
-            und.select(F.col("src").alias("node"))
-            .distinct()
-            .withColumn("label", F.col("node"))
-        )
-    # FRONTIER propagation: a node's label can only decrease when a
-    # neighbor's label decreased in the previous round, so each round joins
-    # the edge list against only the labels that CHANGED last round (round
-    # 0: all of them — every node is initially "changed"), not the full
-    # label table. Converged graphs spend most rounds on a tiny straggler
-    # frontier (measured on the 100x ER graph: rounds 2-4 changed 468/25/4
-    # labels but each still paid a full 35M-edge join at ~2.6s); with the
-    # frontier those tail rounds join hundreds of rows instead. Exactness:
-    # labels are monotone decreasing, and any path transmitting a smaller
-    # label keeps its carrier in the frontier round by round — at an empty
-    # frontier no neighbor of any node holds a smaller label (the full-join
-    # fixpoint condition). On resume the frontier conservatively resets to
-    # all labels.
-    def _contract(nxt: DataFrame) -> DataFrame:
-        """Hash-to-min star contraction (Kiveris et al., "Connected
-        Components in MapReduce and Beyond", SOCC 2013 — public
-        algorithm): two node-table steps that together collapse label
-        structure logarithmically, where either alone degenerates to
-        1-hop propagation.
-
-        1. ROOT UPDATE: every OLD star root learns the min NEW label
-           among its members (groupBy old label + join back on node id).
-           A member that touched a smaller neighboring star forwards
-           that root to its own root — without this, the smaller label
-           crawls through the star one graph hop per round (measured:
-           compression alone left 5023 labels still moving at round 25
-           on the 100x adaptive-ER graph).
-        2. POINTER COMPRESSION to a fixpoint (label <- min(label,
-           label(label))): root-to-root pointers from step 1 form
-           chains; each inner round halves their depth, so the whole
-           chain of stars collapses in ~log2(depth) self-joins.
-
-        Exactness: every value assigned is the label of a node in the
-        same component (members' labels are component node ids; mins of
-        them stay in the component), labels are monotone decreasing, and
-        termination still requires the NEIGHBOR pass to move nothing —
-        the empty-frontier fixpoint condition is unchanged, so converged
-        labels are exactly the component minima. Acceleration only.
-
-        Inner generations are eagerly CHECKPOINTED but never written to
-        the state_dir gen sequence, which keeps its outer-round
-        granularity for resume. The lineage cut per inner round is NOT
-        optional: each step self-joins its predecessor, so an uncut plan
-        tree DOUBLES per round — ~10 rounds in, plan stringification
-        alone OOMed the driver (measured; plain .persist() caches data
-        but keeps the logical plan)."""
-
-        from pyspark.sql import Observation
-
-        rmin = nxt.groupBy("__old").agg(F.min("label").alias("__rl"))
-        upd = F.least(F.col("label"), F.coalesce("__rl", "label"))
-        nxt = ickpt(
-            nxt.join(
-                rmin.withColumnRenamed("__old", "__rn"),
-                nxt.node == F.col("__rn"),
-                "left",
+            _check_fingerprint(state)
+            done = _complete_gens()
+            gen = done[-1] if done else 0
+            state = spark.read.parquet(_gen_path(gen)) if done else ckpt(state, 0)
+        n = None  # max_iter <= 0: the error message must still format
+        for i in range(max_iter):
+            # m(u) = min over u's rows = u or its smallest neighbour; u has
+            # no row until small-star marks it, so m(u) falls back to u
+            groups, rows = Observation(), Observation()
+            mins = (
+                state.groupBy(F.col("src").alias("__u"))
+                .agg(F.min("dst").alias("__m"))
+                .observe(groups, F.count(F.lit(1)).alias("g"))
             )
-            .select(
-                "node",
-                upd.alias("__new"),
-                ((upd != F.col("label")) | F.col("__chg")).alias("__nchg"),
+            joined = state.join(mins, F.col("dst") == F.col("__u"), "left").observe(
+                rows,
+                F.count(F.lit(1)).alias("r"),
+                # rows whose target is not a marked root (its only row is
+                # its own marker)
+                F.count(F.when(~F.col("__m").eqNullSafe(F.col("dst")), 1)).alias("a"),
             )
-            .select(
-                "node",
-                F.col("__new").alias("label"),
-                F.col("__nchg").alias("__chg"),
+            m = F.coalesce("__m", "dst")
+            # large-star: (v, u) -> (v, m(u)); a marker survives only on a
+            # node with no smaller neighbour
+            large = joined.filter((F.col("src") != F.col("dst")) | (m == F.col("dst")))
+            large = large.select("src", m.alias("dst"))
+            # small-star: v, each target of v, and their minimum all link to it
+            m = F.min("dst").over(Window.partitionBy("src"))
+            small = large.select("src", "dst", m.alias("__m")).select(
+                F.explode(F.array("src", "dst", "__m")).alias("src"),
+                F.col("__m").alias("dst"),
             )
-        )
-        changed = None
-        for _inner in range(64):
-            mapped = nxt.select(
-                F.col("node").alias("__jn"), F.col("label").alias("__jl")
-            )
-            cand = F.least(F.col("label"), F.coalesce("__jl", "label"))
-            # both loop controls (did any pointer jump this inner round;
-            # how many labels moved anywhere this OUTER round) ride the
-            # materialization as one Observation — no second scan
-            obs = Observation()
-            nxt2 = ickpt(
-                nxt.join(mapped, nxt.label == F.col("__jn"), "left")
-                .select(
-                    "node",
-                    cand.alias("__new"),
-                    (cand != F.col("label")).alias("__moved"),
-                    ((cand != F.col("label")) | F.col("__chg")).alias("__nchg"),
-                )
-                .select(
-                    "node",
-                    F.col("__new").alias("label"),
-                    "__moved",
-                    F.col("__nchg").alias("__chg"),
-                )
-                .observe(
-                    obs,
-                    F.sum(F.col("__moved").cast("long")).alias("m"),
-                    F.sum(F.col("__chg").cast("long")).alias("c"),
-                )
-            )
-            got = obs.get
-            moved = int(got["m"] or 0)
-            changed = int(got["c"] or 0)
-            nxt = nxt2.drop("__moved")
-            if moved == 0:
+            state = ckpt(distinct(small), gen + i + 1)
+            r = rows.get
+            # rows off a marked root, plus every node's rows beyond its first
+            n = r["a"] + r["r"] - groups.get["g"]
+            if on_round is not None:
+                on_round(i, n)
+            if n == 0:  # the round's input was already the star forest
                 break
-        # one durable generation per OUTER round; superseded inner
-        # checkpoint blocks are freed by the context cleaner as their
-        # frames are garbage collected
-        return (ckpt(nxt) if state_dir is not None else nxt), changed
-
-    frontier = labels
-    changed = None  # max_iter <= 0: the else-branch must still format
-    compress = False
-    prev_changed = None
-    first_changed = None
-    for round_idx in range(max_iter):
-        nbr = (
-            und.join(
-                frontier.select(
-                    F.col("node").alias("__fn"), F.col("label").alias("__fl")
-                ),
-                und.dst == F.col("__fn"),
-            )
-            .groupBy("src")
-            .agg(F.min("__fl").alias("nbr_label"))
-            .withColumnRenamed("src", "nbr_node")
-        )
-        # the changed flag rides the SAME select that computes the new
-        # label, and the convergence count rides the checkpoint's own
-        # materialization (ckpt_count) — one job per round, no second
-        # labels scan and no labels-vs-labels shuffle join
-        new_label = F.least(F.col("label"), F.coalesce("nbr_label", "label"))
-        gen_plan = (
-            labels.join(nbr, labels.node == nbr.nbr_node, "left")
-            .select(
-                "node",
-                new_label.alias("__new"),
-                (new_label != F.col("label")).alias("__chg"),
-                # the PRE-round label: _contract's root-update groups by
-                # it; a spare column otherwise (dropped below)
-                F.col("label").alias("__old"),
-            )
-            .withColumnRenamed("__new", "label")
-        )
-        # STAR CONTRACTION (see _contract): engaged STICKILY only when
-        # the changed-count trajectory says the graph is deep — a
-        # near-flat round-over-round decline (>90% carried forward: a
-        # chain shifts its whole body one hop per round) or a long tail
-        # still moving thousands of labels after 8 edge hops. The
-        # adaptive-ER 100x graph forced this (PLANS.md round-10): its
-        # match components reach ~50k nodes at diameter ~87 (replica
-        # sibling names differing in 1-2 digits chain transitively), and
-        # plain frontier propagation moved 200-600k labels/round until
-        # the 25-round budget blew. Shallow graphs — the common near-dup
-        # case, where changed drops geometrically (745k/407k/468/25/4/0
-        # measured on the 100x documents graph) — never trigger it and
-        # pay ZERO extra jobs; measured same-session at 100x, an
-        # ungated contraction cost that shallow graph 42.0s vs 37.4s
-        # (each outer round checkpointing + counting a 2.2M-row label
-        # table at least once for nothing).
-        if compress:
-            # ickpt, not ckpt: _contract self-joins its input (must be
-            # materialized, or gen_plan's edge join runs twice in one
-            # job), but the durable generation for this round is the
-            # CONTRACTED result _contract writes — a pre-contraction gen
-            # would be superseded immediately and doubles the per-round
-            # label-table write for nothing
-            nxt, changed = _contract(ickpt(gen_plan))
         else:
-            nxt, changed = ckpt_count(gen_plan, "__chg")
-            nxt = nxt.drop("__old")
-        if first_changed is None:
-            first_changed = changed
-        if not compress and prev_changed is not None:
-            # Round 11 (VERDICT r10 #4 — cut outer rounds at 100x): the
-            # near-flat-decline / round-8 triggers engaged contraction
-            # only at round 6 on the 100x adaptive-ER graph (measured
-            # trace 2.46M/1.9M/946k/621k/541k/566k changed). A SHALLOW
-            # graph's frontier collapses geometrically instead — the
-            # 100x documents graph is at 0.02% of its round-0 frontier
-            # by round 2 (745k/407k/468/...) — so "still moving >15% of
-            # the round-0 frontier at round >= 2" separates deep from
-            # shallow with a 750x margin and engages contraction three
-            # rounds earlier. Measured on the frozen 100x ER edge list
-            # (same session, interleaved, min-of-2): 9 -> 7 outer rounds
-            # at FLAT wall (53.7 vs 54.1 s) — a contraction round costs
-            # ~4x a plain round locally because every pointer jump
-            # re-enters the frontier, so the saved plain rounds buy
-            # stage barriers, not local seconds; on a real cluster fewer
-            # rounds = fewer per-round scheduling barriers, which is why
-            # the earlier trigger is kept. Exactness unchanged:
-            # contraction is acceleration only; the empty-frontier
-            # fixpoint still terminates every path.
-            compress = (
-                (changed > 0.9 * prev_changed and changed > 0)
-                or (round_idx >= 8 and changed > 1000)
-                or (
-                    round_idx >= 2
-                    and changed > _CC_DEEP_FRONTIER_FRAC * (first_changed or 0)
-                )
+            # a non-converged edge set would SILENTLY split components
+            # (entity resolution would fragment entities with no error);
+            # with a state_dir the generations are durable for a resume
+            raise RuntimeError(
+                f"connected_components: not converged after {max_iter} rounds "
+                f"({n} edges not yet in star form); raise max_iter "
+                "(resume from state_dir if set)"
             )
-        prev_changed = changed
-        if on_round is not None:
-            # observability hook (distributed path only): called with the
-            # 0-based round index and the number of labels that moved —
-            # what a deployment logs to watch a long propagation converge
-            on_round(round_idx, changed)
-        # dropping the last Python reference releases the superseded
-        # generation's JVM frame; the context cleaner then frees its
-        # checkpoint blocks (DataFrame.unpersist would be a no-op here —
-        # checkpoint storage is not cache-manager-tracked)
-        frontier = nxt.filter(F.col("__chg"))
-        labels = nxt
-        if changed == 0:
-            break
-    else:
-        # exhausting max_iter with labels still moving means some chain
-        # component's diameter exceeds the round budget — returning the
-        # non-converged labels would SILENTLY split true components
-        # (entity resolution would fragment entities with no error).
-        # Raise; with a state_dir the completed generations are durable,
-        # so a rerun with a higher max_iter resumes where this stopped.
-        und.unpersist()
-        raise RuntimeError(
-            f"connected_components: not converged after {max_iter} rounds "
-            f"({changed} labels still changing) — graph diameter exceeds "
-            "max_iter; raise max_iter (resume from state_dir if set)"
+        return state.select(
+            F.col("src").alias("node"), F.col("dst").alias("component")
         )
-    und.unpersist()
-    return labels.select("node", F.col("label").alias("component"))
+    finally:
+        edges.unpersist()
 
 
 def embedding_pairs(
@@ -2602,9 +2372,21 @@ def sparse_cosine_pairs(
     deployments add prefix filtering on top. On the synthetic word-soup
     tables every word is ubiquitous, so the gate query leaves
     max_df_frac=1 and restricts the corpus instead — the operator's
-    pruning path is unit-tested separately."""
+    pruning path is unit-tested separately.
+
+    ``id_col`` must be an integer column (both paths pack and order ids as
+    int64); ``id_a``/``id_b`` come back in its type. Any other type raises
+    ``TypeError`` up front."""
+    from pyspark.sql.types import IntegralType
+
     from ..functions.text import word_hashes
 
+    id_type = df.select(id_col).schema[0].dataType
+    if not isinstance(id_type, IntegralType):
+        raise TypeError(
+            f"sparse_cosine_pairs: id column {id_col!r} must be an integer "
+            f"type, got {id_type.simpleString()}"
+        )
     toks = _spread(df).select(
         F.col(id_col).alias("__id"), F.explode(word_hashes(text_col)).alias("__w")
     )
@@ -2686,7 +2468,9 @@ def sparse_cosine_pairs(
         vocab = sorted(r["__w"] for r in wt.select("__w").distinct().collect())
         dense = _dense_int_cosine_pairs(wt, vocab, tau)
         return dense.select(
-            "id_a", "id_b", F.round("cosine", 6).alias("cosine")
+            F.col("id_a").cast(id_type).alias("id_a"),
+            F.col("id_b").cast(id_type).alias("id_b"),
+            F.round("cosine", 6).alias("cosine"),
         )
     nrm = wt.groupBy("__id").agg(F.sum(F.col("__wgt") * F.col("__wgt")).alias("__nn"))
     a, b = wt.alias("a"), wt.alias("b")
@@ -2746,8 +2530,8 @@ def sparse_cosine_pairs(
         .filter(F.col("cosine") >= tau)
     )
     return cos.select(
-        F.col("__ida").alias("id_a"),
-        F.col("__idb").alias("id_b"),
+        F.col("__ida").cast(id_type).alias("id_a"),
+        F.col("__idb").cast(id_type).alias("id_b"),
         F.round("cosine", 6).alias("cosine"),
     )
 

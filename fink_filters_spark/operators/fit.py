@@ -16,8 +16,6 @@ XGBoost (import-gated) for the real science; the plumbing is identical.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -189,18 +187,6 @@ def linfit_per_key(
     return cols.repartition(par, key).mapInPandas(
         lambda it: _linfit_kernel_many(it, key, "__x", "__y"), schema
     )
-
-
-def fit_per_key(
-    df: DataFrame,
-    key: str,
-    kernel: Callable,
-    schema: StructType,
-) -> DataFrame:
-    """Generic grouped-fit plumbing: bring your own kernel (e.g. a light-curve
-    model fit scoring with a broadcast XGBoost model — import-gated, the
-    heavy science deps are not in this container)."""
-    return df.groupBy(key).applyInPandas(kernel, schema)
 
 
 # --------------------------------------------------------------------------

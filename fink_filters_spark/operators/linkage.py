@@ -22,7 +22,7 @@ survivorship, and every stage maps onto a scale-correct Spark shape:
   O(len^2)) evaluated JVM-side inside codegen; candidates above the
   threshold report -1 and drop without computing the full matrix.
 - **clustering**: match pairs feed ``dedup.connected_components`` (the
-  same adaptive union-find / min-label-propagation used by the near-dup
+  same adaptive union-find / large-star-small-star loop used by the near-dup
   graph) — matching is not transitive but entities are, so the component
   closure IS the entity.
 - **survivorship** (``golden_records``): one aggregate per entity with a
@@ -332,7 +332,7 @@ def resolve_entities(
     """(node, entity_id) — transitive closure of the match-pair graph;
     entity_id = min record id in the connected set. Thin wrapper over
     ``dedup.connected_components`` (same adaptive driver union-find /
-    distributed min-label propagation, same exactness guarantees) so the
+    distributed large-star / small-star rounds, same exactness guarantees) so the
     linkage pipeline reads end-to-end in one module."""
     from .dedup import connected_components
 

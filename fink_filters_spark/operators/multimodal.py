@@ -221,19 +221,6 @@ def stamp_kstest(
     )
 
 
-def frame_sample_stub(df: DataFrame, bin_col: str, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling stage — decoder unavailable, STUB.
-
-    Raises at plan time so misuse is loud; ``frame_sample`` below carries
-    the real Spark plumbing with an injectable decoder.
-    """
-    raise NotImplementedError(
-        "video decode requires ffmpeg-class libraries not present in this "
-        "container; use frame_sample(df, ..., decoder=...) with a real "
-        "decoder, or fake_frames for plumbing tests"
-    )
-
-
 FRAME_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),

@@ -111,15 +111,6 @@ def mixture_sample(
     )
 
 
-def stratified_mod_sample(df: DataFrame, key: str, strata: Column, moduli: dict) -> DataFrame:
-    """Per-stratum modulus sampling (e.g. keep 1/10 of 'view' events but all
-    'error' events) — the streaming-safe version of sampleBy."""
-    cond = F.lit(False)
-    for stratum, modulus in moduli.items():
-        cond = cond | ((strata == stratum) & (F.pmod(F.col(key), F.lit(modulus)) == 0))
-    return df.filter(cond)
-
-
 def _int_floor_div(num: Column, den: int) -> Column:
     """Exact ``floor(num / den)`` for a non-negative integral column: strip
     the remainder with pmod, then divide in decimal(38,0) (BigDecimal —

@@ -558,10 +558,10 @@ FROM documents d2
 
 
 def q_dedup_components_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The DISTRIBUTED connected-components path (Pregel-style min-label
-    propagation to a fixpoint), forced by ``driver_threshold=0`` on the
-    same pair graph as ``dedup_components`` — the execution a pair graph
-    too large for the driver union-find takes at corpus scale. Checked
+    """The DISTRIBUTED connected-components path (alternating large-star /
+    small-star rounds to a star forest), forced by ``driver_threshold=0``
+    on the same pair graph as ``dedup_components`` — the execution a pair
+    graph too large for the driver union-find takes at corpus scale. Checked
     against the identical recursive-CTE oracle, so BOTH adaptive paths are
     oracle-verified, not just the driver-side common case."""
     from ..operators.dedup import connected_components
@@ -917,7 +917,7 @@ SPECS = [
               "connected components over the near-dup pair graph"),
     QuerySpec("dedup_components_distributed", q_dedup_components_distributed,
               DEDUP_COMPONENTS_SQL,
-              "connected components via distributed min-label propagation"),
+              "connected components via distributed large-star/small-star rounds"),
     QuerySpec("dedup_apply", q_dedup_apply, DEDUP_APPLY_SQL,
               "applied near-dup removal (keep-lowest-id)"),
     QuerySpec("dedup_ngram_jaccard", q_dedup_jaccard, DEDUP_JACCARD_SQL,

@@ -3,7 +3,7 @@ itself (both run verbatim-ish in DuckDB too):
 
 - WITH RECURSIVE (new in Spark 4): hierarchy walk with a per-level
   accumulator — the iterative-computation dual of operators/dedup.py's
-  label-propagation loop, expressed declaratively.
+  connected-components loop, expressed declaratively.
 - LATERAL correlated subquery: per-outer-row top-k — the subquery form of
   the w_topn_per_user window pattern.
 
@@ -15,7 +15,8 @@ values only a genuine per-level walk produces.
 
 Scale note: each recursion level is one self-join of the frontier against
 the (broadcastable) customer dim; depth is log2(|customer|), so the plan is
-O(log n) joins — the same bound as the distributed label-propagation path.
+O(log n) joins (the distributed connected-components loop takes O(log² n)
+rounds).
 """
 
 from __future__ import annotations

@@ -300,8 +300,8 @@ def test_embedding_pairs_matches_numpy(spark):
 
 
 def test_connected_components_paths_agree(spark):
-    """Driver union-find and distributed label propagation produce identical
-    labels; chains require multi-round propagation (diameter > 1)."""
+    """Driver union-find and the distributed star rounds produce identical
+    labels; chains need more than one round to contract (diameter > 1)."""
     from fink_filters_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
@@ -319,12 +319,11 @@ def test_connected_components_paths_agree(spark):
 
 
 def test_connected_components_log_diameter_convergence(spark):
-    """Pointer jumping (label <- label(label)) makes round count
-    logarithmic in the component diameter: a 600-node sorted path — the
-    propagation worst case, min label at one end — must converge well
-    inside a log-scale round budget (plain 1-hop propagation would need
-    ~600 rounds). Regression pin for the round-10 fix that unblocked the
-    100x adaptive-ER graph."""
+    """Large-star / small-star contraction makes the round count
+    polylogarithmic in the component diameter: a 600-node sorted path — the
+    worst case for 1-hop min-label propagation, min id at one end — must
+    converge well inside a log-scale round budget (1-hop propagation would
+    need ~600 rounds)."""
     from fink_filters_spark.operators.dedup import connected_components
 
     n = 600
@@ -341,16 +340,17 @@ def test_connected_components_log_diameter_convergence(spark):
     labels = {r.node: r.component for r in out.collect()}
     assert labels == {i: 0 for i in range(n)}
     assert len(rounds) <= 16
-    # the hook receives the 0-based OUTER round index (round-10 review:
-    # it briefly reported a gen counter that never advanced without a
-    # state_dir), and the converged final round reports 0 labels moving
+    # the hook receives the 0-based round index (not a generation counter,
+    # which does not advance without a state_dir), and the converging
+    # round reports 0 edges not yet in star form
     assert [i for i, _ in rounds] == list(range(len(rounds)))
     assert rounds[-1][1] == 0
 
 
-def test_connected_components_restart_recovery(spark, tmp_path):
-    """The 100 TB fallback path is crash-safe BY TEST: kill the
-    label-propagation loop mid-run (max_iter cap leaves committed
+@pytest.mark.parametrize("crash_after", [1, 2, 3])
+def test_connected_components_restart_recovery(spark, tmp_path, crash_after):
+    """The 100 TB fallback path is crash-safe BY TEST: kill the star loop
+    mid-run after 1, 2 or 3 rounds (the max_iter cap leaves committed edge
     generations in state_dir), scribble a partial generation with no
     _SUCCESS (a mid-generation crash), then resume — the resumed run must
     ignore the torn generation, continue from the last committed one, and
@@ -360,7 +360,7 @@ def test_connected_components_restart_recovery(spark, tmp_path):
 
     from fink_filters_spark.operators.dedup import connected_components
 
-    # chain 0-1-...-14 (diameter 14 ⇒ several min-label rounds) + extras
+    # chain 0-1-...-14 (diameter 14 ⇒ five star rounds) + extras
     chain = [(i, i + 1) for i in range(14)]
     pairs = spark.createDataFrame(
         chain + [(100, 101), (101, 102), (200, 201)], "id_a long, id_b long"
@@ -368,18 +368,16 @@ def test_connected_components_restart_recovery(spark, tmp_path):
     truth = {(r.node, r.component) for r in connected_components(pairs).collect()}
 
     state = str(tmp_path / "cc_state")
-    # phase 1: "crash" after the first outer round (initial labels +
-    # one neighbor gen; round-10 stall-gated pointer compression can kick
-    # in from round 2, so a 1-round budget is the clean way to leave
-    # committed-but-unconverged state). Exhausting max_iter RAISES
-    # (round 7: returning labels whose convergence was never CONFIRMED
-    # would be silent for callers that treat the output as final) — the
-    # committed generations stay durable for resume.
+    # phase 1: "crash" after ``crash_after`` rounds (the canonical edge
+    # gen + one gen per round, all short of convergence). Exhausting
+    # max_iter RAISES (returning labels whose convergence was never
+    # CONFIRMED would be silent for callers that treat the output as
+    # final) — the committed generations stay durable for resume.
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="not converged"):
         connected_components(
-            pairs, driver_threshold=0, max_iter=1, state_dir=state
+            pairs, driver_threshold=0, max_iter=crash_after, state_dir=state
         ).collect()
     committed = sorted(
         int(d.split("=")[1]) for d in os.listdir(state) if d.startswith("gen=")
@@ -856,6 +854,45 @@ def test_sparse_cosine_df_pruning_and_reordering_robustness(spark):
     cos_big = {(r.id_a - off, r.id_b - off): r.cosine
                for r in sparse_cosine_pairs(big, "doc_id", "text", tau=0.0).collect()}
     assert cos_big == cos
+
+
+@pytest.mark.parametrize("path", ["dense", "posting"])
+def test_sparse_cosine_id_types(spark, monkeypatch, path):
+    """Both paths (dense block matmul; posting join, forced by a 0 vocab
+    bound) return ids in the input's integer type with the same pairs for
+    int and long ids — packed ([0, 2^31)) and unpacked (negative) posting
+    keys alike — and reject a non-integer id column up front."""
+    import fink_filters_spark.operators.dedup as d
+
+    if path == "posting":
+        monkeypatch.setattr(d, "_DENSE_MAX_VOCAB", 0)
+    texts = [
+        "red green blue cyan common",
+        "cyan blue green red common",
+        "zeta eta theta iota common",
+        "red green blue iota common",
+    ]
+    want = None
+    for offset in (0, -10):
+        for typ in ("int", "long"):
+            df = spark.createDataFrame(
+                [(i + offset, t) for i, t in enumerate(texts)], f"doc_id {typ}, text string"
+            )
+            spark.catalog.clearCache()
+            out = d.sparse_cosine_pairs(df, "doc_id", "text", tau=0.1)
+            id_type = df.schema["doc_id"].dataType
+            assert [f.dataType for f in out.schema.fields[:2]] == [id_type, id_type]
+            got = sorted(
+                (r.id_a - offset, r.id_b - offset, r.cosine) for r in out.collect()
+            )
+            assert got, (offset, typ)
+            assert want is None or got == want
+            want = got
+    words = spark.createDataFrame(
+        [("a", texts[0]), ("b", texts[1])], "doc_id string, text string"
+    )
+    with pytest.raises(TypeError, match="must be an integer type"):
+        d.sparse_cosine_pairs(words, "doc_id", "text", tau=0.1)
 
 
 def test_minhash_index_bucketed_at_rest_probe_is_shuffle_free(spark, tmp_path):

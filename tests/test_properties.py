@@ -12,7 +12,7 @@ import math
 
 import numpy as np
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -800,6 +800,87 @@ def test_hilbert_random_points_match_reference_property(spark, bits, seed):
     for (x, y), h in got.items():
         assert h == _py_hilbert(n, x, y)
         assert 0 <= h < n * n
+
+
+_CC_IDS = {
+    "int": st.integers(min_value=-(2**31), max_value=2**31 - 1),
+    "long": st.one_of(
+        st.integers(min_value=-(2**63), max_value=2**63 - 1),
+        st.integers(min_value=2**31 - 2, max_value=2**31 + 2),
+    ),
+    # multi-byte characters: Spark's UTF-8 byte order must match Python's
+    # code-point order for "min id" to agree
+    "string": st.text(alphabet="ab0Z\u00e9\u4e2d", max_size=4),
+}
+
+
+@st.composite
+def _cc_graphs(draw):
+    """(id type, pairs): a random multigraph over a small node pool —
+    duplicate, reversed and self-loop pairs included — or a ladder of
+    cliques chained end to end (a deep graph), with every node index mapped
+    to a distinct drawn id, so ids land in shuffled order."""
+    typ = draw(st.sampled_from(sorted(_CC_IDS)))
+    if draw(st.booleans()):
+        size = draw(st.integers(min_value=2, max_value=4))
+        n_cliques = draw(st.integers(min_value=1, max_value=6))
+        edges = []
+        for c in range(n_cliques):
+            members = range(c * size, (c + 1) * size)
+            edges += [(a, b) for a in members for b in members if a < b]
+            if c:
+                edges.append((c * size - 1, c * size))
+        n = size * n_cliques
+    else:
+        n = draw(st.integers(min_value=1, max_value=12))
+        node = st.integers(min_value=0, max_value=n - 1)
+        edges = draw(st.lists(st.tuples(node, node), max_size=20))
+        if edges and draw(st.booleans()):
+            a, b = edges[0]
+            edges += [(a, b), (b, a), (a, a)]
+    ids = draw(st.lists(_CC_IDS[typ], min_size=n, max_size=n, unique=True))
+    return typ, [(ids[a], ids[b]) for a, b in edges]
+
+
+@settings(max_examples=15, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(graph=_cc_graphs())
+@example(graph=("long", []))
+@example(graph=("int", [(-7, 2**31 - 1)]))
+@example(graph=("string", [("b", "a"), ("a", "b"), ("c", "c"), ("d", "b")]))
+@example(graph=("long", [(2**40 + i, 2**40 + j) for i, j in
+                         [(5, 3), (3, 8), (8, 5), (8, 1), (1, 9), (9, 4), (4, 1)]]))
+def test_connected_components_paths_agree_property(spark, graph):
+    """The driver union-find and the distributed star rounds
+    (``driver_threshold=0``) return identical rows AND schema — both in the
+    input's id type — and match a union-find written here, on int, long
+    and string ids, empty input, a single edge, self-loop-only nodes and
+    deep clique ladders."""
+    from fink_filters_spark.operators.dedup import connected_components
+
+    typ, pairs = graph
+    df = spark.createDataFrame(pairs, f"id_a {typ}, id_b {typ}")
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = sorted((find(a), find(b)))
+        parent[rb] = ra
+    want = sorted((x, find(x)) for x in parent)
+
+    fast = connected_components(df)
+    dist = connected_components(df, driver_threshold=0)
+    id_type = df.schema["id_a"].dataType
+    assert [f.dataType for f in fast.schema.fields] == [id_type, id_type]
+    assert fast.schema == dist.schema
+    assert sorted(map(tuple, fast.collect())) == want
+    assert sorted(map(tuple, dist.collect())) == want
 
 
 @settings(max_examples=50, deadline=None)
