@@ -8,6 +8,10 @@ maps ``"ztf.sn_candidates"`` to a function building a boolean Column from a
 DataFrame, and ``apply_named_filter`` is plain ``df.filter(expr)`` — fully
 visible to the optimizer (pushdown, reordering, pruning), and valid in both
 batch and Structured Streaming plans.
+
+A registered builder must be a deterministic expression over column names
+that does not read its ``df`` argument: the registry builds it once per JVM
+and returns that same Column on every later call (``registry.once_per_jvm``).
 """
 
 from .registry import (  # noqa: F401

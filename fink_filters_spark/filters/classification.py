@@ -9,21 +9,30 @@ LAST mask wins); 'Ambiguous' when >1 of the FOUR counted flags
 (excluding Unknown/Transient/Fail*/Galaxy*) overrides everything with its
 own otype string (``:209``).
 
-Here: the shared generic operator (operators/classify.classify) instantiated
-with the reference's exact flags/precedence — pure Column expressions, which
-also makes the ``ztf.unknowns`` topic (C8) a trivial equality filter.
+Here: the shared generic operator (operators/classify.classify_expr)
+instantiated with the reference's exact flags/precedence — pure Column
+expressions, which also makes the ``ztf.unknowns`` topic (C8) a trivial
+equality filter. The label Column is built once per JVM, like a registered
+topic (filters/registry.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
-from ..operators.classify import classify
+from ..operators.classify import classify_expr
+from .registry import once_per_jvm
 from .ztf import EG_HOST_CLASSES
 
 
 def extract_fink_classification(df: DataFrame, out_col: str = "fink_class") -> DataFrame:
-    """Append the Fink classification label column.
+    """Append the Fink classification label column."""
+    return df.withColumn(out_col, _fink_label())
+
+
+@once_per_jvm
+def _fink_label() -> Column:
+    """The Fink classification label.
 
     Flag definitions mirror ``ztf/classification.py:139-191``; mask
     precedence mirrors ``:193-199`` (later entries win in the reference's
@@ -85,11 +94,9 @@ def extract_fink_classification(df: DataFrame, out_col: str = "fink_class") -> D
         & ~F.col("cdsxmatch").startswith("Galaxy"),
         F.col("cdsxmatch"),
     )
-    return classify(
-        df,
+    return classify_expr(
         flags,
         override=simbad_override,
-        out_col=out_col,
         # the reference counts ONLY these four flags toward Ambiguous
         # (classification.py:202-205)
         ambiguity_flags=[

@@ -8,13 +8,23 @@ Parity surface (reference behaviors being replaced):
   function, infer columns from its signature.
 - per-filter ``DESCRIPTION`` / ``HBASE_SUPPORT`` module constants
   (``rubin/livestream/filter_in_tns/filter.py:19-20``).
+
+Builder contract: a registered builder is a deterministic expression over
+column names (``F.col``, literals, native functions) that never reads its
+``df`` argument. The registry builds it once per JVM gateway and hands back
+that same Column on every later ``builder(df)`` call; a builder that needs
+the frame belongs outside the registry (a dotted user builder, below, is
+called afresh each time).
 """
 
 from __future__ import annotations
 
+import functools
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 
 
@@ -32,6 +42,27 @@ class FilterInfo:
 _REGISTRY: dict[str, FilterInfo] = {}
 
 
+def once_per_jvm(fn: Callable[..., Column]) -> Callable[..., Column]:
+    """Build ``fn``'s Column on the first call and return that same Column
+    until the JVM gateway changes; later arguments are ignored, so ``fn``
+    must not read them. Under PySpark 4's call-site capture every Column
+    call is several Py4J round trips, so rebuilding a topic per use costs
+    about 150 of them; a built Column is an unresolved expression, valid
+    on any frame and in any session of its JVM."""
+    memo: list = []  # [(gateway, column)]
+    lock = threading.Lock()  # foreachBatch sinks build on Py4J callback threads
+
+    @functools.wraps(fn)
+    def built(*args) -> Column:
+        gw = SparkContext._gateway
+        with lock:
+            if not memo or memo[0][0] is not gw:
+                memo[:] = [(gw, fn(*args))]
+            return memo[0][1]
+
+    return built
+
+
 def register(
     name: str,
     description: str = "",
@@ -39,7 +70,11 @@ def register(
     hbase_support: bool = False,
     requires: tuple[str, ...] = (),
 ):
-    """Decorator: register ``fn(df) -> Column`` as topic ``name``."""
+    """Decorator: register ``fn(df) -> Column`` as topic ``name``.
+
+    ``fn`` must follow the builder contract (module docstring): the
+    registry keeps ``once_per_jvm(fn)``; the decorated name stays ``fn``.
+    """
 
     def deco(fn: Callable[[DataFrame], Column]):
         desc = description
@@ -47,7 +82,7 @@ def register(
             desc = fn.__doc__.strip().splitlines()[0]
         _REGISTRY[name] = FilterInfo(
             name=name,
-            builder=fn,
+            builder=once_per_jvm(fn),
             description=desc,
             survey=name.split(".", 1)[0],
             reference=reference,
@@ -144,7 +179,8 @@ def _resolve_dotted(name: str) -> FilterInfo | None:
     """A1/A2 dynamic parity: resolve 'pkg.mod.fn' to a user-supplied builder
     (a plain ``df -> Column`` function), exactly the reference's
     ``apply_user_defined_filter(df, "fink_filters....filter.foo")`` contract
-    for filters not shipped in this registry."""
+    for filters not shipped in this registry. Not cached: a user builder
+    may read ``df``."""
     import importlib
 
     if "." not in name:

@@ -22,7 +22,21 @@ def classify(
     unknown_label: str = "Unknown",
     ambiguity_flags: list[str] | None = None,
 ) -> DataFrame:
-    """Append ``out_col`` with precedence-ordered labels.
+    """Append ``out_col``, the ``classify_expr`` label, to ``df``."""
+    return df.withColumn(
+        out_col,
+        classify_expr(flags, override, ambiguous_label, unknown_label, ambiguity_flags),
+    )
+
+
+def classify_expr(
+    flags: dict[str, Column],
+    override: Column | None = None,
+    ambiguous_label: str = "Ambiguous",
+    unknown_label: str = "Unknown",
+    ambiguity_flags: list[str] | None = None,
+) -> Column:
+    """The precedence-ordered label as one string Column.
 
     ``flags`` is an ordered {label: boolean Column}; ``override`` is a string
     Column that, when non-null, wins over everything (the SIMBAD-type
@@ -56,7 +70,7 @@ def classify(
     expr = F.when(cond, val)
     for cond, val in branches[1:]:
         expr = expr.when(cond, val)
-    return df.withColumn(out_col, expr.otherwise(unknown_label))
+    return expr.otherwise(unknown_label)
 
 
 def classify_events(ev: DataFrame) -> DataFrame:

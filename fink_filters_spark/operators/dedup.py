@@ -1855,7 +1855,9 @@ def connected_components(
     """(node, component) over an undirected pair graph; component = min node
     id in the connected set — the clustering step between near-dup pair
     generation and survivor selection. Both columns keep the input's id
-    type; a node seen only in self-loop pairs is its own component.
+    type; a node seen only in self-loop pairs is its own component. A pair
+    with a null endpoint is dropped before either path runs, so a node seen
+    only in such pairs is absent from the output.
 
     Adaptive execution (both paths produce identical rows and schema):
 
@@ -1916,7 +1918,11 @@ def connected_components(
     # the cache an over-threshold graph re-runs that whole pipeline for the
     # distributed edge build after already running it for the probe
     # (measured: ~18s of redundant ER match scoring at the 100x stress).
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).cache()
+    edges = (
+        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+        .dropna()
+        .cache()
+    )
     spark = pairs.sparkSession
     # the id type the distributed path computes in; the driver path matches it
     id_type = edges.select(F.greatest("src", "dst")).schema[0].dataType

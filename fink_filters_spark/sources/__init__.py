@@ -1,12 +1,13 @@
 """Sources (SURVEY §2.B B1-B5).
 
-- Parquet/CSV batch + parquet file-stream readers (B1/B2).
+- Alert parquet scans and file streams (B1) are plain ``spark.read`` /
+  ``spark.readStream`` with the alert schema (``schemas.py``).
 - Catalog loader for the packaged reference catalogs (B2): loaded ONCE and
   marked broadcast — the reference re-reads its catalogs inside the pandas
   UDF on every micro-batch (``ztf/livestream/filter_early_kn_candidates/
   filter.py:70-77``), an anti-pattern this module exists to kill.
-- Kafka stream source builder (the production alert transport of the
-  broker this library serves).
+- Kafka wire decoding (``kafka_decode``, JSON or Avro containers) for
+  the production alert transport of the broker this library serves.
 - REST snapshot source (B3/B4/B5): remote lookups become periodically
   refreshed *tables* joined via broadcast, never per-row RPCs inside UDFs
   (SURVEY §2.B D5 note). The HTTP fetch itself is pluggable and stubbed in
@@ -19,49 +20,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
-
-
-def read_alerts(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
-    """B1: batch parquet scan."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
-
-
-def stream_alerts(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    """B1 (streaming): file-source stream — the test-friendly stand-in for
-    the Kafka source; identical downstream plan."""
-    return spark.readStream.schema(schema).parquet(path)
-
-
-def kafka_stream(
-    spark: SparkSession,
-    brokers: str,
-    topic: str,
-    schema: StructType,
-    starting_offsets: str = "latest",
-    max_offsets_per_trigger: int | None = None,
-) -> DataFrame:
-    """Kafka alert source: value is Avro/JSON payload; this builder assumes
-    JSON. For the production Avro payloads use
-    ``kafka_decode(raw, value_format="avro", avro_schema=...)`` (pure-Python
-    container-file decoder, works offline) or spark-avro's ``from_avro``
-    where the jar is available.
-
-    ``maxOffsetsPerTrigger`` bounds micro-batch size — the back-pressure
-    control that keeps 100 TB nights from producing unbounded batches.
-    """
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-    )
-    if max_offsets_per_trigger:
-        reader = reader.option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
-    raw = reader.load()
-    return kafka_decode(raw, schema).select("alert.*", "kafka_timestamp")
 
 
 def kafka_decode(

@@ -4,6 +4,7 @@ SURVEY §5; we synthesize deterministic equivalents, seed=7)."""
 
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -34,8 +35,10 @@ def spark():
     from fink_filters_spark.session import DYNAMIC_CONF
     from pyspark.sql import SparkSession
 
+    # the tier-1 command sets SPARK_GRAFT_CPUS to the host's core count
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or "4"
     builder = (
-        SparkSession.builder.master("local[4]")
+        SparkSession.builder.master(f"local[{cores}]")
         .appName("fink_filters_spark-tests")
         .config("spark.driver.memory", "3g")
         .config("spark.sql.shuffle.partitions", "8")

@@ -484,3 +484,92 @@ def test_reference_aliased_path_selects_like_native_topic(ztf_df):
     via_alias = apply_named_filter(ztf_df, ref_path).count()
     native = apply_named_filter(ztf_df, "ztf.sn_candidates").count()
     assert via_alias == native > 0
+
+
+def test_registered_builders_build_once(ztf_df, rubin_df):
+    """The registry builds each topic once per JVM: a second ``builder(df)``
+    call returns the identical Column, a reference-path alias shares it,
+    the Column is deterministic (so the cache can never freeze a rand()
+    seed), and it selects the same rows as the raw, uncached function."""
+    from fink_filters_spark.filters.classification import (
+        _fink_label,
+        extract_fink_classification,
+    )
+
+    assert _fink_label() is _fink_label()
+    frames = {
+        "ztf": (extract_fink_classification(ztf_df), "candid"),
+        "rubin": (rubin_df, "diaSourceId"),
+    }
+    for info in filter_catalog():
+        df, key = frames[info.survey]
+        cond = info.builder(df)
+        assert info.builder(df) is cond, info.name
+        kept = df.filter(cond)
+        analyzed = kept._jdf.queryExecution().analyzed()
+        assert analyzed.condition().deterministic(), info.name
+        raw = df.filter(info.builder.__wrapped__(df))
+        assert sorted(r[0] for r in kept.select(key).collect()) == sorted(
+            r[0] for r in raw.select(key).collect()
+        ), info.name
+    alias = "fink_filters.ztf.livestream.filter_sn_candidates.filter.sn_candidates"
+    native = get_filter("ztf.sn_candidates").builder
+    assert get_filter(alias).builder(ztf_df) is native(ztf_df)
+
+
+_RESTART_SCRIPT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark import SparkContext
+from pyspark.sql import SparkSession
+from fink_filters_spark.filters import get_filter
+
+def session():
+    return (SparkSession.builder.master("local[1]")
+            .config("spark.ui.enabled", "false").getOrCreate())
+
+def frame(spark):
+    return spark.range(1000).withColumnRenamed("id", "diaSourceId")
+
+builder = get_filter("rubin.uniform_sample").builder
+spark = session()
+df = frame(spark)
+cond = builder(df)
+counts = [df.filter(cond).count()]
+spark.stop()
+
+spark = session()  # same JVM: the cached Column is reused
+df = frame(spark)
+assert builder(df) is cond
+counts.append(df.filter(builder(df)).count())
+spark.stop()
+
+SparkContext._gateway.shutdown()  # a relaunched JVM rebuilds
+SparkContext._gateway = SparkContext._jvm = None
+spark = session()
+df = frame(spark)
+assert builder(df) is not cond
+counts.append(df.filter(builder(df)).count())
+spark.stop()
+print("COUNTS", counts)
+"""
+
+
+def test_cached_builder_survives_session_restart(tmp_path):
+    """Stop the session and start a new one in the same process: the cached
+    predicate still selects the same rows; after a JVM relaunch the
+    builder runs again. A subprocess keeps the shared session fixture up."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = str(Path(__file__).resolve().parent.parent)
+    env = dict(os.environ, SPARK_LOCAL_DIRS=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT, root],
+        capture_output=True, text=True, timeout=600, env=env, cwd=tmp_path,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    # diaSourceId % 113 == 0 over 0..999: 0, 113, ..., 904
+    assert "COUNTS [9, 9, 9]" in out.stdout

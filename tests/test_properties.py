@@ -819,7 +819,8 @@ def _cc_graphs(draw):
     """(id type, pairs): a random multigraph over a small node pool —
     duplicate, reversed and self-loop pairs included — or a ladder of
     cliques chained end to end (a deep graph), with every node index mapped
-    to a distinct drawn id, so ids land in shuffled order."""
+    to a distinct drawn id, so ids land in shuffled order. Some graphs gain
+    a pair with a null endpoint, which both paths must drop."""
     typ = draw(st.sampled_from(sorted(_CC_IDS)))
     if draw(st.booleans()):
         size = draw(st.integers(min_value=2, max_value=4))
@@ -839,7 +840,12 @@ def _cc_graphs(draw):
             a, b = edges[0]
             edges += [(a, b), (b, a), (a, a)]
     ids = draw(st.lists(_CC_IDS[typ], min_size=n, max_size=n, unique=True))
-    return typ, [(ids[a], ids[b]) for a, b in edges]
+    pairs = [(ids[a], ids[b]) for a, b in edges]
+    if draw(st.booleans()):
+        x = draw(st.sampled_from(ids))
+        null_pair = draw(st.sampled_from([(None, x), (x, None), (None, None)]))
+        pairs.insert(draw(st.integers(min_value=0, max_value=len(pairs))), null_pair)
+    return typ, pairs
 
 
 @settings(max_examples=15, deadline=None,
@@ -848,14 +854,15 @@ def _cc_graphs(draw):
 @example(graph=("long", []))
 @example(graph=("int", [(-7, 2**31 - 1)]))
 @example(graph=("string", [("b", "a"), ("a", "b"), ("c", "c"), ("d", "b")]))
+@example(graph=("int", [(None, 5), (5, 6)]))
 @example(graph=("long", [(2**40 + i, 2**40 + j) for i, j in
                          [(5, 3), (3, 8), (8, 5), (8, 1), (1, 9), (9, 4), (4, 1)]]))
 def test_connected_components_paths_agree_property(spark, graph):
     """The driver union-find and the distributed star rounds
     (``driver_threshold=0``) return identical rows AND schema — both in the
     input's id type — and match a union-find written here, on int, long
-    and string ids, empty input, a single edge, self-loop-only nodes and
-    deep clique ladders."""
+    and string ids, empty input, a single edge, self-loop-only nodes, pairs
+    with a null endpoint (dropped) and deep clique ladders."""
     from fink_filters_spark.operators.dedup import connected_components
 
     typ, pairs = graph
@@ -868,6 +875,8 @@ def test_connected_components_paths_agree_property(spark, graph):
         return x
 
     for a, b in pairs:
+        if a is None or b is None:
+            continue
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = sorted((find(a), find(b)))
