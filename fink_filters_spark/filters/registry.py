@@ -23,6 +23,7 @@ import functools
 import threading
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from typing import TypeVar
 
 from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
@@ -41,24 +42,41 @@ class FilterInfo:
 
 _REGISTRY: dict[str, FilterInfo] = {}
 
+T = TypeVar("T")
+
+
+class PerJvm:
+    """Values built once per JVM gateway, by key; a relaunched JVM (a new
+    ``SparkContext._gateway``) starts empty. Under PySpark 4's call-site
+    capture every Column call is several Py4J round trips, while a built
+    Column is an unresolved expression, valid on any frame and in any
+    session of its JVM."""
+
+    def __init__(self) -> None:
+        self._gateway = None
+        self._values: dict = {}
+        self._lock = threading.Lock()  # foreachBatch sinks build on Py4J callback threads
+
+    def get(self, key, build: Callable[[], T]) -> T:
+        gw = SparkContext._gateway
+        with self._lock:
+            if self._gateway is not gw:
+                self._gateway, self._values = gw, {}
+            if key not in self._values:
+                self._values[key] = build()
+            return self._values[key]
+
 
 def once_per_jvm(fn: Callable[..., Column]) -> Callable[..., Column]:
     """Build ``fn``'s Column on the first call and return that same Column
     until the JVM gateway changes; later arguments are ignored, so ``fn``
-    must not read them. Under PySpark 4's call-site capture every Column
-    call is several Py4J round trips, so rebuilding a topic per use costs
-    about 150 of them; a built Column is an unresolved expression, valid
-    on any frame and in any session of its JVM."""
-    memo: list = []  # [(gateway, column)]
-    lock = threading.Lock()  # foreachBatch sinks build on Py4J callback threads
+    must not read them. Rebuilding a topic per use costs about 150 Py4J
+    round trips."""
+    memo = PerJvm()
 
     @functools.wraps(fn)
     def built(*args) -> Column:
-        gw = SparkContext._gateway
-        with lock:
-            if not memo or memo[0][0] is not gw:
-                memo[:] = [(gw, fn(*args))]
-            return memo[0][1]
+        return memo.get(None, lambda: fn(*args))
 
     return built
 
@@ -173,6 +191,13 @@ def _resolve_reference_path(name: str) -> FilterInfo | None:
         hbase_support=info.hbase_support,
         requires=info.requires,
     )
+
+
+def builds_once(name: str) -> bool:
+    """Whether ``get_filter(name).builder`` follows the builder contract:
+    a registered topic or its reference-path alias, not a dotted user
+    builder."""
+    return name in _REGISTRY or _resolve_reference_path(name) is not None
 
 
 def _resolve_dotted(name: str) -> FilterInfo | None:

@@ -10,8 +10,24 @@ On local[N] test runs the same settings keep plans identical to what a
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
+
+# Confs fixed when the SparkContext starts, applied by ``get_session`` and
+# by the test fixture; an externally provided session keeps its own.
+BUILDER_CONF = {
+    "spark.ui.enabled": "false",
+    # Python workers keep their pyspark.zip directory index across tasks
+    # (worker_daemon.py). The daemon imports this package, as the pickled
+    # kernels already require; CPython 3.13+ needs no patch.
+    "spark.python.daemon.module": (
+        "fink_filters_spark.worker_daemon" if sys.version_info < (3, 13) else "pyspark.daemon"
+    ),
+    # One night pass uses ~100 distinct generated classes; Spark's default
+    # LRU of 100 evicted each before the next pass, which recompiled it.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+}
 
 # Dynamic (session-settable) confs applied even when we are handed an
 # existing SparkSession (e.g. by the verification driver).
@@ -104,8 +120,7 @@ def get_session(app_name: str = "fink_filters_spark", cpus: int | None = None) -
         .master(master)
         .config("spark.sql.shuffle.partitions", str(max(2 * (cpus or 16), 32)))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
     )
-    for k, v in DYNAMIC_CONF.items():
+    for k, v in {**BUILDER_CONF, **DYNAMIC_CONF}.items():
         builder = builder.config(k, v)
     return apply_dynamic_conf(builder.getOrCreate())

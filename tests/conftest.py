@@ -12,7 +12,13 @@ import numpy as np
 import pandas as pd
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+_REPO = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, _REPO)
+# Python workers import the package when their daemon starts
+# (session.BUILDER_CONF), whatever directory pytest runs from.
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (_REPO, os.environ.get("PYTHONPATH", "")) if p
+)
 
 # Activate the vendored google.protobuf shim (no-op if real protobuf is
 # installed) BEFORE any SparkSession/JVM exists, so Python worker processes
@@ -32,7 +38,7 @@ SIMBAD_CHOICES = [
 
 @pytest.fixture(scope="session")
 def spark():
-    from fink_filters_spark.session import DYNAMIC_CONF
+    from fink_filters_spark.session import BUILDER_CONF, DYNAMIC_CONF
     from pyspark.sql import SparkSession
 
     # the tier-1 command sets SPARK_GRAFT_CPUS to the host's core count
@@ -42,10 +48,10 @@ def spark():
         .appName("fink_filters_spark-tests")
         .config("spark.driver.memory", "3g")
         .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
     )
-    for k, v in DYNAMIC_CONF.items():
+    # the same builder confs as session.get_session, so Python tasks run
+    # through the production worker daemon
+    for k, v in {**BUILDER_CONF, **DYNAMIC_CONF}.items():
         builder = builder.config(k, v)
     s = builder.getOrCreate()
     yield s

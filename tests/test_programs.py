@@ -525,6 +525,22 @@ def test_nightly_report_one_pass_matches_per_topic_filters(spark, ztf_df):
         assert got[t] == apply_named_filter(ztf_df, t).count()
 
 
+def test_nightly_report_builds_its_aggregates_once(ztf_df, monkeypatch):
+    """For registered topics the report's aggregate Columns are built once
+    per JVM and topic tuple: a repeat call builds no ``F.sum``."""
+    from pyspark.sql import functions as F
+
+    from fink_filters_spark.programs.nightly import nightly_report
+
+    topics = ["ztf.example", "ztf.rrlyr"]
+    first = nightly_report(ztf_df, topics)
+    built = []
+    stock = F.sum
+    monkeypatch.setattr(F, "sum", lambda c: built.append(c) or stock(c))
+    assert nightly_report(ztf_df, topics) == first
+    assert built == []
+
+
 def test_nightly_state_update_is_rerun_safe_and_merges(spark, tmp_path):
     """Two nights append two increments; re-running a night overwrites its
     increment (no double count); read_state folds both layouts."""
