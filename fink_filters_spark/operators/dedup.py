@@ -1216,7 +1216,7 @@ def _span_flags(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     # with STAGE metrics, not wall): round 10 replaced this shape with one
     # explicit repartition("__g") shared by both consumers, on the argument
     # that the Arrow gram kernel re-ran per branch and its core-seconds
-    # dominated. Re-measured on the final tree (tools/r11_substr_ab.py,
+    # dominated. Re-measured on the final tree (OPTIMIZATION_r11.md,
     # same session, interleaved, Spark-UI executorRunTime sums): the
     # partial-aggregate shape below wins BOTH metrics on BOTH consumers —
     # dedup_substring 56.2 vs 60.1 core-s (wall 3.28 vs 3.57 s),
@@ -2239,8 +2239,9 @@ def _dense_int_cosine_pairs(
     Exactness/parity with the posting branch (and the SQL oracle): the
     dot product is the same int64 sum in a different order; norms are the
     same Σ wgt² int64; the cosine is the same double expression
-    (cast-to-double dot / sqrt(double na) / sqrt(double nb) — correctly
-    rounded IEEE ops in the same order), the ``>= tau`` comparison is on
+    (cast-to-double dot / sqrt(norm of the smaller id) / sqrt(norm of the
+    larger id) — correctly rounded IEEE ops in the same order, chosen per
+    pair since block order is not id order), the ``>= tau`` comparison is on
     identical doubles, and rounding is left to the CALLER's ``F.round``
     so both branches share the one rounding expression. Zero-norm
     documents produce NaN cosines, excluded by the mask exactly as the
@@ -2320,19 +2321,21 @@ def _dense_int_cosine_pairs(
                     hi = lo + ta
                     for blo in range(0, len(b_ids), tb):
                         bhi = blo + tb
+                        lt = a_ids[lo:hi, None] < b_ids[None, blo:bhi]
+                        sa, sb = a_sq[lo:hi, None], b_sq[None, blo:bhi]
                         with _np.errstate(divide="ignore", invalid="ignore"):
                             cos = (
                                 (a_mat[lo:hi] @ b_mat[blo:bhi].T).astype(
                                     _np.float64
                                 )
-                                / a_sq[lo:hi, None]
-                                / b_sq[None, blo:bhi]
+                                / _np.where(lt, sa, sb)
+                                / _np.where(lt, sb, sa)
                             )
                         # NaN (zero-norm side) compares False — the same
                         # pairs the posting branch's na/nb > 0 guard drops
                         mask = cos >= tau
                         if ba == bb:
-                            mask &= a_ids[lo:hi, None] < b_ids[None, blo:bhi]
+                            mask &= lt
                         ii, jj = _np.nonzero(mask)
                         if len(ii) == 0:
                             continue

@@ -1,11 +1,11 @@
-"""Grouped model-fitting kernel via applyInPandas (SURVEY §2.L / F10).
+"""Grouped model-fitting kernels via mapInPandas (SURVEY §2.L / F10).
 
 The reference's heavy per-object science (Rainbow fit + Monte-Carlo + XGBoost
 scoring, ``ztf/filter_early_tde_candidates/filter.py:87-218``) runs as a
 DRIVER loop over collected candidates — the single worst scaling decision in
-the repo. The Spark dual: ``groupBy(objectId).applyInPandas(kernel)`` — the
-fit runs where the data lives, one Arrow batch per object group, model
-artifacts broadcast.
+the repo. The Spark dual: hash-repartition by objectId + ``mapInPandas`` — the
+fit runs where the data lives, every object group of a partition in one
+Python call, model artifacts broadcast.
 
 ``linfit_per_key`` is the concrete instance used by the correctness harness:
 closed-form least squares with EXACT int64 Σ-statistics (numpy integer sums
@@ -50,38 +50,10 @@ def _round6(x: float) -> float:
     return s * math.floor(ax * 1e6 + 0.5) / 1e6
 
 
-def _linfit_kernel(pdf, key: str = "user_id"):
-    import numpy as np
-    import pandas as pd
-
-    x = pdf["__x"].to_numpy(dtype=np.int64)
-    y = pdf["__y"].to_numpy(dtype=np.int64)
-    n = np.int64(len(x))
-    sx, sy = x.sum(), y.sum()
-    sxx, sxy, syy = (x * x).sum(), (x * y).sum(), (y * y).sum()
-    den_x = n * sxx - sx * sx
-    den_y = n * syy - sy * sy
-    cov = n * sxy - sx * sy
-    slope = float(cov) / float(den_x) if den_x != 0 else None
-    r2 = (
-        float(cov) * float(cov) / (float(den_x) * float(den_y))
-        if den_x != 0 and den_y != 0
-        else None
-    )
-    return pd.DataFrame(
-        {
-            key: [pdf[key].iloc[0]],
-            "n": [int(n)],
-            "slope": [None if slope is None else _round6(slope)],
-            "r2": [None if r2 is None else _round6(r2)],
-        }
-    )
-
-
 def _linfit_kernel_many(batches, key: str, x_col: str, y_col: str):
     """Vectorized multi-group kernel: Σ-statistics for EVERY key in the
-    partition via pandas groupby (C-speed), same exact int64 math and
-    half-away rounding as the per-group kernel.
+    partition via pandas groupby (C-speed), exact int64 math and the
+    half-away rounding of ``_round6``.
 
     Arrow feeds a partition as MULTIPLE batches (maxRecordsPerBatch,
     default 10k), and a key's rows can span batch boundaries — so partial
@@ -120,9 +92,8 @@ def _linfit_kernel_many(batches, key: str, x_col: str, y_col: str):
     cov = n * s["sxy"].to_numpy(np.int64) - sx * sy
 
     def _r6(v):
-        # identity above 2^53/1e6 — same cutoff as _round6, so the
-        # vectorized and per-group paths stay bit-identical on diverged
-        # (huge-slope) fits where *1e6 has no 6-decimal resolution
+        # identity above 2^53/1e6 — same cutoff as _round6: diverged
+        # (huge-slope) fits have no 6-decimal resolution under *1e6
         out = np.sign(v) * np.floor(np.abs(v) * 1e6 + 0.5) / 1e6
         return np.where(np.abs(v) >= 9007199254740992e-6, v, out)
 
@@ -155,34 +126,23 @@ def linfit_per_key(
     key: str = "user_id",
     x_col: str = "xh",
     y_col: str = "v",
-    per_group: bool = False,
 ) -> DataFrame:
     """Per-key closed-form least squares as a grouped pandas kernel.
 
-    Default path: hash-repartition by key + ``mapInPandas`` — ONE Python
-    call per partition, all groups in it reduced by a vectorized pandas
-    groupby. With many small groups this is ~10x the per-group
-    ``applyInPandas`` path (kept under ``per_group=True``: one Arrow batch
-    and one Python call per key — right when groups are few and heavy,
-    e.g. a scipy/XGBoost fit per object). Both paths: identical exact
-    int64 Σ-statistics, bit-identical output.
+    Hash-repartition by key + ``mapInPandas`` — ONE Python call per
+    partition, all groups in it reduced by a vectorized pandas groupby
+    over exact int64 Σ-statistics.
     """
     from pyspark.sql.types import StructField, StructType
 
-    # normalize to internal column names so BOTH kernels are honest about
-    # the key/x/y parameters (they were hardcoded to user_id/xh/v, which
-    # silently ignored non-default names and KeyError'd in the executor —
-    # round-7 review finding); the output key keeps the caller's name/type
+    # internal column names keep the kernel independent of the caller's
+    # x/y names; the output key keeps the caller's name/type
     cols = df.select(
         F.col(key), F.col(x_col).alias("__x"), F.col(y_col).alias("__y")
     )
     schema = StructType(
         [StructField(key, df.schema[key].dataType)] + list(LINFIT_SCHEMA)[1:]
     )
-    if per_group:
-        return cols.groupBy(key).applyInPandas(
-            lambda pdf: _linfit_kernel(pdf, key), schema
-        )
     par = df.sparkSession.sparkContext.defaultParallelism
     return cols.repartition(par, key).mapInPandas(
         lambda it: _linfit_kernel_many(it, key, "__x", "__y"), schema
@@ -472,19 +432,17 @@ def grouped_arrays_map(
     fn_one,
     out_cols: list[str],
     schema,
-    per_group: bool = False,
 ) -> DataFrame:
     """Per-key kernel runner for heavy-group numeric kernels.
 
     ``fn_one(uid, *arrays) -> tuple`` produces one output row per key from
-    that key's column arrays. Default path: hash-repartition by key +
-    ``mapInPandas``, groups split out with one numpy argsort per Arrow
-    batch and accumulated ACROSS batches (a partition arrives as multiple
-    ~10k-row batches and a key's rows span them — reducing per batch would
+    that key's column arrays. Hash-repartition by key + ``mapInPandas``,
+    groups split out with one numpy argsort per Arrow batch and
+    accumulated ACROSS batches (a partition arrives as multiple ~10k-row
+    batches and a key's rows span them — reducing per batch would
     duplicate keys), then one Python loop per task. This avoids
     ``applyInPandas``'s per-group call + frame overhead, which dominates
-    when groups are small and many. ``per_group=True`` keeps the
-    one-Arrow-batch-per-key path for few/heavy groups.
+    when groups are small and many.
 
     Each group's arrays are put in CANONICAL (lexicographic) order before
     ``fn_one`` sees them: rows arrive in shuffle order, which varies with
@@ -500,13 +458,6 @@ def grouped_arrays_map(
         # lexsort's LAST key is primary: reverse so value_cols[0] leads
         order = np.lexsort(tuple(reversed(arrays)))
         return [a[order] for a in arrays]
-
-    def kernel(pdf):
-        import pandas as pd
-
-        uid = int(pdf[key].iloc[0])
-        row = fn_one(uid, *_canon([pdf[c].to_numpy() for c in value_cols]))
-        return pd.DataFrame([row], columns=out_cols)
 
     def kernel_many(batches):
         import numpy as np
@@ -542,8 +493,6 @@ def grouped_arrays_map(
         yield pd.DataFrame(rows, columns=out_cols)
 
     cols = df.select(key, *value_cols)
-    if per_group:
-        return cols.groupBy(key).applyInPandas(kernel, schema)
     par = df.sparkSession.sparkContext.defaultParallelism
     return cols.repartition(par, key).mapInPandas(kernel_many, schema)
 
@@ -572,7 +521,6 @@ def rainbow_multiband_fit_per_key(
     y_col: str = "v",
     band_col: str = "band",
     rebase_div: int | None = None,
-    per_group: bool = False,
 ) -> DataFrame:
     """Per-key JOINT multiband Rainbow fit: one rising-sigmoid bolometric
     shape shared across bands, scaled per band by a constant-temperature
@@ -607,7 +555,7 @@ def rainbow_multiband_fit_per_key(
 
     return grouped_arrays_map(
         df, key, [t_col, y_col, band_col], one, _MULTIBAND_COLS,
-        MULTIBAND_FIT_SCHEMA, per_group=per_group,
+        MULTIBAND_FIT_SCHEMA,
     )
 
 
@@ -627,7 +575,6 @@ def rainbow_mc_score_per_key(
     min_snr_rise_time: float = 1.5,
     min_frac: float = 0.1,
     rebase_div: int | None = None,
-    per_group: bool = False,
     band_col: str | None = None,
     band_wave_aa: dict | None = None,
     feature_names: tuple = ("amplitude", "rise_time"),
@@ -656,8 +603,7 @@ def rainbow_mc_score_per_key(
     ``("e_reference_time", "rise_time", "temperature")`` with the real
     broad model for the reference's exact feature set.
 
-    ``rebase_div``/``per_group``: see ``sigmoid_fit_per_key`` /
-    ``grouped_arrays_map``.
+    ``rebase_div``: see ``sigmoid_fit_per_key``.
     """
     bc = df.sparkSession.sparkContext.broadcast(model)
     multiband = band_col is not None and band_wave_aa is not None
@@ -751,7 +697,6 @@ def rainbow_mc_score_per_key(
     value_cols = [t_col, y_col] + ([band_col] if multiband else [])
     return grouped_arrays_map(
         df, key, value_cols, one, _RAINBOW_MC_COLS, RAINBOW_MC_SCHEMA,
-        per_group=per_group,
     )
 
 
@@ -811,7 +756,6 @@ def sigmoid_fit_per_key(
     t_col: str = "xh",
     y_col: str = "v",
     rebase_div: int | None = None,
-    per_group: bool = False,
 ) -> DataFrame:
     """Per-key rising-sigmoid fit (the heavy-group counterpart of
     ``linfit_per_key``: one LM fit per key, where the reference loops on
@@ -820,13 +764,9 @@ def sigmoid_fit_per_key(
     snr_rise_time mirrors the reference's ``snr_rise_time < 1.5`` quality
     cut input.
 
-    Default path: hash-repartition by key + ``mapInPandas`` — groups are
-    split out with one numpy argsort per Arrow batch and accumulated
-    ACROSS batches (a partition arrives as multiple ~10k-row batches and
-    a key's rows can span them), then fitted in one Python loop per task.
-    With many small groups this avoids ``applyInPandas``'s per-group
-    call + frame overhead (~3x here); ``per_group=True`` keeps the one-
-    Arrow-batch-per-key path for few/heavy groups.
+    Runs on ``grouped_arrays_map``: hash-repartition by key +
+    ``mapInPandas``, every group of a partition fitted in one Python loop
+    per task.
 
     ``rebase_div``: when set, the kernel rebases the time axis to
     ``(t - min(t)) // rebase_div`` per group — the per-key epoch shift
@@ -839,5 +779,4 @@ def sigmoid_fit_per_key(
         lambda uid, t, y: _sigmoid_fit_one(uid, t, y, rebase_div),
         _SIGMOID_COLS,
         SIGMOID_FIT_SCHEMA,
-        per_group=per_group,
     )

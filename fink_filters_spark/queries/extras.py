@@ -1,6 +1,6 @@
 """Additional engine-surface queries: rollup/grouping sets (§2.E note), set
 operations (§2.H), per-row event-time window slice (F7), grouped
-applyInPandas fit (§2.L/F10), BPE-ish token counting.
+mapInPandas fit (§2.L/F10), BPE-ish token counting.
 """
 
 from __future__ import annotations
@@ -152,7 +152,7 @@ GROUP BY e.user_id
 
 def q_ts_fit_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.L/F10: the same closed-form fit as ts_linfit but through the
-    grouped applyInPandas kernel (operators/fit.py) — the distributed
+    grouped mapInPandas kernel (operators/fit.py) — the distributed
     replacement for the reference's driver-side fit loops. Exact int64 sums
     keep it bit-identical to the native path and the oracle."""
     from ..operators.fit import linfit_per_key
@@ -825,7 +825,7 @@ SPECS = [
     QuerySpec("q_rollup", q_rollup, ROLLUP_SQL, "ROLLUP subtotals (§2.E)"),
     QuerySpec("q_setops", q_setops, SETOPS_SQL, "INTERSECT/UNION/EXCEPT (§2.H)"),
     QuerySpec("ts_window_slice", q_ts_window_slice, TS_WINDOW_SQL, "F7 per-row windows"),
-    QuerySpec("ts_fit_grouped", q_ts_fit_grouped, TS_LINFIT_SQL, "F10 applyInPandas fit"),
+    QuerySpec("ts_fit_grouped", q_ts_fit_grouped, TS_LINFIT_SQL, "F10 grouped mapInPandas fit"),
     QuerySpec("ts_sigmoid_fit", q_ts_sigmoid_fit, _golden_oracle("ts_sigmoid_fit"),
               "F10 nonlinear Rainbow-shape sigmoid fit (LM, pinned golden)"),
     QuerySpec("ts_tde_score", q_ts_tde_score, _golden_oracle("ts_tde_score"),

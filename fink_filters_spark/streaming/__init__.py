@@ -160,45 +160,6 @@ def _object_stats_out(df: DataFrame, key_col: str) -> str:
     )
 
 
-def _accumulate_band_stats(stats: dict, pdfs, band_col: str, flux_col: str) -> None:
-    """Shared per-band running-stats kernel for BOTH stateful operators
-    (applyInPandasWithState and transformWithStateInPandas) — one
-    definition so a semantics fix cannot drift between them.
-
-    NULL handling matches the batch dual (groupBy mean/min/max ignores
-    NULLs): Arrow hands a nullable float64 column to pandas with NULL as
-    NaN, so the guard is pd.isna, NOT ``is None`` — an ``is None`` check
-    is dead for NaN and would overcount n_sources and poison the running
-    sum/min/max with NaN forever (round-7 review finding)."""
-    import pandas as pd
-
-    for pdf in pdfs:
-        for band, flux in zip(pdf[band_col], pdf[flux_col]):
-            if pd.isna(flux) or pd.isna(band):
-                continue
-            f = float(flux)
-            cur = stats.setdefault(band, [0, 0.0, f, f])
-            cur[0] += 1
-            cur[1] += f
-            cur[2] = min(cur[2], f)
-            cur[3] = max(cur[3], f)
-
-
-def _emit_band_stats(key_col: str, key_val, items) -> "object":
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            key_col: [key_val] * len(items),
-            "band": [b for b, _ in items],
-            "n_sources": [v[0] for _, v in items],
-            "flux_mean": [v[1] / v[0] for _, v in items],
-            "flux_min": [v[2] for _, v in items],
-            "flux_max": [v[3] for _, v in items],
-        }
-    )
-
-
 def streaming_object_stats(
     df: DataFrame,
     key_col: str = "objectId",
@@ -224,6 +185,8 @@ def streaming_object_stats(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def update(key, pdfs, state: GroupState):
+        import pandas as pd
+
         stats: dict[str, list] = {}
         if state.exists:
             bands, ns, sums, mins, maxs = state.get
@@ -231,7 +194,18 @@ def streaming_object_stats(
                 b: [n, s, lo, hi]
                 for b, n, s, lo, hi in zip(bands, ns, sums, mins, maxs)
             }
-        _accumulate_band_stats(stats, pdfs, band_col, flux_col)
+        for pdf in pdfs:
+            for band, flux in zip(pdf[band_col], pdf[flux_col]):
+                # Arrow hands NULL flux to pandas as NaN, so pd.isna (not
+                # ``is None``) keeps NULLs out, as the batch dual's mean/min/max do
+                if pd.isna(flux) or pd.isna(band):
+                    continue
+                f = float(flux)
+                cur = stats.setdefault(band, [0, 0.0, f, f])
+                cur[0] += 1
+                cur[1] += f
+                cur[2] = min(cur[2], f)
+                cur[3] = max(cur[3], f)
         items = sorted(stats.items())
         state.update((
             [b for b, _ in items],
@@ -240,7 +214,16 @@ def streaming_object_stats(
             [v[2] for _, v in items],
             [v[3] for _, v in items],
         ))
-        yield _emit_band_stats(key_col, key[0], items)
+        yield pd.DataFrame(
+            {
+                key_col: [key[0]] * len(items),
+                "band": [b for b, _ in items],
+                "n_sources": [v[0] for _, v in items],
+                "flux_mean": [v[1] / v[0] for _, v in items],
+                "flux_min": [v[2] for _, v in items],
+                "flux_max": [v[3] for _, v in items],
+            }
+        )
 
     return df.groupBy(key_col).applyInPandasWithState(
         update,
@@ -326,61 +309,6 @@ def streaming_funnel(
         stateStructType=FUNNEL_STATE,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_object_stats_tws(
-    df: DataFrame,
-    key_col: str = "objectId",
-    band_col: str = "band",
-    flux_col: str = "psfFlux",
-) -> DataFrame:
-    """streaming_object_stats on Spark 4's transformWithStateInPandas —
-    the typed-state successor of applyInPandasWithState (value/list/map
-    state handles, timers, TTL). Same semantics and output schema; state
-    is one ValueState holding the per-band running (n, sum, min, max).
-
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``) — set by the caller
-    or the session; RocksDB is also the right store at scale (state larger
-    than executor heap, incremental checkpointing).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _ObjectStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._stats = handle.getValueState("stats", OBJECT_STATS_STATE)
-
-        def handleInputRows(self, key, rows, timer_values):
-            stats: dict[str, list] = {}
-            if self._stats.exists():
-                bands, ns, sums, mins, maxs = self._stats.get()
-                stats = {
-                    b: [n, s, lo, hi]
-                    for b, n, s, lo, hi in zip(bands, ns, sums, mins, maxs)
-                }
-            _accumulate_band_stats(stats, rows, band_col, flux_col)
-            items = sorted(stats.items())
-            self._stats.update((
-                [b for b, _ in items],
-                [v[0] for _, v in items],
-                [v[1] for _, v in items],
-                [v[2] for _, v in items],
-                [v[3] for _, v in items],
-            ))
-            yield _emit_band_stats(key_col, key[0], items)
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_ObjectStats(),
-        outputStructType=_object_stats_out(df, key_col),
-        outputMode="Update",
-        timeMode="None",
     )
 
 

@@ -20,13 +20,6 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
     p for p in (_REPO, os.environ.get("PYTHONPATH", "")) if p
 )
 
-# Activate the vendored google.protobuf shim (no-op if real protobuf is
-# installed) BEFORE any SparkSession/JVM exists, so Python worker processes
-# inherit the PYTHONPATH and the transformWithState client can import it.
-from fink_filters_spark.vendor import ensure_protobuf  # noqa: E402
-
-ensure_protobuf()
-
 N_ALERTS = 200
 RNG_SEED = 7
 

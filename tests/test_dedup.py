@@ -817,6 +817,32 @@ def test_sparse_cosine_dense_gate_matches_posting_path(spark):
     assert any((a, b) == (1, 3) for a, b, _ in at_zero)
 
 
+def test_dense_cosine_divides_by_smaller_id_norm_first(spark):
+    """The dense block-matmul cosine divides in the posting join's order:
+    by the smaller id's norm first. Ids 15 and 16 over 16 blocks land in
+    blocks 15 and 0, so block order is the reverse of id order; for these
+    two vectors the two division orders differ by one ulp, and tau sits
+    exactly on the posting-order value."""
+    import math
+
+    from fink_filters_spark.operators.dedup import _dense_int_cosine_pairs
+
+    v15, v16 = [16, 19, 8], [14, 19, 13]
+    dot = sum(a * b for a, b in zip(v15, v16))
+    s15 = math.sqrt(sum(a * a for a in v15))
+    s16 = math.sqrt(sum(b * b for b in v16))
+    tau = dot / s15 / s16  # the posting join's expression (id_a < id_b)
+    assert dot / s16 / s15 < tau  # the block-order quotient is one ulp low
+
+    wt = spark.createDataFrame(
+        [(15, w, x) for w, x in enumerate(v15)]
+        + [(16, w, x) for w, x in enumerate(v16)],
+        "__id long, __w long, __wgt long",
+    )
+    got = [tuple(r) for r in _dense_int_cosine_pairs(wt, [0, 1, 2], tau).collect()]
+    assert got == [(15, 16, tau)]
+
+
 def test_sparse_cosine_df_pruning_and_reordering_robustness(spark):
     """max_df_frac drops ubiquitous terms from the vectors (changing
     cosines exactly as recomputing without those terms would), and word

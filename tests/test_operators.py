@@ -473,10 +473,10 @@ def test_latest_same_band(spark):
     assert out[1]["m"] is None  # band never seen before
 
 
-def test_linfit_fast_and_per_group_paths_agree(spark):
-    """The vectorized mapInPandas path and the per-group applyInPandas path
-    produce identical rows, including NULLs for degenerate fits (single
-    point, zero x-variance, zero y-variance)."""
+def test_linfit_per_key_exact_and_degenerate_fits(spark):
+    """Every key gets one row: an exact line fits exactly, and degenerate
+    fits (single point, zero x-variance, zero y-variance) surface as
+    NULLs, not NaN."""
     import pandas as pd
 
     from fink_filters_spark.operators.fit import linfit_per_key
@@ -489,12 +489,13 @@ def test_linfit_fast_and_per_group_paths_agree(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    fast = {r.user_id: (r.n, r.slope, r.r2) for r in linfit_per_key(df).collect()}
-    slow = {r.user_id: (r.n, r.slope, r.r2)
-            for r in linfit_per_key(df, per_group=True).collect()}
-    assert fast == slow
-    assert fast[2] == (2, None, None)   # zero x-variance -> NULL fit
-    assert fast[4] == (4, 0.0, None)    # zero y-variance -> NULL r2
+    got = {r.user_id: (r.n, r.slope, r.r2) for r in linfit_per_key(df).collect()}
+    assert got == {
+        1: (3, 10.0, 1.0),      # exact line
+        2: (2, None, None),     # zero x-variance -> NULL fit
+        3: (1, None, None),     # single point -> NULL fit
+        4: (4, 0.0, None),      # zero y-variance -> NULL r2
+    }
 
 
 def test_similarity_lsh_search_subset_of_exact_ranking(spark):
@@ -897,8 +898,14 @@ def test_partition_kernels_survive_arrow_batch_splits(spark):
     repartition+mapInPandas fast paths of linfit_per_key and
     sigmoid_fit_per_key must merge partial groups across batches — a
     per-batch reduction would emit duplicate keys with partial stats the
-    moment a partition outgrows one batch."""
-    from fink_filters_spark.operators.fit import linfit_per_key, sigmoid_fit_per_key
+    moment a partition outgrows one batch. Both are checked against a
+    driver-side reference computed per key with a pandas groupby."""
+    from fink_filters_spark.operators.fit import (
+        _round6,
+        _sigmoid_fit_one,
+        linfit_per_key,
+        sigmoid_fit_per_key,
+    )
 
     conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     before = spark.conf.get(conf_key)
@@ -914,22 +921,43 @@ def test_partition_kernels_survive_arrow_batch_splits(spark):
         pdf = pdf.sample(frac=1.0, random_state=7).reset_index(drop=True)
         df = spark.createDataFrame(pdf).repartition(2)
 
-        fast = linfit_per_key(df).toPandas().sort_values("user_id")
-        slow = linfit_per_key(df, per_group=True).toPandas().sort_values("user_id")
-        assert len(fast) == n_keys  # no duplicate keys
+        lin_rows, sig_rows = [], []
+        for k, g in pdf.groupby("user_id"):
+            # exact integer Σ-statistics, as the kernel's int64 sums
+            xs = [int(v) for v in g["xh"]]
+            ys = [int(v) for v in g["v"]]
+            n = len(xs)
+            sx, sy = sum(xs), sum(ys)
+            den_x = n * sum(a * a for a in xs) - sx * sx
+            den_y = n * sum(b * b for b in ys) - sy * sy
+            cov = n * sum(a * b for a, b in zip(xs, ys)) - sx * sy
+            lin_rows.append((
+                int(k), n, _round6(float(cov) / float(den_x)),
+                _round6(float(cov) * float(cov) / (float(den_x) * float(den_y))),
+            ))
+            # the kernel sees each key's arrays in canonical (t, y) order
+            t, yv = g["xh"].to_numpy(), g["v"].to_numpy()
+            order = np.lexsort((yv, t))
+            sig_rows.append(_sigmoid_fit_one(int(k), t[order], yv[order], None))
+
+        lin = linfit_per_key(df).toPandas().sort_values("user_id")
+        assert len(lin) == n_keys  # no duplicate keys
         pd.testing.assert_frame_equal(
-            fast.reset_index(drop=True), slow.reset_index(drop=True)
+            lin.reset_index(drop=True),
+            pd.DataFrame(lin_rows, columns=["user_id", "n", "slope", "r2"]),
+            check_dtype=False,
+            check_exact=True,
         )
 
-        sig_fast = sigmoid_fit_per_key(df).toPandas().sort_values("user_id")
-        sig_slow = (
-            sigmoid_fit_per_key(df, per_group=True).toPandas().sort_values("user_id")
-        )
-        assert len(sig_fast) == n_keys
+        sig = sigmoid_fit_per_key(df).toPandas().sort_values("user_id")
+        assert len(sig) == n_keys
         pd.testing.assert_frame_equal(
-            sig_fast.reset_index(drop=True),
-            sig_slow.reset_index(drop=True),
+            sig.reset_index(drop=True),
+            pd.DataFrame(sig_rows, columns=list(sig.columns)).astype(
+                {c: "float64" for c in sig.columns[2:]}
+            ),
             check_dtype=False,
+            check_exact=True,
         )
     finally:
         spark.conf.set(conf_key, before)

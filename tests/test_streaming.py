@@ -111,10 +111,20 @@ def test_streaming_dedup_bounded_state(spark, tmp_path):
     assert keys == [1, 2, 3]
 
 
-def test_streaming_object_stats_matches_batch(spark, tmp_path):
+@pytest.mark.parametrize(
+    "provider",
+    [
+        None,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    ],
+    ids=["default", "rocksdb"],
+)
+def test_streaming_object_stats_matches_batch(spark, tmp_path, provider):
     """Stateful per-object stats accumulate across micro-batches: after both
     batches, the last emitted row per (object, band) equals the batch
-    groupBy aggregate — the diaObject contract (rubin/utils.py:49-86)."""
+    groupBy aggregate — the diaObject contract (rubin/utils.py:49-86).
+    The state store is a session setting under the same operator, so the
+    default (HDFS-backed) and RocksDB providers must give the same rows."""
     import pandas as pd
 
     from fink_filters_spark.streaming import streaming_object_stats
@@ -134,16 +144,26 @@ def test_streaming_object_stats_matches_batch(spark, tmp_path):
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(str(d))
     )
+    prov_key = "spark.sql.streaming.stateStore.providerClass"
+    saved = spark.conf.get(prov_key, None)
+    if provider is not None:
+        spark.conf.set(prov_key, provider)
     out: list = []
-    q = (
-        streaming_object_stats(stream)
-        .writeStream.outputMode("update")
-        .foreachBatch(lambda df, _id: out.extend(df.collect()))
-        .option("checkpointLocation", str(tmp_path / "ck_stats"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    try:
+        q = (
+            streaming_object_stats(stream)
+            .writeStream.outputMode("update")
+            .foreachBatch(lambda df, _id: out.extend(df.collect()))
+            .option("checkpointLocation", str(tmp_path / "ck_stats"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+    finally:
+        if saved is not None:
+            spark.conf.set(prov_key, saved)
+        else:
+            spark.conf.unset(prov_key)
 
     final = {}
     for r in out:  # later batches overwrite: last emit per key wins
@@ -494,66 +514,6 @@ def test_write_zordered_compact_on_both_dims(spark, tmp_path):
     assert sum(zx) / len(zx) <= 0.5 and sum(zy) / len(zy) <= 0.5
     # ...while 1-D clustering leaves y spanning essentially the full domain
     assert sum(ry) / len(ry) > 0.9
-
-
-def test_streaming_object_stats_tws_matches_batch(spark, tmp_path):
-    """transformWithStateInPandas variant (Spark 4 typed state + RocksDB
-    store): same cross-batch accumulation contract as the
-    applyInPandasWithState path."""
-    # protobuf is satisfied by the vendored shim (fink_filters_spark/vendor),
-    # activated in conftest before the JVM started; nothing to skip.
-    import google.protobuf.descriptor  # noqa: F401
-    import pandas as pd
-
-    from fink_filters_spark.streaming import streaming_object_stats_tws
-
-    d = tmp_path / "src_tws"
-    d.mkdir()
-    pdf = pd.DataFrame(
-        {
-            "objectId": ["o1", "o1", "o2", "o1", "o2", "o2"],
-            "band": ["g", "r", "g", "g", "g", "r"],
-            "psfFlux": [100.0, 200.0, 50.0, 300.0, 70.0, 10.0],
-        }
-    )
-    pdf.iloc[:3].to_parquet(d / "b0.parquet")
-    pdf.iloc[3:].to_parquet(d / "b1.parquet")
-    schema = spark.read.parquet(str(d)).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(str(d))
-    )
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    out: list = []
-    try:
-        q = (
-            streaming_object_stats_tws(stream)
-            .writeStream.outputMode("update")
-            .foreachBatch(lambda df, _id: out.extend(df.collect()))
-            .option("checkpointLocation", str(tmp_path / "ck_tws"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        if saved is not None:
-            spark.conf.set(prov_key, saved)
-        else:
-            spark.conf.unset(prov_key)
-
-    final = {}
-    for r in out:
-        final[(r.objectId, r.band)] = (r.n_sources, r.flux_mean, r.flux_min, r.flux_max)
-    assert final == {
-        ("o1", "g"): (2, 200.0, 100.0, 300.0),
-        ("o1", "r"): (1, 200.0, 200.0, 200.0),
-        ("o2", "g"): (2, 60.0, 50.0, 70.0),
-        ("o2", "r"): (1, 10.0, 10.0, 10.0),
-    }
 
 
 def test_streaming_dedup_state_survives_restart(spark, tmp_path):
