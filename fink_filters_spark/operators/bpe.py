@@ -122,7 +122,7 @@ def bpe_token_stats(
     class (Java's ``\\s`` is ASCII-only, Python's ``str.split`` is not —
     a NBSP-joined pair would otherwise be one trained word but two
     applied words) and lowercases with ``str.lower`` (locale-free; agrees
-    with the JVM on ASCII, the engine-wide caveat of ``_shingle_flat``
+    with the JVM on ASCII, the engine-wide caveat of ``grams``
     applies to exotic casings). Integer and string id columns keep their
     input type; other id types are rejected up front (the kernel builds
     the id Series with a fixed dtype)."""
@@ -169,7 +169,7 @@ def bpe_token_stats(
                  "n_tokens": _np.asarray(n_tokens, dtype="int64")}
             )
 
-    from .dedup import _spread
+    from .grams import _spread
 
     src = _spread(df).select(
         F.col(id_col).alias("__id"), F.col(text_col).alias("__t")

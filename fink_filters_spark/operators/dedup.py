@@ -1,12 +1,15 @@
 """Deduplication operators for large-scale training-data pipelines.
 
 Five families. Set math (joins, aggregations, band generation) is native
-Catalyst; the one Python stage is the Arrow-vectorized shingle-hash kernel
-(``_hashed_shingled``) — per-character polynomial hashing is exactly the
+Catalyst; the Python stages are the Arrow-vectorized gram kernels of
+``operators/grams.py`` — per-character polynomial hashing is exactly the
 workload where interpreted HOF lambdas lose to a NumPy batch kernel
-(pyspark guide: "Pandas UDFs beat row-at-a-time by 10-100x"); a pure-
-Catalyst fallback (``_hashed_shingled_native``) keeps the no-Python path
-available and bit-identical.
+(pyspark guide: "Pandas UDFs beat row-at-a-time by 10-100x"); pure-
+Catalyst references (``_hashed_shingled_native``,
+``winnowing_fingerprints_native``, ``simhash_agg``) keep the no-Python
+path available and bit-identical. Every text operator here accepts any
+id type; only ``sparse_cosine_pairs`` and ``embedding_pairs`` need
+integer ids.
 
 - exact        — normalize + hash-groupBy; one shuffle on the text hash.
 - n-gram Jaccard — exact set similarity over word n-gram shingles via an
@@ -30,10 +33,13 @@ available and bit-identical.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import IntegralType
 
-from ..functions.text import FP_MOD, shingle_hash
+from ..functions.text import FP_MOD
 from ..functions.vectors import quantize_vec
+from .grams import _map_text, _ngrams, _positional_grams, _segments, _shingle_flat, _spread
 
 #: Default boilerplate gate for the exact-pair operators: shingles whose
 #: document frequency exceeds this fraction of all SHINGLED documents are
@@ -96,15 +102,6 @@ def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     ).drop("__norm").select("survivor_id", "n_dups")
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition to the cluster's parallelism before CPU-heavy per-row
-    stages. Document corpora often arrive as few large files; inheriting
-    file-partitioning would run the expensive shingle/hash expressions on a
-    handful of cores regardless of cluster size."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(par)
-
-
 def _hashed_shingled_native(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """Pure-Catalyst variant of ``_hashed_shingled`` (HOF char-folds).
 
@@ -127,6 +124,19 @@ def _hashed_shingled_native(df: DataFrame, id_col: str, text_col: str, n: int) -
     )
 
 
+def _set_columns(flat, with_key: bool) -> dict:
+    """The per-document ``(__id, __sh[, __k])`` columns of one
+    ``_shingle_flat`` batch."""
+    import hashlib
+
+    ids, dd, ss, starts, ends = flat
+    sets = [ss[s:e] for s, e in zip(starts, ends)]
+    out = {"__id": ids[dd[starts]], "__sh": sets}
+    if with_key:
+        out["__k"] = [hashlib.sha256(sh.tobytes()).digest() for sh in sets]
+    return out
+
+
 def _hashed_shingled(
     df: DataFrame, id_col: str, text_col: str, n: int, with_key: bool = False
 ) -> DataFrame:
@@ -138,140 +148,23 @@ def _hashed_shingled(
     shuffles and compares 32-byte keys instead of full arrays. Using a
     collision-resistant hash keeps the collapse EXACT in practice even
     against adversarially constructed corpora (a collision would merge two
-    distinct sets into one duplicate group — the property the pre-collapse
-    array-key grouping guaranteed structurally).
+    distinct sets into one duplicate group).
 
-    Arrow-vectorized kernel (mapInPandas): per batch, tokenize, hash each
-    DISTINCT word once (vocab ≪ token count), combine n-grams and dedupe
-    with flat NumPy int64 ops. Produces bit-identical integers to the
-    native expression path (``functions.text.word_hashes`` +
-    ``combine_word_hashes``) and the DuckDB oracle: the polynomial fold
-    ``h = (h*31 + ord(c)) % P`` and combine ``((a*37+b) % P * 37 + c) % P``
-    never exceed 2^63. Downstream set math (Jaccard, MinHash, SimHash) runs
-    on longs — narrower shuffles, cheaper equality; hash collisions
-    (P ~ 6.7e10) are part of the operator's defined semantics.
-
-    Tokenization matches ``split(lower(trim(text)), '\\s+')`` for ASCII
-    whitespace (Java's ``\\s`` is ASCII-only; non-ASCII-whitespace corpora
-    should use ``_hashed_shingled_native``).
+    Arrow-vectorized kernel over ``grams._shingle_flat``: per batch,
+    tokenize, hash each DISTINCT word once (vocab ≪ token count), combine
+    n-grams and dedupe with flat NumPy int64 ops — bit-identical integers
+    to the native path (``_hashed_shingled_native``) and the DuckDB
+    oracle. Downstream set math (Jaccard, MinHash, SimHash) runs on longs
+    — narrower shuffles, cheaper equality; hash collisions (P ~ 6.7e10)
+    are part of the operator's defined semantics.
     """
-    from collections.abc import Iterator
 
-    def kernel(batches: Iterator) -> Iterator:
-        import hashlib
+    def body(pdf):
+        flat = _shingle_flat(pdf, n)
+        return None if flat is None else _set_columns(flat, with_key)
 
-        import pandas as _pd
-
-        for pdf in batches:
-            flat = _shingle_flat(pdf, n)
-            if flat is None:
-                out = {"__id": _pd.Series([], dtype="int64"),
-                       "__sh": _pd.Series([], dtype="object")}
-                if with_key:
-                    out["__k"] = _pd.Series([], dtype="object")
-                yield _pd.DataFrame(out)
-                continue
-            ids, dd, ss, bounds, ends = flat
-            out = {"__id": [ids[dd[s]] for s in bounds],
-                   "__sh": [ss[s:e] for s, e in zip(bounds, ends)]}
-            if with_key:
-                out["__k"] = [hashlib.sha256(ss[s:e].tobytes()).digest()
-                              for s, e in zip(bounds, ends)]
-            yield _pd.DataFrame(out)
-
-    src = _spread(df).select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
-    schema = "__id long, __sh array<long>" + (", __k binary" if with_key else "")
-    return src.mapInPandas(kernel, schema)
-
-
-def _flat_word_hashes(pdf, n: int):
-    """Tokenize one Arrow batch and hash every token, flat: returns
-    ``(ids, d, wh)`` — per-row ids, token->row index, token hash — or
-    None if no row has >= ``n`` tokens. Bit-identical to the native
-    ``word_hashes`` expression: rows tokenize as
-    ``split(lower(trim(text)), '\\s+')`` and hash with the
-    ``h = (h*31 + ord(c)) % P`` char fold."""
-    import re
-
-    import numpy as _np
-    import pandas as _pd
-
-    from ..functions.text import FP_MOD as P
-
-    ws_re = re.compile(r"\s+")
-    all_words: list[str] = []
-    doc_idx: list[int] = []
-    ids = pdf["__id"].to_numpy()
-    for i, t in enumerate(pdf["__t"]):
-        # NULL text: the native expressions propagate NULL through
-        # trim/split/transform and explode emits nothing — skip the row
-        # (for n >= 2 the old [""]-placeholder fell out via the length
-        # check, but n=1 would have emitted hash("") where the native
-        # path emits no row)
-        if t is None:
-            continue
-        # strip(' ') — SPACES only, matching F.trim (the native path and
-        # the DuckDB oracle): Python's bare strip() also eats \t/\n/\r,
-        # which shifts the shingle windows on tab/newline-padded text and
-        # breaks the documented bit-identity (round-7 review finding)
-        toks = ws_re.split(t.strip(" ").lower())
-        if len(toks) < n:
-            continue
-        all_words.extend(toks)
-        doc_idx.extend([i] * len(toks))
-    if not all_words:
-        return None
-    # hash-based factorize (no sort) beats np.unique's string sort, and the
-    # polynomial fold runs VECTORIZED over a flat codepoint buffer: one
-    # masked numpy op per char position instead of a Python char loop per
-    # unique word (utf-32-le decodes to exactly the ord() codepoints the
-    # scalar loop consumed, so the integers are bit-identical; h < P and
-    # cp < 2^21 keep h*31+cp < 2^63). Measured ~3x on the 100x stress
-    # corpus, where per-batch vocabulary is the kernel's hot term.
-    inv, uniq = _pd.factorize(_np.asarray(all_words, dtype=object), sort=False)
-    uniq = _np.asarray(uniq, dtype=object)
-    lens = _np.fromiter((len(w) for w in uniq), dtype=_np.int64, count=len(uniq))
-    cps = _np.frombuffer(
-        "".join(uniq).encode("utf-32-le"), dtype=_np.uint32
-    ).astype(_np.int64)
-    starts = _np.concatenate(([_np.int64(0)], _np.cumsum(lens)[:-1]))
-    uh = _np.zeros(len(uniq), dtype=_np.int64)
-    for j in range(int(lens.max()) if len(lens) else 0):
-        act = lens > j
-        uh[act] = (uh[act] * 31 + cps[starts[act] + j]) % P
-    return ids, _np.asarray(doc_idx, dtype=_np.int64), uh[inv]
-
-
-def _shingle_flat(pdf, n: int):
-    """Shared kernel core: (ids, doc_index, shingle_hash, group_starts,
-    group_ends) flat arrays for one Arrow batch, or None if empty. Distinct
-    hashed word n-grams per doc, bit-identical to the native expressions
-    (see ``_hashed_shingled``)."""
-    import numpy as _np
-
-    from ..functions.text import FP_MOD as P, WORD_COMBINE_BASE as WB
-
-    flat = _flat_word_hashes(pdf, n)
-    if flat is None:
-        return None
-    ids, d, wh = flat
-    # m, not -(n-1): for n=1 the negative slice wh[:-0] is EMPTY and the
-    # kernel crashed on unigram shingles while the native path worked
-    m = len(wh) - (n - 1)
-    sh = wh[:m].copy()
-    for off in range(1, n):
-        tail = wh[off: off + m]
-        sh = (sh * WB + tail) % P
-    valid = d[:m] == d[n - 1:]
-    dd, ss = d[:m][valid], sh[valid]
-    order = _np.lexsort((ss, dd))
-    dd, ss = dd[order], ss[order]
-    keep = _np.ones(len(dd), dtype=bool)
-    keep[1:] = (dd[1:] != dd[:-1]) | (ss[1:] != ss[:-1])
-    dd, ss = dd[keep], ss[keep]
-    bounds = _np.flatnonzero(_np.r_[True, dd[1:] != dd[:-1]])
-    ends = _np.r_[bounds[1:], len(dd)]
-    return ids, dd, ss, bounds, ends
+    schema = "__id {id}, __sh array<long>" + (", __k binary" if with_key else "")
+    return _map_text(df, id_col, text_col, body, schema)
 
 
 def simhash_fingerprints(
@@ -284,34 +177,21 @@ def simhash_fingerprints(
     usable), so no explode, no shuffle, no 48-buffer aggregate. Identical
     integer semantics to ``simhash_agg`` (majority rule
     2·bitsum > n_shingles) and the DuckDB oracle."""
-    from collections.abc import Iterator
+    ab = np.array(SIMHASH_AB[:bits], dtype=np.int64)
+    weights = np.int64(1) << np.arange(bits, dtype=np.int64)
 
-    def kernel(batches: Iterator) -> Iterator:
-        import numpy as _np
-        import pandas as _pd
+    def body(pdf):
+        flat = _shingle_flat(pdf, n)
+        if flat is None:
+            return None
+        ids, dd, ss, starts, ends = flat
+        # h < FP_MOD and a < 1.3e8 keep h*a+b < 2^63: exact int64
+        bitmat = ((ss[:, None] * ab[None, :, 0] + ab[None, :, 1]) % FP_MOD) & 1
+        counts = np.add.reduceat(bitmat, starts, axis=0)
+        sim = ((counts * 2 > (ends - starts)[:, None]) * weights).sum(axis=1)
+        return {"__id": ids[dd[starts]], "__sim": sim}
 
-        from ..functions.text import FP_MOD as _P
-
-        ab = _np.array(SIMHASH_AB[:bits], dtype=_np.int64)
-        av, bv = ab[:, 0][None, :], ab[:, 1][None, :]
-        weights = (_np.int64(1) << _np.arange(bits, dtype=_np.int64))
-        for pdf in batches:
-            flat = _shingle_flat(pdf, n)
-            if flat is None:
-                yield _pd.DataFrame({"__id": _pd.Series([], dtype="int64"),
-                                     "__sim": _pd.Series([], dtype="int64")})
-                continue
-            ids, dd, ss, bounds, ends = flat
-            # per-bit affine rehash (see SIMHASH_AB): h < FP_MOD and
-            # a < 1.3e8 keep h*a+b < 2^63 — exact int64, no wraparound
-            bitmat = ((ss[:, None] * av + bv) % _P) & 1
-            counts = _np.add.reduceat(bitmat, bounds, axis=0)
-            nsh = (ends - bounds)[:, None]
-            sim = ((counts * 2 > nsh) * weights[None, :]).sum(axis=1)
-            yield _pd.DataFrame({"__id": ids[dd[bounds]], "__sim": sim})
-
-    src = _spread(df).select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
-    return src.mapInPandas(kernel, "__id long, __sim long")
+    return _map_text(df, id_col, text_col, body, "__id {id}, __sim long")
 
 
 def jaccard_pairs(
@@ -345,13 +225,10 @@ def jaccard_pairs(
     nothing. Pass ``None`` for the raw exact-pair contract over ALL
     shingles (the sub-quadratic scale path is ``minhash_lsh_pairs``).
 
-    .. note:: SEMANTICS CHANGE (round 8): ``max_df_frac`` went from
-       opt-in to DEFAULT ON. On a corpus of >= ``GATE_MIN_DOCS`` documents
-       where some shingle's df exceeds the cap, the emitted similarity is
-       the exact Jaccard over the FILTERED shingle universe, not over all
-       shingles; callers needing the raw contract pass
-       ``max_df_frac=None``. On corpora with no such shingle the output is
-       bit-identical either way.
+    .. note:: On a corpus of >= ``GATE_MIN_DOCS`` documents where some
+       shingle's df exceeds the cap, the emitted similarity is the exact
+       Jaccard over the FILTERED shingle universe, not over all shingles;
+       callers needing the raw contract pass ``max_df_frac=None``.
 
     .. note:: NOT a pure lazy plan: the gate's purge probe, the adaptive
        collapse probe, and the pair-key range probe each run ONE small
@@ -403,16 +280,7 @@ def jaccard_pairs(
         .filter(F.col("jaccard") >= tau)
         .select("__ra", "__rb", "jaccard")
     )
-    if grp is None:
-        # no-collapse branch: verified pairs ARE document pairs (identical
-        # sets surfaced through the co-occurrence join at Jaccard exactly 1)
-        return verified.select(
-            F.col("__ra").alias("id_a"),
-            F.col("__rb").alias("id_b"),
-            F.round("jaccard", 6).alias("jaccard"),
-        )
-    self_keep = None if kept is None else kept.filter(F.col("__n") > 0)
-    return _expand_rep_pairs(grp, verified, self_keep=self_keep)
+    return _expand_rep_pairs(grp, verified, self_keep=kept)
 
 
 def winnowing_fingerprints(
@@ -430,71 +298,34 @@ def winnowing_fingerprints(
     plagiarism/near-dup indexes consume. Docs with fewer than k tokens
     yield no rows.
 
-    Arrow-vectorized kernel (the ``_hashed_shingled`` pattern): shared
-    flat tokenizer/hasher, positional k-gram combine, and a
-    sliding-window rightmost-argmin via ``sliding_window_view`` +
-    reversed ``argmin`` — bit-identical integers and positions to the
-    native HOF path (``winnowing_fingerprints_native``, kept as the
-    no-Python reference), which evaluated the per-window fold as
-    interpreted lambdas (~14s vs ~4s for the selection stage on the 100x
-    stress corpus). Same-doc guarantee as the native path: a doc's grams
-    are contiguous in the flat arrays, so windows never cross documents.
+    Arrow-vectorized kernel over ``grams._ngrams``: positional k-gram
+    hashes and a sliding-window rightmost-argmin via
+    ``sliding_window_view`` + reversed ``argmin`` — bit-identical integers
+    and positions to the native HOF path
+    (``winnowing_fingerprints_native``, kept as the no-Python reference),
+    which evaluates the per-window fold as interpreted lambdas. A doc's
+    grams are contiguous in the flat arrays, so windows never cross
+    documents.
     """
-    from collections.abc import Iterator
+    from numpy.lib.stride_tricks import sliding_window_view
 
-    from pyspark.sql import types as T
+    def body(pdf):
+        grams = _ngrams(pdf, k)
+        if grams is None:
+            return None
+        ids, dd, g = grams
+        at, pos = [], []
+        for s, e in zip(*_segments(dd)):
+            win = sliding_window_view(g[s:e], min(w, e - s))
+            # argmin over the REVERSED window = rightmost minimum
+            j = win[:, ::-1].argmin(axis=1)
+            sel = np.unique(np.arange(len(win)) + (win.shape[1] - 1 - j))
+            at.append(s + sel)
+            pos.append(sel + 1)  # 1-based gram index
+        at = np.concatenate(at)
+        return {"__id": ids[dd[at]], "pos": np.concatenate(pos), "fp": g[at]}
 
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    def kernel(batches: Iterator) -> Iterator:
-        import numpy as _np
-        import pandas as _pd
-        from numpy.lib.stride_tricks import sliding_window_view
-
-        from ..functions.text import FP_MOD as P, WORD_COMBINE_BASE as WB
-
-        for pdf in batches:
-            flat = _flat_word_hashes(pdf, k)
-            if flat is None:
-                yield _pd.DataFrame(
-                    {"__id": _pd.Series([], dtype="object"),
-                     "pos": _pd.Series([], dtype="int64"),
-                     "fp": _pd.Series([], dtype="int64")}
-                )
-                continue
-            ids, d, wh = flat
-            m = len(wh) - (k - 1)
-            g = wh[:m].copy()
-            for off in range(1, k):
-                g = (g * WB + wh[off: off + m]) % P
-            valid = d[:m] == d[k - 1:]
-            dd, gg = d[:m][valid], g[valid]
-            # per-doc contiguous segments (tokens were appended in order)
-            bounds = _np.flatnonzero(_np.r_[True, dd[1:] != dd[:-1]])
-            ends = _np.r_[bounds[1:], len(dd)]
-            out_id, out_pos, out_fp = [], [], []
-            for s, e in zip(bounds, ends):
-                seg = gg[s:e]
-                n = e - s
-                wl = min(w, n)
-                win = sliding_window_view(seg, wl)
-                # argmin over the REVERSED window = rightmost minimum
-                j = win[:, ::-1].argmin(axis=1)
-                pos0 = _np.arange(len(win), dtype=_np.int64) + (wl - 1 - j)
-                sel = _np.unique(pos0)
-                out_id.append(_np.full(len(sel), ids[dd[s]], dtype=object))
-                out_pos.append(sel + 1)  # 1-based gram index
-                out_fp.append(seg[sel])
-            yield _pd.DataFrame(
-                {"__id": _np.concatenate(out_id),
-                 "pos": _np.concatenate(out_pos),
-                 "fp": _np.concatenate(out_fp)}
-            )
-
-    src = _spread(df).select(
-        F.col(id_col).alias("__id"), F.col(text_col).alias("__t")
-    )
-    out = src.mapInPandas(kernel, f"__id {id_type}, pos long, fp long")
+    out = _map_text(df, id_col, text_col, body, "__id {id}, pos long, fp long")
     return out.withColumnRenamed("__id", id_col)
 
 
@@ -552,13 +383,9 @@ def winnowing_pairs(
     # cache the distinct postings: both join sides read them, and without
     # the cache each side re-scans the corpus and re-runs the winnow fold
     # (same clearCache() convention as jaccard_pairs/minhash_lsh_pairs —
-    # bench/stress clear between corpus passes)
-    #
-    # ``fingerprints`` (round 10, guide §4): a caller-cached precomputed
-    # ``winnowing_fingerprints(df, id_col, text_col, k, w)`` table — the
-    # span-localization operator consumes the positional table anyway, so
-    # handing it in here runs the Arrow winnow kernel ONCE for both the
-    # pair gate and the span postings instead of once per consumer.
+    # bench/stress clear between corpus passes). ``fingerprints`` is a
+    # caller-cached ``winnowing_fingerprints(df, id_col, text_col, k, w)``
+    # table, so a caller that also needs the positions runs the kernel once.
     src = (
         fingerprints
         if fingerprints is not None
@@ -613,11 +440,8 @@ def winnowing_overlap_spans(
     cost the pair-stage purge removed (spans for surviving pairs would
     also report boilerplate overlaps the pair gate never counted).
     """
-    # Round 10 (guide §4 — one kernel pass for two consumers): the cached
-    # positional fingerprint table is handed to winnowing_pairs, so the
-    # Arrow winnow kernel (the query's two heaviest stages, 31 + 22
-    # core-seconds at sf0.1) runs once for the pair gate AND the span
-    # postings.
+    # the cached fingerprint table feeds winnowing_pairs too, so the Arrow
+    # winnow kernel runs once for the pair gate and the span postings
     raw_fps = winnowing_fingerprints(df, id_col, text_col, k=k, w=w).cache()
     fps = raw_fps
     if max_df is not None:
@@ -689,26 +513,25 @@ def _cooccurrence(
     on the 100x stress table, yet the shuffle cost ~6.5s). ``"auto"``
     probes ``_duplicate_fraction`` (one narrow JVM aggregate) and skips
     the collapse below ``COLLAPSE_DUP_FRAC``; the no-collapse branch
-    returns ``grp=None`` (callers skip member expansion — identical-set
-    pairs then surface through the ordinary co-occurrence join at
-    similarity exactly 1, so the emitted pair set is bit-identical).
+    returns ``grp=None`` (``_expand_rep_pairs`` then emits the pairs as
+    they are — identical-set pairs surface through the ordinary
+    co-occurrence join at similarity exactly 1, so the emitted pair set
+    is bit-identical).
 
     NOTE the returned frames embed EAGER probe results (duplicate
     fraction, purge list, id range) — the plan branch is frozen to the
     data at call time, not re-decided per action, and the no-collapse /
     gated branches hold a ``cache()`` (see ``jaccard_pairs``).
 
-    ``shingled`` (round 10, guide §4 — one kernel pass for co-running
-    pipelines): a precomputed ``(__id, __sh[, __k])`` frame that is
+    ``shingled``: a precomputed ``(__id, __sh[, __k])`` frame that is
     bit-identical to ``_hashed_shingled(df, id_col, text_col, n)``
     output (e.g. ``minhash_signatures``' fused table, whose shingle
-    columns come from the same ``_shingle_flat`` producer) and is
+    columns come from the same ``grams._shingle_flat`` producer) and is
     CACHED BY THE CALLER. When given, this operator runs no shingle
     kernel of its own — an audit query running the exact and the
     approximate pipeline side by side pays the tokenize/hash pass once.
 
-    ``min_size_ratio`` (round 10, guide §2.3 — cut the dominant stream
-    before it aggregates): a Jaccard caller that will keep only pairs
+    ``min_size_ratio``: a Jaccard caller that will keep only pairs
     with ``J >= tau`` may pass ``tau`` here, and co-posting rows whose
     set-size ratio ``least(na,nb)/greatest(na,nb)`` falls below it are
     dropped INSIDE the posting self-join, before the Σ df(s)²
@@ -725,47 +548,34 @@ def _cooccurrence(
     """
     if collapse == "auto":
         collapse = _duplicate_fraction(df, text_col) >= COLLAPSE_DUP_FRAC
+    if shingled is None:
+        shingled = _hashed_shingled(df, id_col, text_col, n, with_key=collapse)
+        if not collapse:
+            # the kernel output doubles as the posting source and the probe
+            # table below
+            shingled = shingled.cache()
     if collapse:
-        if shingled is not None:
-            if "__k" not in shingled.columns:
-                raise ValueError(
-                    "_cooccurrence(shingled=...) with collapse=True needs "
-                    "the __k set-identity column (with_key=True upstream)"
-                )
-            sh = shingled.select("__id", "__sh", "__k")
-        else:
-            sh = _hashed_shingled(df, id_col, text_col, n, with_key=True)
-        grp = (
-            sh.groupBy("__k")
-            .agg(
-                F.min("__id").alias("__rid"),
-                F.collect_list("__id").alias("__members"),
-                F.first("__sh").alias("__sh"),
-                F.count(F.lit(1)).alias("__gsz"),
-            )
-            .cache()
-        )
+        grp = _collapse(shingled, "__k", "__sh")
         base = grp.select(F.col("__rid").alias("__id"), "__sh", "__gsz")
     else:
-        # per-document postings: the cached kernel output doubles as the
-        # posting source and the size/id-range probe table below
         grp = None
-        if shingled is not None:
-            base = shingled.select("__id", "__sh")  # caller holds the cache
-        else:
-            base = _hashed_shingled(df, id_col, text_col, n).cache()
-        base = base.select("__id", "__sh", F.lit(1).alias("__gsz"))
+        base = shingled.select("__id", "__sh", F.lit(1).alias("__gsz"))
     postings = base.select(
         "__id", F.size("__sh").alias("__n"), "__gsz",
         F.explode("__sh").alias("__s"),
     )
-    if max_df_frac is not None:
-        # document-weighted df (a rep stands for __gsz identical docs);
-        # the purge list is computed EAGERLY (one narrow aggregate over
-        # the postings of the already-cached collapse/kernel table — the
-        # same scan the probe-then-branch adaptive collapse in
-        # minhash_lsh_pairs pays) because the common case decides the
-        # whole plan shape:
+    # id min/max/count of the collapse/kernel table: the pair-key range
+    # probe, and the broadcast bound of the size re-join
+    id_stats = [
+        F.min("__id").alias("mn"),
+        F.max("__id").alias("mx"),
+        F.count(F.lit(1)).alias("n"),
+    ]
+    kept = None
+    if max_df_frac is None:
+        stats = base.agg(*id_stats).collect()[0]
+    else:
+        # document-weighted df (a rep stands for __gsz identical docs)
         tot = base.agg(F.sum("__gsz").alias("__N"))
         purged = (
             postings.groupBy("__s")
@@ -777,43 +587,25 @@ def _cooccurrence(
             )
             .select("__s")
         )
-        # Round 10 (guide §1.5 — every eager probe is a full sequential
-        # driver round-trip): the purge-emptiness decision and the
-        # pair-key range probe (further down) read the same cached
-        # collapse/kernel table, so ONE job answers both — id min/max/
-        # count on base crossed with the purged-list count — instead of
-        # two back-to-back jobs per query across the whole exact-pair
-        # family.
-        _stats = (
-            base.agg(
-                F.min("__id").alias("mn"),
-                F.max("__id").alias("mx"),
-                F.count(F.lit(1)).alias("n"),
-            )
+        # one job answers both the purge-emptiness decision and the id
+        # range probe: the data decides the plan shape
+        stats = (
+            base.agg(*id_stats)
             .crossJoin(F.broadcast(purged.agg(F.count(F.lit(1)).alias("np"))))
             .collect()[0]
         )
-        if _stats["np"] == 0:
-            # nothing exceeds the cap (every packaged corpus: max df 25 of
-            # 5000 docs at sf0.1) -> the gate is the IDENTITY and the
-            # ungated single-projection pipeline below is bit-identical;
-            # skipping the gate joins (and the kept-size/self-pair frames
-            # downstream — gated=False) keeps the hot plan untouched
-            gated = False
-        else:
-            gated = True
+        # with nothing above the cap (every packaged corpus) the gate is
+        # the identity, and the ungated plan below is bit-identical
+        if stats["np"] > 0:
             cut = (
                 postings.select("__id", "__s")
                 .join(F.broadcast(purged), "__s")
                 .groupBy("__id")
                 .agg(F.count(F.lit(1)).alias("__cut"))
             )
-            # cache the GATED postings: without it every downstream
-            # reference (both co-occurrence sides, the kept-size frame,
-            # the self-pair gate) re-expands the purge subtree — the df
-            # aggregate alone re-ran ~10x; with the cache the purge runs
-            # once and downstream reads are in-memory scans (same
-            # clearCache-between-passes convention as grp)
+            # cache the gated postings: both co-occurrence sides, the kept
+            # sizes and the self-pair gate read them, and each would
+            # otherwise re-run the purge subtree
             postings = (
                 postings.join(F.broadcast(purged), "__s", "left_anti")
                 .join(F.broadcast(cut), "__id", "left")
@@ -821,19 +613,10 @@ def _cooccurrence(
                 .drop("__cut", "__gsz")
                 .cache()
             )
-    else:
-        gated = False
-        _stats = base.agg(
-            F.min("__id").alias("mn"),
-            F.max("__id").alias("mx"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-    postings = postings.drop("__gsz") if "__gsz" in postings.columns else postings
-    kept_sizes = (
-        postings.select(F.col("__id").alias("__rid"), "__n").distinct()
-        if gated
-        else None
-    )
+            # per-rep surviving set sizes; a rep whose shingles were all
+            # purged has no postings left, so it is absent here
+            kept = postings.select(F.col("__id").alias("__rid"), "__n").distinct()
+    postings = postings.drop("__gsz")
     a, b = postings.alias("a"), postings.alias("b")
     join_cond = (F.col("a.__s") == F.col("b.__s")) & (
         F.col("a.__id") < F.col("b.__id")
@@ -847,73 +630,71 @@ def _cooccurrence(
             >= F.lit(float(min_size_ratio))
         )
     joined = a.join(b, join_cond)
-    # The co-occurrence aggregation shuffles one row per CO-POSTING
-    # (Σ df(s)² rows — 126M at the 100x stress corpus), so its key width
-    # is the single biggest cost in the whole pair pipeline. Grouping by
-    # (ra, rb, na, nb) hashes and compares a 4-field row per co-posting;
-    # packing (ra, rb) into ONE int64 (ra << 32 | rb) and re-attaching the
-    # set sizes AFTER the aggregate (one narrow row per representative,
-    # from the already-cached collapse table) measured 49.4s -> 17.1s on
-    # the 126M-row stress step. Packing needs both ids in [0, 2^31); the
-    # range probe (min/max/count off the cached collapse/kernel table) is
-    # fused into the purge probe's single job above when the gate is on
-    # (round 10); it falls back to the unpacked grouping outside the
-    # packable range. The size
-    # re-join broadcasts only while the representative table is small
-    # (~8M rows ≈ 100 MB); above that it stays a shuffle join, which AQE
-    # may still convert at runtime.
-    stats = _stats
-    packable = (
-        stats["mn"] is not None and stats["mn"] >= 0 and stats["mx"] < 2**31
+    # the set sizes re-attach after the pair aggregate, one narrow row per
+    # representative; the re-join broadcasts while the table is small
+    # (~8M rows ≈ 100 MB) and stays a shuffle join above that
+    sizes = kept if kept is not None else base.select(
+        F.col("__id").alias("__rid"), F.size("__sh").alias("__n")
     )
-    if packable:
-        if gated:
-            sizes = kept_sizes.withColumnRenamed("__rid", "__sid")
-        else:
-            sizes = base.select(
-                F.col("__id").alias("__sid"), F.size("__sh").alias("__n")
-            )
-        if stats["n"] <= 8_000_000:
-            sizes = F.broadcast(sizes)
-        co = (
-            joined.select(
-                # explicit long cast: shiftleft on an IntegerType column
-                # masks the shift distance to 0 (32 & 31), which would
-                # silently merge unrelated pairs if a kernel ever emitted
-                # int ids — the range probe above checks values, not types
-                (
-                    F.shiftleft(F.col("a.__id").cast("long"), 32)
-                    + F.col("b.__id").cast("long")
-                ).alias("__pk")
-            )
-            .groupBy("__pk")
-            .agg(F.count(F.lit(1)).alias("__inter"))
-            .select(
-                F.shiftright("__pk", 32).alias("__ra"),
-                F.col("__pk").bitwiseAND(F.lit((1 << 32) - 1)).alias("__rb"),
-                "__inter",
-            )
-            .join(
-                sizes.select(F.col("__sid").alias("__ra"), F.col("__n").alias("__na")),
-                "__ra",
-            )
-            .join(
-                sizes.select(F.col("__sid").alias("__rb"), F.col("__n").alias("__nb")),
-                "__rb",
-            )
-            .select("__ra", "__rb", "__na", "__nb", "__inter")
+    if stats["n"] <= 8_000_000:
+        sizes = F.broadcast(sizes)
+    id_type = base.schema["__id"].dataType
+    co = (
+        _pair_aggregate(joined, F.count(F.lit(1)).alias("__inter"), id_type, stats)
+        .join(sizes.select(F.col("__rid").alias("__ra"), F.col("__n").alias("__na")), "__ra")
+        .join(sizes.select(F.col("__rid").alias("__rb"), F.col("__n").alias("__nb")), "__rb")
+        .select("__ra", "__rb", "__na", "__nb", "__inter")
+    )
+    return grp, co, kept
+
+
+def _pair_aggregate(joined: DataFrame, agg: Column, id_type, stats) -> DataFrame:
+    """``(__ra, __rb, agg)``: a co-posting self-join (sides aliased ``a``
+    and ``b``, ids ``__id``) aggregated per id pair, ids in ``id_type``.
+
+    The aggregate shuffles one row per co-posting (Σ df(s)² rows), so its
+    key width dominates the pair pipelines. Integral ids inside
+    [0, 2^31) — ``stats`` holds their ``mn``/``mx`` — pack into ONE int64
+    key ``a << 32 | b`` (49.4 → 17.1 s on the 100x stress co-occurrence
+    step, OPTIMIZATION_r10.md); any other ids group on the pair itself."""
+    a, b = F.col("a.__id"), F.col("b.__id")
+    if not (
+        isinstance(id_type, IntegralType)
+        and stats["mn"] is not None and stats["mn"] >= 0 and stats["mx"] < 2**31
+    ):
+        return joined.groupBy(a.alias("__ra"), b.alias("__rb")).agg(agg)
+    # explicit long casts: shiftleft on an int column masks the shift
+    # distance to 0 (32 & 31), which would merge unrelated pairs
+    out = joined.groupBy(
+        (F.shiftleft(a.cast("long"), 32) + b.cast("long")).alias("__pk")
+    ).agg(agg)
+    return out.select(
+        F.shiftright("__pk", 32).cast(id_type).alias("__ra"),
+        F.col("__pk").bitwiseAND(F.lit((1 << 32) - 1)).cast(id_type).alias("__rb"),
+        *out.columns[1:],
+    )
+
+
+def _collapse(sh: DataFrame, key: str, *payload: str) -> DataFrame:
+    """The representative collapse: one cached row per distinct ``key``
+    with the min id ``__rid``, the member ids ``__members``, the group
+    size ``__gsz`` and the ``payload`` columns of one member (functions
+    of the key, so any member's)."""
+    if key not in sh.columns:
+        raise ValueError(
+            f"collapse=True needs the {key} set-identity column "
+            "(with_key=True upstream)"
         )
-    else:
-        co = (
-            joined.groupBy(
-                F.col("a.__id").alias("__ra"),
-                F.col("b.__id").alias("__rb"),
-                F.col("a.__n").alias("__na"),
-                F.col("b.__n").alias("__nb"),
-            )
-            .agg(F.count(F.lit(1)).alias("__inter"))
+    return (
+        sh.groupBy(key)
+        .agg(
+            F.min("__id").alias("__rid"),
+            F.collect_list("__id").alias("__members"),
+            F.count(F.lit(1)).alias("__gsz"),
+            *[F.first(c).alias(c) for c in payload],
         )
-    return grp, co, kept_sizes
+        .cache()
+    )
 
 
 def containment_pairs(
@@ -951,20 +732,11 @@ def containment_pairs(
         .filter(F.col("containment") >= tau)
         .select("__ra", "__rb", "containment")
     )
-    if grp is None:
-        return verified.select(
-            F.col("__ra").alias("id_a"),
-            F.col("__rb").alias("id_b"),
-            F.round("containment", 6).alias("containment"),
-        )
-    self_keep = None if kept is None else kept.filter(F.col("__n") > 0)
-    return _expand_rep_pairs(
-        grp, verified, value_col="containment", self_keep=self_keep
-    )
+    return _expand_rep_pairs(grp, verified, value_col="containment", self_keep=kept)
 
 
 def _expand_rep_pairs(
-    grp: DataFrame,
+    grp: DataFrame | None,
     verified: DataFrame,
     value_col: str = "jaccard",
     self_value: Column | None = None,
@@ -973,9 +745,10 @@ def _expand_rep_pairs(
 ) -> DataFrame:
     """Expand representative-level verified pairs back to member pairs.
 
-    ``grp`` is the collapse table (__rid, __members, __gsz); ``verified``
-    holds (__ra, __rb, <value_col>) over representative ids with
-    __ra < __rb. Identical-key groups (size >= 2) contribute member pairs
+    ``grp`` is the collapse table (``_collapse``), or None when nothing
+    was collapsed: every rep is then a document and the verified pairs
+    are emitted as they are. ``verified`` holds (__ra, __rb,
+    <value_col>) over representative ids with __ra < __rb. Identical-key groups (size >= 2) contribute member pairs
     at ``self_value`` (Jaccard exactly 1 for identical shingle sets;
     Hamming 0 for identical fingerprints), built by a within-group double
     explode — narrow, no shuffle, output-sized. Cross-group pairs expand
@@ -995,12 +768,17 @@ def _expand_rep_pairs(
     identical pair sharing only purged boilerplate is dropped exactly
     like its cross-group dual (and like the SQL oracle's filtered
     posting join, which has no row for it)."""
-    if self_value is None:
-        self_value = F.lit(1.0)
     out_val = (
         F.round(value_col, round_digits) if round_digits is not None
         else F.col(value_col)
     )
+    if grp is None:
+        return verified.select(
+            F.col("__ra").alias("id_a"), F.col("__rb").alias("id_b"),
+            out_val.alias(value_col),
+        )
+    if self_value is None:
+        self_value = F.lit(1.0)
     multi = grp.filter(F.col("__gsz") >= 2).select("__rid", "__members")
     if self_keep is not None:
         multi = multi.join(self_keep.select("__rid"), "__rid", "left_semi")
@@ -1118,83 +896,6 @@ def contamination_fraction(
     )
 
 
-def _positional_grams(
-    df: DataFrame, id_col: str, text_col: str, n: int
-) -> DataFrame:
-    """(__id, __pos, __g) — every positional word ``n``-gram hash, 0-based
-    start position (the ``posexplode(combine_word_hashes(...))`` contract),
-    docs with fewer than ``n`` tokens yield nothing. Arrow-vectorized via
-    the shared flat tokenizer/hasher (``_flat_word_hashes``) — the
-    interpreted HOF char/combine folds this replaces were the whole hash
-    stage of the ExactSubstr family (same integers, same positions)."""
-    from collections.abc import Iterator
-
-    from pyspark.sql import types as T  # noqa: F401  (schema string below)
-
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    def kernel(batches: Iterator) -> Iterator:
-        import numpy as _np
-        import pandas as _pd
-
-        from ..functions.text import FP_MOD as P, WORD_COMBINE_BASE as WB
-
-        for pdf in batches:
-            flat = _flat_word_hashes(pdf, n)
-            if flat is None:
-                yield _pd.DataFrame(
-                    {"__id": _pd.Series([], dtype="object"),
-                     "__pos": _pd.Series([], dtype="int64"),
-                     "__g": _pd.Series([], dtype="int64")}
-                )
-                continue
-            ids, d, wh = flat
-            m = len(wh) - (n - 1)
-            g = wh[:m].copy()
-            for off in range(1, n):
-                g = (g * WB + wh[off: off + m]) % P
-            valid = d[:m] == d[n - 1:]
-            dd, gg = d[:m][valid], g[valid]
-            # 0-based position within each doc's gram sequence
-            bounds = _np.flatnonzero(_np.r_[True, dd[1:] != dd[:-1]])
-            seg_start = _np.repeat(bounds, _np.diff(_np.r_[bounds, len(dd)]))
-            pos = _np.arange(len(dd), dtype=_np.int64) - seg_start
-            yield _pd.DataFrame(
-                {"__id": ids[dd], "__pos": pos, "__g": gg}
-            )
-
-    src = _spread(df).select(
-        F.col(id_col).alias("__id"), F.col(text_col).alias("__t")
-    )
-    return src.mapInPandas(kernel, f"__id {id_type}, __pos long, __g long")
-
-
-def _adjacent_hash_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(wa, wb) — one row per adjacent token-hash pair occurrence (the PMI
-    collocation stream). Same flat kernel; pairs never cross documents."""
-    from collections.abc import Iterator
-
-    def kernel(batches: Iterator) -> Iterator:
-        import pandas as _pd
-
-        for pdf in batches:
-            flat = _flat_word_hashes(pdf, 2)
-            if flat is None:
-                yield _pd.DataFrame(
-                    {"wa": _pd.Series([], dtype="int64"),
-                     "wb": _pd.Series([], dtype="int64")}
-                )
-                continue
-            _ids, d, wh = flat
-            valid = d[:-1] == d[1:]
-            yield _pd.DataFrame({"wa": wh[:-1][valid], "wb": wh[1:][valid]})
-
-    src = _spread(df).select(
-        F.col(id_col).alias("__id"), F.col(text_col).alias("__t")
-    )
-    return src.mapInPandas(kernel, "wa long, wb long")
-
-
 def _span_flags(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(__id, __pos, __dup) — every length-``n`` token-span start position,
     flagged with whether the identical span occurs in >= 2 distinct docs.
@@ -1212,23 +913,9 @@ def _span_flags(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     ``duplicated_spans`` (the profile) and ``trim_duplicated_spans`` (the
     rewrite)."""
     spans = _positional_grams(df, id_col, text_col, n)
-    # Round 11 (VERDICT r10 #8 — settle the round-10 shared-exchange trade
-    # with STAGE metrics, not wall): round 10 replaced this shape with one
-    # explicit repartition("__g") shared by both consumers, on the argument
-    # that the Arrow gram kernel re-ran per branch and its core-seconds
-    # dominated. Re-measured on the final tree (OPTIMIZATION_r11.md,
-    # same session, interleaved, Spark-UI executorRunTime sums): the
-    # partial-aggregate shape below wins BOTH metrics on BOTH consumers —
-    # dedup_substring 56.2 vs 60.1 core-s (wall 3.28 vs 3.57 s),
-    # dedup_substring_rewrite 68.2 vs 82.0 core-s (wall 3.98 vs 4.38 s),
-    # outputs identical. The round-10 premise expired inside round 10
-    # itself: the kernel's vectorized factorize fold made it ~3x cheaper,
-    # so the duplicated kernel pass now costs less than what the shared
-    # exchange gives up — map-side partial aggregation on the flag side
-    # (the full positional gram stream crossed the wire unreduced). The
-    # flag aggregate's exchange carries partial (g, distinct-ids) rows —
-    # gram-distinct-sized; a boilerplate-hot gram is absorbed by the
-    # partial aggregation rather than landing on one partition. Reverted.
+    # two consumers re-run the (cheap) gram kernel rather than share one
+    # exchange: the flag aggregate keeps its map-side partial aggregation
+    # (OPTIMIZATION_r11.md)
     dup_grams = spans.groupBy("__g").agg(
         (F.count_distinct("__id") >= 2).alias("__dup")
     )
@@ -1269,8 +956,6 @@ def duplicated_spans(
     # kernel + flag join once, and every aggregation below — the span
     # counts, the (id, pos) distinct, the final counts-cov join — is
     # partition-local because hash(id) satisfies their clustering.
-    # (Round-10: previously each consumer planned its own exchange over
-    # the join, re-running the whole flag pipeline per branch.)
     flat = _span_flags(df, id_col, text_col, n).repartition("__id")
     counts = flat.groupBy("__id").agg(
         F.count(F.lit(1)).alias("n_spans"),
@@ -1447,16 +1132,6 @@ def semantic_dedup(
     )
 
 
-def minhash_signature(sh_col: Column) -> list[Column]:
-    """16 minhash values over a hashed-shingle array column (integer math)."""
-    hashes = shingle_hash(sh_col)
-
-    def _perm(a: int, b: int):
-        return lambda h: (h * a + b) % FP_MOD
-
-    return [F.array_min(F.transform(hashes, _perm(a, b))) for a, b in MINHASH_AB]
-
-
 def _band_key_cols() -> list[Column]:
     """The canonical MinHash band keys over signature columns m0..m15:
     one string key per band, "<band>_<m..>_<m..>". SINGLE source of truth
@@ -1510,7 +1185,7 @@ def minhash_lsh_pairs(
 
     ``signatures``: optional caller-cached precomputed
     ``minhash_signatures(df, id_col, text_col, n, with_key=collapse)``
-    table (round 10) — an audit query running this pipeline next to the
+    table — an audit query running this pipeline next to the
     exact-pair one pays the fused tokenize/hash/minima kernel once and
     hands each consumer the same cached frame. Pass an explicit bool
     ``collapse`` alongside it (with_key must match).
@@ -1554,62 +1229,27 @@ def minhash_lsh_pairs(
     """
     if collapse == "auto":
         collapse = _duplicate_fraction(df, text_col) >= COLLAPSE_DUP_FRAC
-    # fused Arrow kernel: shingles AND the 16 signature minima in one pass
-    # (vectorized (h*a+b) % P + np.minimum.reduceat — replaces 16 interpreted
-    # array_min(transform(...)) folds per row); bit-identical to
-    # ``minhash_signature`` over the native shingle path
-    if signatures is not None:
-        if collapse and "__k" not in signatures.columns:
-            raise ValueError(
-                "minhash_lsh_pairs(signatures=...) with collapse=True needs "
-                "the __k set-identity column (with_key=True upstream)"
-            )
-        sig = signatures  # caller holds the cache
-    else:
+    sig = signatures  # the caller holds its cache
+    if sig is None:
         sig = minhash_signatures(df, id_col, text_col, n, with_key=collapse)
         if not collapse:
-            # per-document path: sig is both the band source and the
-            # shingle lookup for verification — cache it so the kernel
-            # runs once
+            # the band source and the verification lookup: one kernel run
             sig = sig.cache()
-    if not collapse:
-        grp = sig.select(
-            F.col("__id").alias("__rid"),
-            "__sh",
-            F.lit(1).alias("__gsz"),
-        )
+    nperm = len(MINHASH_AB)
+    if collapse:
+        # the signature is a function of the set: any member's will do
+        grp = reps = _collapse(sig, "__k", "__sh", *[f"m{i}" for i in range(nperm)])
     else:
-        # group by __k, the kernel's 32-byte sha256 of the sorted shingle
-        # bytes — the collapse shuffle hashes/compares fixed-width keys,
-        # never arrays; the rep's shingle array rides once as a first()
-        # payload for the verification path, and the signature is a pure
-        # function of the set (identical per group)
-        nperm = len(MINHASH_AB)
-        grp = (
-            sig.groupBy("__k")
-            .agg(
-                F.min("__id").alias("__rid"),
-                F.collect_list("__id").alias("__members"),
-                F.first("__sh").alias("__sh"),
-                F.count(F.lit(1)).alias("__gsz"),
-                *[F.first(f"m{i}").alias(f"m{i}") for i in range(nperm)],
-            )
-            .cache()
-        )
-    band_src = sig if not collapse else grp
-    rid = "__id" if not collapse else "__rid"
-    bands = band_src.select(
-        F.col(rid).alias("__rid"),
-        F.explode(F.array(*_band_key_cols())).alias("__bk"),
-    )
+        grp, reps = None, sig.withColumnRenamed("__id", "__rid")
+    bands = reps.select("__rid", F.explode(F.array(*_band_key_cols())).alias("__bk"))
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(b, (F.col("a.__bk") == F.col("b.__bk")) & (F.col("a.__rid") < F.col("b.__rid")))
         .select(F.col("a.__rid").alias("__ra"), F.col("b.__rid").alias("__rb"))
         .distinct()
     )
-    sh_a = grp.select(F.col("__rid").alias("__ra"), F.col("__sh").alias("__sha"))
-    sh_b = grp.select(F.col("__rid").alias("__rb"), F.col("__sh").alias("__shb"))
+    sh_a = reps.select(F.col("__rid").alias("__ra"), F.col("__sh").alias("__sha"))
+    sh_b = reps.select(F.col("__rid").alias("__rb"), F.col("__sh").alias("__shb"))
     verified = (
         cand.join(sh_a, "__ra")
         .join(sh_b, "__rb")
@@ -1622,14 +1262,6 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= tau)
         .select("__ra", "__rb", "jaccard")
     )
-    if not collapse:
-        # every group is a singleton: rep pairs ARE member pairs — emit
-        # directly with the same rounding contract as _expand_rep_pairs
-        return verified.select(
-            F.col("__ra").alias("id_a"),
-            F.col("__rb").alias("id_b"),
-            F.round("jaccard", 6).alias("jaccard"),
-        )
     return _expand_rep_pairs(grp, verified)
 
 
@@ -1639,50 +1271,26 @@ def minhash_signatures(
     """(__id, __sh, m0..m15): hashed shingles + MinHash signature in one
     fused Arrow pass. Permutation math is exact int64 ((h·a+b) mod P with
     h < 2^36, a < 2^26 — products < 2^62), identical to
-    ``minhash_signature`` and the DuckDB oracle. ``with_key=True`` adds the
-    same fixed-width set-identity key ``__k`` as ``_hashed_shingled``."""
-    from collections.abc import Iterator
+    ``array_min(transform(shingles, h -> (h*a+b) % P))`` over the native
+    shingle path and the DuckDB oracle. ``with_key=True`` adds the same
+    fixed-width set-identity key ``__k`` as ``_hashed_shingled``."""
+    ab = np.array(MINHASH_AB, dtype=np.int64)
 
-    ab_a = [a for a, _ in MINHASH_AB]
-    ab_b = [b for _, b in MINHASH_AB]
-    ncols = len(MINHASH_AB)
+    def body(pdf):
+        flat = _shingle_flat(pdf, n)
+        if flat is None:
+            return None
+        out = _set_columns(flat, with_key)
+        _ids, _dd, ss, starts, _ends = flat
+        perms = (ss[:, None] * ab[None, :, 0] + ab[None, :, 1]) % FP_MOD
+        mins = np.minimum.reduceat(perms, starts, axis=0)
+        for i in range(len(ab)):
+            out[f"m{i}"] = mins[:, i]
+        return out
 
-    def kernel(batches: Iterator) -> Iterator:
-        import hashlib
-
-        import numpy as _np
-        import pandas as _pd
-
-        va = _np.array(ab_a, dtype=_np.int64)[None, :]
-        vb = _np.array(ab_b, dtype=_np.int64)[None, :]
-        for pdf in batches:
-            flat = _shingle_flat(pdf, n)
-            if flat is None:
-                empty = {"__id": _pd.Series([], dtype="int64"),
-                         "__sh": _pd.Series([], dtype="object")}
-                if with_key:
-                    empty["__k"] = _pd.Series([], dtype="object")
-                for i in range(ncols):
-                    empty[f"m{i}"] = _pd.Series([], dtype="int64")
-                yield _pd.DataFrame(empty)
-                continue
-            ids, dd, ss, bounds, ends = flat
-            perms = (ss[:, None] * va + vb) % FP_MOD
-            mins = _np.minimum.reduceat(perms, bounds, axis=0)
-            out = {"__id": ids[dd[bounds]],
-                   "__sh": [ss[s:e] for s, e in zip(bounds, ends)]}
-            if with_key:
-                out["__k"] = [hashlib.sha256(ss[s:e].tobytes()).digest()
-                              for s, e in zip(bounds, ends)]
-            for i in range(ncols):
-                out[f"m{i}"] = mins[:, i]
-            yield _pd.DataFrame(out)
-
-    src = _spread(df).select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
-    schema = "__id long, __sh array<long>, " + (
-        "__k binary, " if with_key else ""
-    ) + ", ".join(f"m{i} long" for i in range(ncols))
-    return src.mapInPandas(kernel, schema)
+    schema = "__id {id}, __sh array<long>, " + ("__k binary, " if with_key else "")
+    schema += ", ".join(f"m{i} long" for i in range(len(MINHASH_AB)))
+    return _map_text(df, id_col, text_col, body, schema)
 
 
 def _bit_of(h, j: int):
@@ -1697,45 +1305,12 @@ def _bit_of(h, j: int):
     ).bitwiseAND(F.lit(1))
 
 
-def simhash(text_col: str, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash fingerprint from distinct word hashes (unit weights).
-
-    bit_j = 1  iff  2 * |{w : rehash_j(hash(w)) odd}| > |words|.
-    Delegates to ``simhash_from_hashes`` — ONE fold definition, so a
-    majority-rule or bit-weighting fix cannot drift between the two
-    (they are equality-tested against the Arrow kernel path)."""
-    words = F.array_distinct(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
-    return simhash_from_hashes(shingle_hash(words), bits)
-
-
-def simhash_from_hashes(hashes_col, bits: int = SIMHASH_BITS):
-    """SimHash over an array<long> word-hash column (name or Column)."""
-    if bits > len(SIMHASH_AB):
-        raise ValueError(
-            f"simhash: bits={bits} exceeds the {len(SIMHASH_AB)} packaged "
-            "rehash constants — extend SIMHASH_AB before widening"
-        )
-    hashes_col = F.col(hashes_col) if isinstance(hashes_col, str) else hashes_col
-    nwords = F.size(hashes_col).cast("long")
-
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        bitsum = F.aggregate(
-            hashes_col, F.lit(0).cast("long"), lambda acc, h, j=j: acc + _bit_of(h, j)
-        )
-        out = out + F.when(bitsum * 2 > nwords, F.lit(1 << j).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return out
-
-
 def simhash_agg(hashed: DataFrame, hashes_col: str = "__hs",
                 bits: int = SIMHASH_BITS) -> DataFrame:
     """(__id, __sim): SimHash via explode + codegen hash aggregate.
 
-    The array-fold formulation (``simhash_from_hashes``) evaluates 48
-    interpreted higher-order lambdas per row — HOFs sit outside whole-stage
-    codegen. Exploding the shingle hashes and computing the 48 bit-sums as
+    An array-fold formulation would evaluate 48 interpreted higher-order
+    lambdas per row — HOFs sit outside whole-stage codegen. Exploding the shingle hashes and computing the 48 bit-sums as
     ordinary aggregate expressions over the AFFINE REHASH low bit
     (``_bit_of``: ``((h*a_j + b_j) % P) & 1`` — NOT the raw ``(h >> j) & 1``,
     whose upper bits are constant zero and collapse an LSH band to one
@@ -1801,16 +1376,7 @@ def simhash_pairs(
     distinct-fingerprint-sized. Cache-lifetime note on ``jaccard_pairs``
     applies here too.
     """
-    sh = simhash_fingerprints(df, id_col, text_col, n)
-    grp = (
-        sh.groupBy("__sim")
-        .agg(
-            F.min("__id").alias("__rid"),
-            F.collect_list("__id").alias("__members"),
-            F.count(F.lit(1)).alias("__gsz"),
-        )
-        .cache()
-    )
+    grp = _collapse(simhash_fingerprints(df, id_col, text_col, n), "__sim")
     n_bands = SIMHASH_BITS // SIMHASH_BAND_BITS
     band_cols = [
         F.concat_ws(
@@ -2386,8 +1952,6 @@ def sparse_cosine_pairs(
     ``id_col`` must be an integer column (both paths pack and order ids as
     int64); ``id_a``/``id_b`` come back in its type. Any other type raises
     ``TypeError`` up front."""
-    from pyspark.sql.types import IntegralType
-
     from ..functions.text import word_hashes
 
     id_type = df.select(id_col).schema[0].dataType
@@ -2424,7 +1988,7 @@ def sparse_cosine_pairs(
     # (norms + both posting sides); cache it so tokenize/tf/df run once.
     # Same cache-lifetime note as jaccard_pairs.
     #
-    # Overflow envelope (round-7 review): the norm/dot products square and
+    # Overflow envelope: the norm/dot products square and
     # sum __wgt in int64 to stay inside codegen on the hot posting join —
     # safe while |__wgt| <= ~3.0e9 (sqrt(2^63)/sqrt(2), margin for the
     # sum). A pathological doc repeating a rare term ~10^5+ times at web
@@ -2449,13 +2013,11 @@ def sparse_cosine_pairs(
         ),
     )
     wt = wt.cache()
-    # Round 11 DENSE GATE (guide §1.2/§8 — change the algorithm, and decide
-    # with small rows): when the surviving vocabulary is small, the TF-IDF
+    # DENSE GATE: when the surviving vocabulary is small, the TF-IDF
     # matrix is effectively DENSE and the inverted-index self-join is the
-    # wrong algorithm — it materializes and shuffles one row per co-posting
-    # (Σ df(t)² — 8.9M rows ≈ 71 MB shuffled on the packaged gate corpus,
-    # 4.6-5.5 s of the query's wall at 32 cores, profiled round 11) to
-    # compute what is one small exact int64 matmul. The probe (one narrow
+    # wrong algorithm — it shuffles one row per co-posting (Σ df(t)², 8.9M
+    # rows on the packaged gate corpus, OPTIMIZATION_r11.md) to compute
+    # what is one small exact int64 matmul. The probe (one narrow
     # aggregate over the cached index) takes the dense path when the
     # vocabulary fits a per-row array (<= {_DENSE_MAX_VOCAB}) and the
     # matrix fits comfortably across block tasks (<= 2^26 cells); real
@@ -2486,47 +2048,22 @@ def sparse_cosine_pairs(
     joined = a.join(
         b, (F.col("a.__w") == F.col("b.__w")) & (F.col("a.__id") < F.col("b.__id"))
     )
-    # The dot-product aggregation shuffles one row per co-posting (sum of
-    # df(t)^2 rows — the dominant stream of this operator, same law as the
-    # jaccard/_cooccurrence pipeline). Packing (ida, idb) into ONE int64
-    # halves the aggregation key width exactly as in _cooccurrence
-    # (measured there 49.4s -> 17.1s at the 100x stress; here 3.75s ->
-    # 2.88s same-session at the gate slice). The range probe reads
-    # min/max of the SOURCE id column (one pruned scan — not the cached
-    # index: an eager probe there would materialize the cache in its own
-    # job, and the main plan then reprints the cached subtree's exchanges
-    # per consuming branch, tripping the plan-budget lint on phantom
-    # counts). wt's ids are a subset of the source ids, so the bound is
-    # valid; ids outside [0, 2^31) fall back to the unpacked grouping.
+    # The pair-key range probe reads min/max of the SOURCE id column (one
+    # pruned scan): an eager probe of the cached index would materialize
+    # the cache in its own job, and the main plan would then reprint the
+    # cached subtree's exchanges per branch, tripping the plan-budget lint.
+    # wt's ids are a subset of the source ids, so the bound holds.
     stats = df.agg(
         F.min(F.col(id_col)).alias("mn"), F.max(F.col(id_col)).alias("mx")
     ).collect()[0]
-    if stats["mn"] is not None and stats["mn"] >= 0 and stats["mx"] < 2**31:
-        dot = (
-            joined.select(
-                (
-                    F.shiftleft(F.col("a.__id").cast("long"), 32)
-                    + F.col("b.__id").cast("long")
-                ).alias("__pk"),
-                (F.col("a.__wgt") * F.col("b.__wgt")).alias("__p"),
-            )
-            .groupBy("__pk")
-            .agg(F.sum("__p").alias("__dot"))
-            .select(
-                F.shiftright("__pk", 32).alias("__ida"),
-                F.col("__pk").bitwiseAND(F.lit((1 << 32) - 1)).alias("__idb"),
-                "__dot",
-            )
-        )
-    else:
-        dot = joined.groupBy(
-            F.col("a.__id").alias("__ida"), F.col("b.__id").alias("__idb")
-        ).agg(F.sum(F.col("a.__wgt") * F.col("b.__wgt")).alias("__dot"))
-    na = nrm.select(F.col("__id").alias("__ida"), F.col("__nn").alias("__na"))
-    nb = nrm.select(F.col("__id").alias("__idb"), F.col("__nn").alias("__nb"))
+    dot = _pair_aggregate(
+        joined, F.sum(F.col("a.__wgt") * F.col("b.__wgt")).alias("__dot"), id_type, stats
+    )
+    na = nrm.select(F.col("__id").alias("__ra"), F.col("__nn").alias("__na"))
+    nb = nrm.select(F.col("__id").alias("__rb"), F.col("__nn").alias("__nb"))
     cos = (
-        dot.join(na, "__ida")
-        .join(nb, "__idb")
+        dot.join(na, "__ra")
+        .join(nb, "__rb")
         .withColumn(
             "cosine",
             F.when(
@@ -2539,8 +2076,8 @@ def sparse_cosine_pairs(
         .filter(F.col("cosine") >= tau)
     )
     return cos.select(
-        F.col("__ida").cast(id_type).alias("id_a"),
-        F.col("__idb").cast(id_type).alias("id_b"),
+        F.col("__ra").alias("id_a"),
+        F.col("__rb").alias("id_b"),
         F.round("cosine", 6).alias("cosine"),
     )
 

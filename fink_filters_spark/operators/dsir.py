@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-
+from .grams import _map_text, _ngrams, _positional_grams
 
 DSIR_BUCKETS = 1024
 MICRO = 1_000_000
@@ -35,10 +35,8 @@ def hashed_token_buckets(df: DataFrame, id_col: str, text_col: str,
     """Map each token of the engine-standard token stream to its char-fold
     hash bucket (one row per token OCCURRENCE — DSIR counts occurrences,
     not distinct types). Returns (id, bucket). Hashing runs in the shared
-    Arrow flat kernel (``dedup._positional_grams`` at n=1 — bit-identical
+    Arrow gram kernel (``grams._positional_grams`` at n=1 — bit-identical
     integers to the native ``word_hashes`` expression)."""
-    from .dedup import _positional_grams
-
     return _positional_grams(df, id_col, text_col, 1).select(
         F.col("__id").alias("id"), (F.col("__g") % n_buckets).alias("bucket")
     )
@@ -100,37 +98,19 @@ def bucket_occurrences_flagged(df: DataFrame, id_col: str, text_col: str,
     target slice). ONE Arrow flat-kernel pass where the two-sided fit
     paid one per slice; tokenization/hashing is per-row independent, so
     the (id, bucket) multiset per slice is bit-identical to running
-    ``hashed_token_buckets`` on the filtered slice (guide §4 — fewer
-    passes over the Python boundary, same integers)."""
-    from collections.abc import Iterator
+    ``hashed_token_buckets`` on the filtered slice."""
 
-    from .dedup import _flat_word_hashes, _spread
-
-    def kernel(batches: Iterator) -> Iterator:
-        import pandas as _pd
-
-        for pdf in batches:
-            flat = _flat_word_hashes(pdf, 1)
-            if flat is None:
-                yield _pd.DataFrame(
-                    {"id": _pd.Series([], dtype="int64"),
-                     "bucket": _pd.Series([], dtype="int64"),
-                     "__f": _pd.Series([], dtype="bool")}
-                )
-                continue
-            ids, d, wh = flat
-            flags = pdf["__f"].to_numpy()
-            yield _pd.DataFrame(
-                {"id": ids[d], "bucket": wh % n_buckets, "__f": flags[d]}
-            )
+    def body(pdf):
+        grams = _ngrams(pdf, 1)
+        if grams is None:
+            return None
+        ids, d, wh = grams
+        return {"id": ids[d], "bucket": wh % n_buckets, "__f": pdf["__x"].to_numpy()[d]}
 
     flag_col = F.col(flag) if isinstance(flag, str) else flag
-    src = _spread(df).select(
-        F.col(id_col).alias("__id"),
-        F.col(text_col).alias("__t"),
-        flag_col.alias("__f"),
+    return _map_text(
+        df, id_col, text_col, body, "id {id}, bucket long, __f boolean", extra=flag_col
     )
-    return src.mapInPandas(kernel, "id long, bucket long, __f boolean")
 
 
 def dsir_bucket_weights_flagged(df: DataFrame, id_col: str, text_col: str,

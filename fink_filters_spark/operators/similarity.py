@@ -260,7 +260,7 @@ def _band_signatures_arrow(
     import numpy as np
 
     from ..functions.vectors import VEC_SCALE
-    from .dedup import _spread
+    from .grams import _spread
 
     if band_bits > 31:
         raise ValueError(

@@ -231,14 +231,12 @@ def q_dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-join and three single-row aggregates combined by broadcast
     cross joins — output is one row regardless of corpus size.
 
-    Round 10 (guide §4 — fewer kernel passes): both pipelines consume the
-    same corpus, so the adaptive-collapse probe runs ONCE here and the
-    fused ``minhash_signatures`` table (whose ``(__id, __sh)`` columns are
-    bit-identical to the exact path's ``_hashed_shingled`` — same
-    ``_shingle_flat`` producer) is cached and handed to BOTH operators:
-    one tokenize/hash kernel pass instead of two, one duplicate-fraction
-    scan instead of two. Same-session A/B min-of-3 at sf0.1: 4.08 →
-    2.78s, output identical.
+    Both pipelines consume the same corpus, so the adaptive-collapse
+    probe runs ONCE here and the fused ``minhash_signatures`` table (whose
+    ``(__id, __sh)`` columns are bit-identical to the exact path's
+    ``_hashed_shingled`` — same ``grams._shingle_flat`` producer) is
+    cached and handed to BOTH operators: one tokenize/hash kernel pass
+    instead of two, one duplicate-fraction scan instead of two.
     """
     from ..operators.dedup import (
         COLLAPSE_DUP_FRAC, _duplicate_fraction, minhash_signatures,

@@ -112,7 +112,7 @@ def text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial counting; totals are one-row aggregates broadcast
     back; the two count joins are vocab-sized — nothing corpus-sized ever
     shuffles except the first gram explode."""
-    from ..operators.dedup import _adjacent_hash_pairs, _positional_grams
+    from ..operators.grams import _adjacent_hash_pairs, _positional_grams
 
     docs = load_table(spark, sf_dir, "documents")
     uni = (
@@ -323,7 +323,7 @@ def text_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     (non-distinct) grams explode into one long column; partial map-side
     counting collapses the shuffle to distinct grams, and the top-k is a
     TakeOrdered, not a global sort."""
-    from ..operators.dedup import _positional_grams
+    from ..operators.grams import _positional_grams
 
     docs = load_table(spark, sf_dir, "documents")
     grams = _positional_grams(docs, "doc_id", "text", 2).select(
@@ -376,7 +376,7 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation, but its shuffle is the SAME exchange the probe side
     already pays, read twice. Same-session A/B min-of-3 at sf0.1:
     2.09 → 1.78s, output identical."""
-    from ..operators.dedup import _positional_grams
+    from ..operators.grams import _positional_grams
 
     docs = load_table(spark, sf_dir, "documents")
     grams = _positional_grams(docs, "doc_id", "text", 2).select(

@@ -46,40 +46,16 @@ DYNAMIC_CONF = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow transfer for the pandas-UDF kernels (science fits, image stats).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Allow shuffled hash join where its size conditions fit instead of
-    # always sorting both sides (guide §3.1/§9): the planner may pick SHJ
-    # outright, and AQE rewrites SMJ->SHJ at runtime when every
-    # post-shuffle partition is under the local-map threshold (64 MB here
-    # — bounds the per-partition hash build, which is the documented OOM
-    # risk of SHJ; partitions above it keep the spill-safe sort-merge).
-    # Not a local-mode knob: the same bound holds per executor core on a
-    # cluster. Same-session interleaved A/B over the 18-query heavy tail
-    # at sf0.1: 45.1s -> 38.3s (both rounds agree; biggest movers
-    # dedup_lsh_recall 5.3->3.0, er_golden_record 3.3->2.3, sim_pq_adc
-    # 4.7->3.7, dedup_survivors_quality 3.2->2.1; two sub-0.25s
-    # regressions inside noise). Join semantics — and the engine's
-    # exact-integer aggregation convention — are order-free, so results
-    # are unchanged (full oracle sweep re-run green).
+    # Shuffled hash join instead of always sorting both sides, where every
+    # post-shuffle partition is under 64 MB (which bounds the hash build;
+    # larger partitions keep the spill-safe sort-merge). Measurements in
+    # OPTIMIZATION_r10.md.
     "spark.sql.join.preferSortMergeJoin": "false",
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "67108864",
-    # AQE advisory (post-shuffle target / skew-split granularity) —
-    # SCALE-DEPENDENT, so env-parameterised (the only such knob here).
-    # Round-11 re-pin (VERDICT r10 item #2): the round-10 8 MB local
-    # default was re-measured on the FINAL tree in ONE session,
-    # interleaved, at 32 threads — 64 MB won on BOTH the 17-query
-    # PERF-regressed cluster (40.5s -> 34.8s; 16 of 17 queries, e.g.
-    # dedup_components 5.66->3.47, dedup_containment 5.26->4.23,
-    # text_sparse_cosine 6.24->5.41; only ts_hist_array -0.4s) AND the
-    # very heavy-tail set that had justified 8 MB (25.9s -> 21.0s, every
-    # query: dedup_apply 2.90->2.09, q21 2.35->1.37, sim_pq_adc
-    # 3.69->2.97; a 16 MB middle arm landed between). The round-10
-    # reading did not reproduce on the final tree — later r10 commits
-    # (SHJ conversion, packed pair keys, shared exchanges) changed the
-    # plans it was measured on. 64 MB is also Spark's own default, so
-    # the local setting is now a no-op placeholder for the env knob:
-    # a production deployment sets SPARK_GRAFT_ADVISORY_PARTITION_BYTES
-    # to 64-256 MB per cluster (guide §2.2/§9) — partition size should
-    # track per-core data volume, which is what the knob expresses.
+    # AQE advisory partition size (post-shuffle target and skew-split
+    # granularity) tracks per-core data volume, so it is env-parameterised:
+    # 64 MB (Spark's default) locally, 64-256 MB on a cluster
+    # (measurements in OPTIMIZATION_r11.md).
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": os.environ.get(
         "SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "67108864"
     ),

@@ -1027,6 +1027,46 @@ def test_shingle_kernel_unigrams_and_tab_padding(spark):
         assert kernel == native, f"n={n}"
 
 
+@pytest.mark.parametrize("id_type", ["int", "long", "string"])
+def test_shingle_family_any_id_type(spark, id_type):
+    """The shingle, MinHash and SimHash kernels pass the id column through
+    in its own type: every pair operator over them returns the pairs of
+    the long-id run mapped through the id map (zero-padded strings keep
+    the id order), with id_a/id_b in the input's type, on both collapse
+    paths."""
+    from fink_filters_spark.operators.dedup import (
+        containment_pairs, jaccard_pairs, minhash_lsh_pairs, simhash_pairs,
+    )
+
+    base = "the quick brown fox jumps over the lazy dog tonight and runs away"
+    texts = (
+        [base] * 3
+        + [base + f" trailing variant {i % 2}" for i in range(4)]
+        + [f"unique document {i} with words {i * 7} {i * 13} only" for i in range(5)]
+    )
+    to_id = (lambda i: f"d{i:03d}") if id_type == "string" else int
+    long_df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    df = spark.createDataFrame(
+        [(to_id(i), t) for i, t in enumerate(texts)], f"doc_id {id_type}, text string"
+    )
+    ops = {
+        f"{op.__name__}[{mode}]": (
+            lambda d, op=op, mode=mode: op(d, "doc_id", "text", 3, 0.5, collapse=mode)
+        )
+        for op in (jaccard_pairs, containment_pairs, minhash_lsh_pairs)
+        for mode in (True, False)
+    }
+    ops["simhash_pairs"] = lambda d: simhash_pairs(d, "doc_id", "text")
+    for name, op in ops.items():
+        want = [(to_id(a), to_id(b), v) for a, b, v in sorted(op(long_df).collect())]
+        out = op(df)
+        got = sorted(tuple(r) for r in out.collect())
+        spark.catalog.clearCache()
+        assert got == want and want, name
+        assert out.schema["id_a"].dataType == df.schema["doc_id"].dataType, name
+        assert out.schema["id_b"].dataType == df.schema["doc_id"].dataType, name
+
+
 # ---- winnowing (MOSS) fingerprints ------------------------------------------
 
 def _py_winnow(text: str, k: int = 3, w: int = 4):

@@ -783,6 +783,51 @@ def test_winnowing_shared_run_guarantee_property(
 
 @SLOW
 @given(
+    texts=st.lists(
+        st.one_of(st.none(), st.text(alphabet="aAb \t\n", max_size=24)),
+        min_size=1, max_size=8,
+    )
+)
+@example(texts=[None, "", "a", " a\tb \n", "\ta  b\n\nA", "a b"])
+def test_gram_kernels_match_native_positional_grams(spark, texts):
+    """The shared Arrow gram core against the native expressions: for
+    n = 1..3, ``_positional_grams``' (id, pos, gram) rows are exactly
+    ``posexplode(combine_word_hashes(word_hashes(t), n, distinct=False))``;
+    ``_adjacent_hash_pairs`` is the consecutive n = 1 grams of each doc,
+    and the DSIR bucket kernels are the n = 1 grams mod the bucket count.
+    NULL text, texts shorter than n, and tab/newline/space padding
+    included."""
+    from fink_filters_spark.functions.text import combine_word_hashes, word_hashes
+    from fink_filters_spark.operators.dsir import (
+        bucket_occurrences_flagged, hashed_token_buckets,
+    )
+    from fink_filters_spark.operators.grams import _adjacent_hash_pairs, _positional_grams
+
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, t string")
+    wh = df.select("id", word_hashes("t").alias("wh"))
+    native = {}
+    for n in (1, 2, 3):
+        native[n] = sorted(
+            tuple(r) for r in wh.select(
+                "id", F.posexplode(combine_word_hashes("wh", n, distinct=False))
+            ).collect()
+        )
+        got = sorted(tuple(r) for r in _positional_grams(df, "id", "t", n).collect())
+        assert got == native[n], n
+    unigram = dict(((i, p), g) for i, p, g in native[1])
+    adjacent = sorted(
+        (g, unigram[(i, p + 1)]) for (i, p), g in unigram.items() if (i, p + 1) in unigram
+    )
+    assert sorted(tuple(r) for r in _adjacent_hash_pairs(df, "id", "t").collect()) == adjacent
+    buckets = sorted((i, g % 7) for i, _p, g in native[1])
+    got = hashed_token_buckets(df, "id", "t", n_buckets=7).collect()
+    assert sorted(tuple(r) for r in got) == buckets
+    got = bucket_occurrences_flagged(df, "id", "t", F.col("id") % 2 == 0, n_buckets=7)
+    assert sorted(tuple(r) for r in got.collect()) == [(i, b, i % 2 == 0) for i, b in buckets]
+
+
+@SLOW
+@given(
     bits=st.integers(min_value=1, max_value=6),
     seed=st.integers(min_value=0, max_value=2**31 - 1),
 )
