@@ -122,14 +122,18 @@ def word_hashes(text) -> Column:
 
 
 def combine_word_hashes(wh_col: Column | str, n: int = 3, distinct: bool = True) -> Column:
-    """Hashed word n-gram shingles from a MATERIALIZED word-hash
-    array column:  h = ((h1*37 + h2) % P * 37 + h3) % P.
+    """Hashed word n-gram shingles from a word-hash array column:
+    h = ((h1*37 + h2) % P * 37 + h3) % P.
     ``distinct=False`` keeps positional duplicates (needed by repetition
     scoring, where the duplicate fraction IS the signal).
 
-    ``wh_col`` must be a column reference (not the word_hashes expression):
-    an embedded expression would be re-evaluated per shingle position,
-    turning the O(words) hash pass into O(words * shingles). Two-stage use:
+    The input array is bound ONCE, as the argument of a one-element
+    ``transform``, and every shingle position reads that lambda variable.
+    A plain column reference is not enough: Catalyst collapses projections
+    and pushes filters through them, so a ``word_hashes(text)`` one select
+    upstream would be inlined into every ``element_at`` and re-evaluated
+    per shingle position, turning the O(words) hash pass into
+    O(words * shingles). Typical use:
 
         df.select(word_hashes("text").alias("wh")) \\
           .select(combine_word_hashes("wh", 3).alias("sh"))
@@ -138,18 +142,22 @@ def combine_word_hashes(wh_col: Column | str, n: int = 3, distinct: bool = True)
     Bounds: h < FP_MOD ~ 6.7e10; *37 + h -> 2.5e12 << 2^63.
     """
     wh = F.col(wh_col) if isinstance(wh_col, str) else wh_col
-    k = F.size(wh) - (n - 1)
 
-    def _combine(i):
-        h = F.element_at(wh, i)
-        for j in range(1, n):
-            h = (h * WORD_COMBINE_BASE + F.element_at(wh, i + j)) % FP_MOD
-        return h
+    def _grams(w):
+        k = F.size(w) - (n - 1)
 
-    grams = F.transform(F.sequence(F.lit(1), k), _combine)
-    if distinct:
-        grams = F.array_distinct(grams)
-    return F.when(k >= 1, grams).otherwise(F.array().cast("array<long>"))
+        def _combine(i):
+            h = F.element_at(w, i)
+            for j in range(1, n):
+                h = (h * WORD_COMBINE_BASE + F.element_at(w, i + j)) % FP_MOD
+            return h
+
+        grams = F.transform(F.sequence(F.lit(1), k), _combine)
+        if distinct:
+            grams = F.array_distinct(grams)
+        return F.when(k >= 1, grams).otherwise(F.array().cast("array<long>"))
+
+    return F.element_at(F.transform(F.array(wh), _grams), 1)
 
 
 def winnow_select(grams_col: Column | str, w: int = 4) -> Column:

@@ -8,15 +8,20 @@ _sky; ``ztf/filter_known_tde/filter.py:65-90`` fixed-radius nearest;
 re-reads the catalog per batch. Spark-first design:
 
 1. bucket both sides on an integer sky grid (functions.astro.grid_cell);
-   the catalog side explodes the 3×3 neighborhood so the big side joins on a
-   SINGLE equality key — Catalyst plans a BroadcastHashJoin, no cartesian;
+   each stream row explodes the cells its cone can reach
+   (functions.astro.neighbor_cells) and the catalog keeps its own cell, so
+   the join is on a SINGLE equality key — Catalyst plans a
+   BroadcastHashJoin whose build side is the un-exploded catalog, no
+   cartesian;
 2. refine with the exact haversine predicate (native trig, codegen'd);
 3. nearest-match semantics via ``row_number() over (partition by stream-row
    order by separation)`` — the window only runs over matched pairs (tiny).
 
 At 100 TB this is shuffle-free on the stream side: the catalog (10²-10⁵ rows
-per SURVEY §1.1) broadcasts; grid-cell hashing bounds the candidate pairs per
-alert to the 9-cell neighborhood.
+per SURVEY §1.1) broadcasts one row per source — exploding it instead would
+build and ship every source ≥15 times per action (kx ≥ 2 when cell =
+radius); the stream's fan-out pipelines through the probe. Grid-cell hashing
+bounds the candidate pairs per alert to its neighbor cells.
 """
 
 from __future__ import annotations
@@ -66,7 +71,8 @@ def crossmatch(
     regions (the galactic plane) make hot cells; AQE's skew-join split
     handles those at runtime, and a finer ``cell_deg`` (>= radius / k with
     a (2k+1)^2 neighborhood would need explicit support; here keep
-    cell >= radius) trades explode fan-out against cell occupancy.
+    cell >= radius) trades explode fan-out against cell occupancy. The flag
+    only adds or drops the broadcast hint: both regimes key the same sides.
     """
     if how not in ("nearest", "all", "left", "anti"):
         raise ValueError(
@@ -94,35 +100,20 @@ def crossmatch(
         radius_col = radius_deg
     cell = cell_deg or max_r
 
+    # The STREAM side explodes its neighbor cells and the catalog is keyed
+    # by its own cell, in both regimes: the un-exploded catalog is the
+    # small build side (broadcast or hashed), and the fan-out lands on the
+    # probe side, where it pipelines. Pair coverage is direction-free —
+    # neighbor_cells(x) bounds the max RA offset of ANY partner within
+    # max_r of row x (worst-case |dec|+r), so "p's cells contain c's cell"
+    # iff "c's cells contain p's cell" (tests/test_properties.py checks
+    # both regimes against brute force at the pole and the RA wrap).
+    left = df.withColumn(
+        "__cell", F.explode(neighbor_cells(df_ra, df_dec, cell, radius_deg=max_r))
+    )
+    right = catalog.withColumn("__cell", grid_cell(cat_ra, cat_dec, cell))
     if broadcast_catalog:
-        cat = catalog.withColumn(
-            "__cells", neighbor_cells(cat_ra, cat_dec, cell, radius_deg=max_r)
-        )
-        cat = cat.withColumn("__cell", F.explode("__cells")).drop("__cells")
-        left = df.withColumn("__cell", grid_cell(df_ra, df_dec, cell))
-        right = F.broadcast(cat)
-    else:
-        # Large x large: explode the STREAM side's neighborhood and key the
-        # catalog by its exact cell, the mirror image of the broadcast path.
-        # Pair coverage is direction-free — neighbor_cells(x) bounds the
-        # max RA offset of ANY partner within max_r of row x (worst-case
-        # |dec|+r), so "p's cells contain c's cell" iff "c's cells contain
-        # p's cell" (tests/test_operators.py proves set equality at the
-        # pole / RA wrap). Cost is what changes: the exploded fan-out
-        # (~(2k+1)x3 rows per point, k dec-adaptive) lands on the streamed
-        # probe side where it pipelines, while the UN-exploded catalog is
-        # what a runtime broadcast (AQE) or the build side of a hash join
-        # materializes. With the fan-out on the catalog side, AQE's
-        # SMJ->BHJ conversion at moderate scale built a hashed relation of
-        # every exploded copy on the driver — measured 4.39s -> 2.70s at
-        # sf0.1 (same session, identical 18,767 output rows) from this
-        # swap alone. Shuffle bytes in the true shuffled regime are
-        # identical either way (one side carries the fan-out in both).
-        left = df.withColumn(
-            "__cells", neighbor_cells(df_ra, df_dec, cell, radius_deg=max_r)
-        )
-        left = left.withColumn("__cell", F.explode("__cells")).drop("__cells")
-        right = catalog.withColumn("__cell", grid_cell(cat_ra, cat_dec, cell))
+        right = F.broadcast(right)
 
     sep = sky_sep(F.col(df_ra), F.col(df_dec), F.col(cat_ra), F.col(cat_dec))
     pairs = (

@@ -78,37 +78,34 @@ def mixture_sample(
     grows), and independent of any structure in the id allocation (see
     ``md5_bucket`` for why a multiplicative hash is NOT safe here).
 
-    Scale: the rates table is corpus-count-sized (tens of rows) and
-    broadcast; the survival filter is per-row arithmetic after the
-    broadcast join — one corpus scan, zero shuffles.
+    Scale: the rates table is corpus-count-sized (tens of rows), so it is
+    read ONCE, at call time, and becomes one literal ``CASE`` rate
+    expression: every later action over the result is one corpus scan
+    with per-row arithmetic — zero shuffles and no rates-side job. A
+    source listed twice raises ``ValueError`` here; rates rows with a NULL
+    source match nothing (as in an equi-join), and a NULL rate falls back
+    to ``default_permille``.
     """
-    r = rates.select(
-        F.col(source_col).alias("__src"), F.col(rate_col).alias("__rate")
-    )
-    # a duplicated source row in the rates config would duplicate every
-    # matching corpus row through the left join (output no longer a subset
-    # of df) — fail that row loudly instead (rates is config-sized, the
-    # window is over tens of rows)
-    from pyspark.sql import Window
-
-    n_dup = F.count(F.lit(1)).over(Window.partitionBy("__src"))
-    r = r.withColumn(
-        "__rate",
-        F.when(n_dup == 1, F.col("__rate")).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("mixture_sample: duplicate rates row for source "),
-                    F.col("__src").cast("string"),
-                )
-            ).cast("long")
-        ),
-    )
-    bucket = md5_bucket(key, 1000)
-    return (
-        df.join(F.broadcast(r), df[source_col] == F.col("__src"), "left")
-        .filter(bucket < F.coalesce(F.col("__rate"), F.lit(default_permille)))
-        .drop("__src", "__rate")
-    )
+    src_t = rates.schema[source_col].dataType
+    rate_t = rates.schema[rate_col].dataType
+    table: dict = {}
+    for src, v in rates.select(source_col, rate_col).collect():
+        if src is None:
+            continue
+        if src in table:
+            raise ValueError(f"mixture_sample: duplicate rates row for source {src!r}")
+        table[src] = v
+    # literals typed as the rates columns, so ``==`` coerces exactly as the
+    # equi-join against the rates table would
+    default = F.lit(default_permille)
+    rate = F  # F.when opens the CASE, Column.when adds each branch
+    for s, v in table.items():
+        rate = rate.when(
+            F.col(source_col) == F.lit(s).cast(src_t),
+            default if v is None else F.lit(v).cast(rate_t),
+        )
+    rate = default if rate is F else rate.otherwise(default)
+    return df.filter(md5_bucket(key, 1000) < rate)
 
 
 def _int_floor_div(num: Column, den: int) -> Column:

@@ -9,7 +9,9 @@ loop on the driver.
 Spark recomposition: the dedup-then-top-k is operators/topk.topk_by_key
 (distributed window + TakeOrderedAndProject — no pandas, no trick_par
 over-fetch heuristic); the median guard stays approxQuantile (same API); the
-notification fan-out is a sinks.NotificationSink, not a driver loop.
+notification fan-out is a sinks.NotificationSink, not a driver loop. The
+isEmpty guard folds into the quantile job: an input without scores yields
+no quantile.
 """
 
 from __future__ import annotations
@@ -42,12 +44,13 @@ def anomaly_notification(
     """
     for cond in filters or [f"not isnull({score_col})"]:
         df = df.filter(cond)
-    if df.isEmpty():
-        return df.limit(0)
-
     # night median guard (reference :170-172): approxQuantile, rel.err 0.05.
-    median = df.approxQuantile(score_col, [cutoff_quantile], 0.05)[0]
-    candidates = df.filter(F.col(score_col) <= F.lit(median))
+    # It returns [] when no row has a score, which doubles as the
+    # reference's isEmpty guard without a job of its own.
+    median = df.approxQuantile(score_col, [cutoff_quantile], 0.05)
+    if not median:
+        return df.limit(0)
+    candidates = df.filter(F.col(score_col) <= F.lit(median[0]))
 
     # most-anomalous = lowest score in the reference's convention (:176)
     return topk_by_key(

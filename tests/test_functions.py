@@ -418,3 +418,50 @@ def test_repetition_stats_known_values_and_oracle_parity(spark):
             r.doc_id, r.n_tok, r.top_tok_ppm, r.n_bigrams,
             r.dup_bigram_ppm, r.is_repetitive,
         ), did
+
+
+def test_combine_word_hashes_binds_word_hashes_once(spark):
+    """Filter pushdown inlines the word-hash array into a pushed predicate;
+    combine_word_hashes must still read it through ONE binding, so the
+    tokenizer runs once per gram-array reference, not once per shingle
+    position (the unbound form held 5 per reference). Hash values are the
+    Python formula's."""
+    from fink_filters_spark.functions.text import (
+        FP_MOD, WORD_COMBINE_BASE, combine_word_hashes, word_hashes,
+    )
+
+    tokenize = "split(lower(trim("
+    docs = spark.createDataFrame(
+        [(1, "a b a b a b"), (2, "one two three four"), (3, "x y"), (4, None)],
+        "doc_id long, text string",
+    )
+    wh = docs.select("doc_id", word_hashes("text").alias("__wh"))
+    grams = wh.select(
+        "doc_id", combine_word_hashes("__wh", 3, distinct=False).alias("__g")
+    )
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    one_ref = grams.filter(F.size(F.array_distinct("__g")) < 3).select("doc_id")
+    assert plan(one_ref).count(tokenize) == 1
+    # the repetition gate's shape references the gram array twice
+    gate = grams.filter(
+        F.size(F.array_distinct("__g")).cast("double")
+        < F.size("__g").cast("double") * 0.7
+    ).select("doc_id")
+    assert plan(gate).count(tokenize) == 2
+    assert [r.doc_id for r in gate.collect()] == [1]
+
+    got = {r["doc_id"]: (r["__wh"], r["__g"])
+           for r in wh.join(grams, "doc_id").collect()}
+    for doc_id, (h, g) in got.items():
+        if h is None or len(h) < 3:
+            assert g == []
+            continue
+        want = [
+            ((h[i] * WORD_COMBINE_BASE + h[i + 1]) % FP_MOD * WORD_COMBINE_BASE
+             + h[i + 2]) % FP_MOD
+            for i in range(len(h) - 2)
+        ]
+        assert g == want, doc_id

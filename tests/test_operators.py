@@ -62,12 +62,11 @@ def test_crossmatch_matches_bruteforce_including_poles(spark):
 
 
 def test_crossmatch_no_broadcast_matches_bruteforce_including_poles(spark):
-    """The large x large path (broadcast_catalog=False) explodes the STREAM
-    side's neighbor cells instead of the catalog's (round-10 optimization:
-    keeps the un-exploded side as the hash-join build / runtime-broadcast
-    relation). Pair coverage must be direction-free — prove it against
-    brute force on the same polar-heavy sky as the broadcast path, plus
-    the RA-wrap / dec=+90 edge fixture."""
+    """The large x large path (broadcast_catalog=False) shuffles both sides
+    on the cell key; the stream side explodes its neighbor cells, as in
+    the broadcast path. Prove it against brute force on the same
+    polar-heavy sky as the broadcast path, plus the RA-wrap / dec=+90
+    edge fixture."""
     rng = np.random.default_rng(11)
     ra, dec = _random_sky(rng, 500)
     cra, cdec = _random_sky(rng, 40)
@@ -1341,6 +1340,32 @@ def test_mixture_sample_rates_and_subset_invariance(spark):
         if int(hashlib.md5(str(i).encode()).hexdigest()[:5], 16) % 1000 < 500
     }
     assert got == expected
+
+    # a source listed twice fails at call time, before any action
+    dup = spark.createDataFrame(
+        [("s0", 1000), ("s1", 500), ("s0", 10)], "source string, rate_permille int"
+    )
+    with pytest.raises(ValueError, match="duplicate rates row"):
+        mixture_sample(df, dup, key="doc_id", source_col="source")
+    # a NULL-source rates row matches nothing (two of them are no duplicate),
+    # a NULL rate keeps the default, and a NULL-source corpus row keeps the
+    # default too
+    odd = spark.createDataFrame(
+        [("s0", 1000), ("s1", 500), ("s2", 125), (None, 0), (None, 7), ("s3", None)],
+        "source string, rate_permille int",
+    )
+    with_null = df.unionByName(
+        spark.createDataFrame([(n + i, None) for i in range(400)],
+                              "doc_id long, source string")
+    )
+    got = {r.doc_id for r in mixture_sample(
+        with_null, odd, key="doc_id", source_col="source", default_permille=250
+    ).collect()}
+    assert {i for i in got if i < n} == {r.doc_id for r in kept.collect()}
+    assert got - set(range(n)) == {
+        i for i in range(n, n + 400)
+        if int(hashlib.md5(str(i).encode()).hexdigest()[:5], 16) % 1000 < 250
+    }
 
 
 def test_bpe_train_matches_sennrich_example(spark):
