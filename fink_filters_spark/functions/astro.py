@@ -152,9 +152,9 @@ def dc_mag_err(magpsf, sigmapsf, magnr, sigmagnr, isdiffpos) -> Column:
 def grid_cell(ra, dec, cell_deg: float) -> Column:
     """Integer sky-cell id on a (ra, dec) grid of ``cell_deg`` degrees.
 
-    This is the bucketing key for the cone join (SURVEY §2.D / §4.1): the
-    catalog is keyed by its own cell, and a candidate's cell must be one of
-    the stream point's ``neighbor_cells``. A
+    This is the bucketing key for the broadcast cone join (SURVEY §2.D /
+    §4.1): both sides are assigned cells; candidates must share a cell with
+    the catalog point or one of its 8 neighbors (``neighbor_cells``). A
     HEALPix index would equalize cell areas at the poles; an integer grid has
     identical join semantics and is expressible natively.
     """
@@ -177,20 +177,15 @@ def grid_cell(ra, dec, cell_deg: float) -> Column:
 
 def neighbor_cells(ra, dec, cell_deg: float, radius_deg: float | None = None) -> Column:
     """All grid cells that can contain a point within ``radius_deg`` of
-    (ra, dec), each once — the crossmatch explodes this on the stream side
-    so it joins the catalog's own ``grid_cell`` on a single equality key.
+    (ra, dec) — the crossmatch explodes this on its smaller side so the
+    other side joins on its own ``grid_cell``, a single equality key.
 
     The dec span is ±ceil(r/cell) cells; the ra span widens with latitude
     (meridians converge): from the haversine identity,
     sin(Δra/2) <= sin(r/2) / cos(|dec|+r), so the ra half-width in degrees is
     2·asin(min(1, sin(r/2)/cos(|dec|+r))), padded one cell for grid
-    quantization. Near the pole (cos -> 0) this degrades to the full ring.
-
-    Each dec band is one contiguous ``sequence`` of cell ids, split in two
-    where it crosses the RA wrap, and a band clamped onto an edge band
-    already listed is left out — so the array is duplicate-free by
-    construction and the whole expression compiles to generated code (no
-    lambda, no ``array_distinct``).
+    quantization. Near the pole (cos -> 0) this degrades to the full ring,
+    which is the correct fallback.
     """
     ra_c = (F.col(ra) if isinstance(ra, str) else ra)
     dec_c = (F.col(dec) if isinstance(dec, str) else dec)
@@ -216,26 +211,16 @@ def neighbor_cells(ra, dec, cell_deg: float, radius_deg: float | None = None) ->
         (F.ceil(ra_half_deg / F.lit(cell_deg)) + 1).cast("long"),
     )
 
-    # ra cells ix-kx .. ix+kx (mod nx): the full ring when that span covers
-    # it, else [lo, hi] with the part past nx-1 wrapped onto [0, hi-nx]
-    full = 2 * kx + 1 >= nx
-    lo = F.when(full, F.lit(0)).otherwise(F.pmod(ix - kx, F.lit(nx)))
-    hi = F.when(full, F.lit(nx - 1)).otherwise(lo + 2 * kx)
-    none = F.array().cast("array<bigint>")
+    def _ring(base):
+        # factory: the HOF lambda must take exactly one parameter
+        # (Spark binds lambda variables by Python signature arity)
+        return lambda dx: base + F.pmod(ix + dx, F.lit(nx))
 
-    bands = []
+    per_band = []
     for dy in range(-ky, ky + 1):
-        y = iy + dy
-        base = F.greatest(F.lit(0), F.least(F.lit(ny - 1), y)) * nx
-        band = F.concat(
-            F.sequence(base + lo, base + F.least(hi, F.lit(nx - 1))),
-            F.when(hi >= nx, F.sequence(base, base + hi - nx)).otherwise(none),
-        )
-        if dy > -ky:
-            # skip a band that clamps onto the same edge band as the one before
-            band = F.when((y >= 1) & (y <= ny - 1), band).otherwise(none)
-        bands.append(band)
-    return F.concat(*bands)
+        jy = F.greatest(F.lit(0), F.least(F.lit(ny - 1), iy + dy))
+        per_band.append(F.transform(F.sequence(-kx, kx), _ring(jy * nx)))
+    return F.array_distinct(F.flatten(F.array(*per_band)))
 
 
 def register_sql_functions(spark) -> list[str]:

@@ -8,20 +8,22 @@ _sky; ``ztf/filter_known_tde/filter.py:65-90`` fixed-radius nearest;
 re-reads the catalog per batch. Spark-first design:
 
 1. bucket both sides on an integer sky grid (functions.astro.grid_cell);
-   each stream row explodes the cells its cone can reach
-   (functions.astro.neighbor_cells) and the catalog keeps its own cell, so
+   the smaller side explodes the cells its cones can reach
+   (functions.astro.neighbor_cells) and the other keeps its own cell, so
    the join is on a SINGLE equality key — Catalyst plans a
-   BroadcastHashJoin whose build side is the un-exploded catalog, no
-   cartesian;
+   BroadcastHashJoin with the catalog as build side, no cartesian;
 2. refine with the exact haversine predicate (native trig, codegen'd);
 3. nearest-match semantics via ``row_number() over (partition by stream-row
    order by separation)`` — the window only runs over matched pairs (tiny).
 
 At 100 TB this is shuffle-free on the stream side: the catalog (10²-10⁵ rows
-per SURVEY §1.1) broadcasts one row per source — exploding it instead would
-build and ship every source ≥15 times per action (kx ≥ 2 when cell =
-radius); the stream's fan-out pipelines through the probe. Grid-cell hashing
-bounds the candidate pairs per alert to its neighbor cells.
+per SURVEY §1.1) explodes its ≥15 cells per source (kx ≥ 2 when cell =
+radius) once into the broadcast, and each alert probes with its own cell.
+When the catalog is the larger side (a night's few hundred alerts against
+a survey catalog), the stream explodes instead and the catalog broadcasts
+one row per source; the choice reads Catalyst's size estimates, no job.
+Grid-cell hashing bounds the candidate pairs per alert to its neighbor
+cells.
 """
 
 from __future__ import annotations
@@ -71,8 +73,8 @@ def crossmatch(
     regions (the galactic plane) make hot cells; AQE's skew-join split
     handles those at runtime, and a finer ``cell_deg`` (>= radius / k with
     a (2k+1)^2 neighborhood would need explicit support; here keep
-    cell >= radius) trades explode fan-out against cell occupancy. The flag
-    only adds or drops the broadcast hint: both regimes key the same sides.
+    cell >= radius) trades explode fan-out against cell occupancy. The
+    stream explodes there; under the broadcast the smaller side does.
     """
     if how not in ("nearest", "all", "left", "anti"):
         raise ValueError(
@@ -100,18 +102,33 @@ def crossmatch(
         radius_col = radius_deg
     cell = cell_deg or max_r
 
-    # The STREAM side explodes its neighbor cells and the catalog is keyed
-    # by its own cell, in both regimes: the un-exploded catalog is the
-    # small build side (broadcast or hashed), and the fan-out lands on the
-    # probe side, where it pipelines. Pair coverage is direction-free —
-    # neighbor_cells(x) bounds the max RA offset of ANY partner within
-    # max_r of row x (worst-case |dec|+r), so "p's cells contain c's cell"
-    # iff "c's cells contain p's cell" (tests/test_properties.py checks
-    # both regimes against brute force at the pole and the RA wrap).
-    left = df.withColumn(
-        "__cell", F.explode(neighbor_cells(df_ra, df_dec, cell, radius_deg=max_r))
-    )
-    right = catalog.withColumn("__cell", grid_cell(cat_ra, cat_dec, cell))
+    # One side explodes the cells its rows' cones can reach (neighbor_cells)
+    # and the other keeps its own grid_cell, so the join is one equality.
+    # Pair coverage is direction-free — neighbor_cells(x) bounds the max RA
+    # offset of ANY partner within max_r of row x (worst-case |dec|+r), so
+    # "p's cells contain c's cell" iff "c's cells contain p's cell"
+    # (tests/test_properties.py checks every side choice against brute
+    # force at the pole and the RA wrap). Cost is what changes: the side
+    # that explodes carries a 15-85x fan-out.
+    # - Shuffled regime: the stream explodes and the un-exploded catalog is
+    #   what a runtime broadcast (AQE) or a hash-join build materializes;
+    #   the catalog fan-out made AQE build a hashed relation of every copy
+    #   on the driver (sf0.1: 4.39 s -> 2.70 s from this swap alone).
+    # - Broadcast regime: the smaller side explodes. Usually that is the
+    #   catalog, exploded once into the broadcast; the fan-out on a
+    #   100k-row stream made xmatch_cone ~4x slower. A catalog larger than
+    #   the stream (a night's 800 alerts against 20k sources) would instead
+    #   build and ship its every source 15+ times per action.
+    if not broadcast_catalog or _smaller(df, catalog):
+        left = df.withColumn(
+            "__cell", F.explode(neighbor_cells(df_ra, df_dec, cell, radius_deg=max_r))
+        )
+        right = catalog.withColumn("__cell", grid_cell(cat_ra, cat_dec, cell))
+    else:
+        left = df.withColumn("__cell", grid_cell(df_ra, df_dec, cell))
+        right = catalog.withColumn(
+            "__cell", F.explode(neighbor_cells(cat_ra, cat_dec, cell, radius_deg=max_r))
+        )
     if broadcast_catalog:
         right = F.broadcast(right)
 
@@ -132,6 +149,20 @@ def crossmatch(
         best = _nearest(pairs, df_id, tiebreak).select(df_id, "sep_deg", *cat_cols)
         return df.join(best, on=df_id, how="left")
     return _nearest(pairs, df_id, tiebreak)
+
+
+def _smaller(a: DataFrame, b: DataFrame) -> bool:
+    """Whether Catalyst estimates ``a`` smaller than ``b`` — the size
+    statistic it compares with autoBroadcastJoinThreshold, read from the
+    optimized plans without running a job. An unbounded (streaming) side
+    is never the smaller."""
+    if a.isStreaming or b.isStreaming:
+        return not a.isStreaming
+
+    def size(df: DataFrame) -> int:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+    return size(a) < size(b)
 
 
 def _nearest(pairs: DataFrame, df_id: str, tiebreak: str | None = None) -> DataFrame:

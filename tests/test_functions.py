@@ -445,13 +445,22 @@ def test_combine_word_hashes_binds_word_hashes_once(spark):
 
     one_ref = grams.filter(F.size(F.array_distinct("__g")) < 3).select("doc_id")
     assert plan(one_ref).count(tokenize) == 1
-    # the repetition gate's shape references the gram array twice
+    # a filter that references the gram array twice inlines it twice: the
+    # repetition gate's shape tokenizes once per reference ...
     gate = grams.filter(
         F.size(F.array_distinct("__g")).cast("double")
         < F.size("__g").cast("double") * 0.7
     ).select("doc_id")
     assert plan(gate).count(tokenize) == 2
     assert [r.doc_id for r in gate.collect()] == [1]
+    # ... and once when the gate binds the array itself
+    bound = grams.filter(F.element_at(F.transform(
+        F.array("__g"),
+        lambda g: F.size(F.array_distinct(g)).cast("double")
+        < F.size(g).cast("double") * 0.7,
+    ), 1)).select("doc_id")
+    assert plan(bound).count(tokenize) == 1
+    assert [r.doc_id for r in bound.collect()] == [1]
 
     got = {r["doc_id"]: (r["__wh"], r["__g"])
            for r in wh.join(grams, "doc_id").collect()}

@@ -26,9 +26,9 @@ def _jobs(spark, fn) -> int:
 
 
 def test_mixture_sample_actions_launch_no_rates_job(spark):
-    """The rates are read once, when mixture_sample is called: two later
-    actions over its output launch exactly the jobs the same actions over
-    the bare corpus do."""
+    """The rates are read once, when mixture_sample is called (one job
+    there): two later actions over its output launch exactly the jobs the
+    same actions over the bare corpus do."""
     from fink_filters_spark.operators.sample import mixture_sample
 
     docs = spark.range(300).select(
@@ -38,10 +38,26 @@ def test_mixture_sample_actions_launch_no_rates_job(spark):
     rates = spark.createDataFrame(
         [("s0", 1000), ("s1", 500)], "source string, rate_permille int"
     )
-    mixed = mixture_sample(docs, rates, key="doc_id", source_col="source",
-                           default_permille=800)
+    built = []
+    assert _jobs(spark, lambda: built.append(mixture_sample(
+        docs, rates, key="doc_id", source_col="source", default_permille=800
+    ))) == 1
     bare = _jobs(spark, lambda: (docs.count(), docs.collect()))
-    assert _jobs(spark, lambda: (mixed.count(), mixed.collect())) == bare
+    assert _jobs(spark, lambda: (built[0].count(), built[0].collect())) == bare
+
+
+def test_crossmatch_side_choice_runs_no_job(spark):
+    """The broadcast regime picks the side to explode from Catalyst's size
+    estimates; building the join must not run a job to find out."""
+    from fink_filters_spark.operators.crossmatch import crossmatch
+
+    stream = spark.range(50).select(
+        F.col("id").alias("aid"), (F.col("id") * 7.0).alias("ra"), F.lit(10.0).alias("dec")
+    )
+    cat = spark.createDataFrame(
+        [(1, 10.0, 10.0), (2, 200.0, -5.0)], "cid long, cat_ra double, cat_dec double"
+    )
+    assert _jobs(spark, lambda: crossmatch(stream, cat, "aid", 1.0)) == 0
 
 
 def test_anomaly_notification_job_budget(spark):

@@ -63,10 +63,11 @@ def test_crossmatch_matches_bruteforce_including_poles(spark):
 
 def test_crossmatch_no_broadcast_matches_bruteforce_including_poles(spark):
     """The large x large path (broadcast_catalog=False) shuffles both sides
-    on the cell key; the stream side explodes its neighbor cells, as in
-    the broadcast path. Prove it against brute force on the same
-    polar-heavy sky as the broadcast path, plus the RA-wrap / dec=+90
-    edge fixture."""
+    on the cell key and explodes the STREAM side's neighbor cells, where
+    the broadcast path explodes the smaller side (here the catalog).
+    Pair coverage must be direction-free — prove it against brute force on
+    the same polar-heavy sky as the broadcast path, plus the RA-wrap /
+    dec=+90 edge fixture."""
     rng = np.random.default_rng(11)
     ra, dec = _random_sky(rng, 500)
     cra, cdec = _random_sky(rng, 40)

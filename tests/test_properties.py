@@ -967,38 +967,6 @@ def test_record_batch_roundtrip_property(records, base_offset):
     assert got == want
 
 
-def _neighbor_cells_transform(ra, dec, cell_deg, radius_deg):
-    """The earlier ``neighbor_cells``: one ``transform`` over ``-kx..kx``
-    per dec band, deduplicated with ``array_distinct`` — the reference for
-    the cell SET of the sequence-range form."""
-    from fink_filters_spark.functions.astro import _D2R, _R2D
-
-    ra_c, dec_c, r = F.col(ra), F.col(dec), float(radius_deg)
-    nx = int(math.ceil(360.0 / cell_deg))
-    ny = int(math.ceil(180.0 / cell_deg))
-    ky = int(math.ceil(r / cell_deg))
-    ix = F.floor(ra_c / F.lit(cell_deg)).cast("long")
-    iy = F.floor((dec_c + 90.0) / F.lit(cell_deg)).cast("long")
-    worst_dec = F.abs(dec_c) + F.lit(r)
-    sin_half = F.when(worst_dec >= 90.0, F.lit(1.0)).otherwise(
-        F.lit(math.sin(r / 2.0 * _D2R)) / F.cos(worst_dec * F.lit(_D2R))
-    )
-    ra_half = 2 * F.asin(F.least(F.lit(1.0), sin_half)) * F.lit(_R2D)
-    kx = F.least(F.lit(nx // 2), (F.ceil(ra_half / F.lit(cell_deg)) + 1).cast("long"))
-
-    def ring(base):
-        return lambda dx: base + F.pmod(ix + dx, F.lit(nx))
-
-    bands = [
-        F.transform(
-            F.sequence(-kx, kx),
-            ring(F.greatest(F.lit(0), F.least(F.lit(ny - 1), iy + dy)) * nx),
-        )
-        for dy in range(-ky, ky + 1)
-    ]
-    return F.array_distinct(F.flatten(F.array(*bands)))
-
-
 def _haversine_deg(ra1, dec1, ra2, dec2):
     d2r = math.pi / 180
     sd = math.sin((dec2 - dec1) * d2r / 2)
@@ -1033,13 +1001,15 @@ _DEC = st.one_of(
     frac=1.0,
 )
 def test_crossmatch_paths_match_bruteforce(spark, pts, offs, cell, frac):
-    """Both ``broadcast_catalog`` regimes return the same rows AND schema
-    (``all`` and ``nearest``), and their pairs are exactly the haversine
-    brute force: RA wrap and negative RA, dec = ±90, and a cell size that
-    does not divide 360. The catalog sits at offsets (in units of the
-    cell) from the stream points, so cones straddle cell borders. The
-    stream-side cells equal the earlier transform expression's set."""
-    from fink_filters_spark.functions.astro import neighbor_cells
+    """Every way the crossmatch can key its sides — shuffled, and
+    broadcast with either the catalog or the stream exploding its
+    neighbor cells — returns the same rows AND schema (``all`` and
+    ``nearest``), and the pairs are exactly the haversine brute force: RA
+    wrap and negative RA, dec = ±90, and a cell size that does not divide
+    360. The catalog sits at offsets (in units of the cell) from the
+    stream points, so cones straddle cell borders."""
+    from unittest import mock
+
     from fink_filters_spark.operators.crossmatch import crossmatch
 
     radius = cell * frac
@@ -1055,23 +1025,21 @@ def test_crossmatch_paths_match_bruteforce(spark, pts, offs, cell, frac):
     )
     cat = spark.createDataFrame(cat_rows, "cid long, cat_ra double, cat_dec double")
 
-    cells = stream.select(
-        neighbor_cells("ra", "dec", cell, radius_deg=radius).alias("n"),
-        _neighbor_cells_transform("ra", "dec", cell, radius).alias("o"),
-    ).collect()
-    for r in cells:
-        assert len(r.n) == len(set(r.n)) and set(r.n) == set(r.o)
-
-    def run(how, bc):
-        out = crossmatch(stream, cat, df_id="aid", radius_deg=radius,
-                         cell_deg=cell, how=how, tiebreak="cid",
-                         broadcast_catalog=bc)
-        return out.schema, sorted(tuple(r) for r in out.collect())
+    def run(how, bc, stream_smaller=None):
+        # stream_smaller fixes the broadcast regime's size-based side choice
+        with mock.patch("fink_filters_spark.operators.crossmatch._smaller",
+                        return_value=stream_smaller):
+            out = crossmatch(stream, cat, df_id="aid", radius_deg=radius,
+                             cell_deg=cell, how=how, tiebreak="cid",
+                             broadcast_catalog=bc)
+            return out.schema, sorted(tuple(r) for r in out.collect())
 
     for how in ("all", "nearest"):
-        assert run(how, True) == run(how, False), how
+        shuffled = run(how, False)
+        assert run(how, True, stream_smaller=True) == shuffled, how
+        assert run(how, True, stream_smaller=False) == shuffled, how
 
-    got = {(r[0], r[3]) for r in run("all", True)[1]}
+    got = {(r[0], r[3]) for r in run("all", False)[1]}
     for a, (ra, dec) in enumerate(pts):
         for cid, cra, cdec in cat_rows:
             sep = _haversine_deg(ra, dec, cra, cdec)
