@@ -41,14 +41,12 @@ def main() -> None:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n0 = docs.count()
 
-    # ---- 0. source-mixture sampling (broadcast rates dim, zero shuffle) ----
+    # ---- 0. source-mixture sampling (literal rates, no job, zero shuffle) --
     from fink_filters_spark.operators.sample import mixture_sample
 
-    rates = spark.createDataFrame(
-        [("src0", 1000), ("src1", 500)], "source string, rate_permille int"
-    )
     docs_mixed = mixture_sample(
-        docs, rates, key="doc_id", source_col="source", default_permille=800
+        docs, {"src0": 1000, "src1": 500}, key="doc_id", source_col="source",
+        default_permille=800,
     )
     n0b = docs_mixed.count()
 

@@ -9,6 +9,8 @@ same verdict) and at 100 TB (no RNG state, pure pushable predicate).
 
 from __future__ import annotations
 
+from collections.abc import Mapping
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 
@@ -60,49 +62,58 @@ def md5_bucket(key: Column | str, modulus: int, n_hex: int = 5) -> Column:
 
 def mixture_sample(
     df: DataFrame,
-    rates: DataFrame,
+    rates: DataFrame | Mapping,
     key: str,
     source_col: str,
     rate_col: str = "rate_permille",
     default_permille: int = 1000,
 ) -> DataFrame:
     """Deterministic dataset-mixture sampling: down-weight each source to a
-    target rate (per-mille) from a small rates dimension — the "mix N
-    corpora at fixed proportions" step of a pretraining data pipeline.
+    target rate (per-mille) — the "mix N corpora at fixed proportions" step
+    of a pretraining data pipeline. ``rates`` is a ``{source: rate}``
+    mapping, or a small rates DataFrame with ``source_col`` and
+    ``rate_col`` columns.
 
     A row survives iff ``md5_bucket(key, 1000) < rate(source)``; sources
-    absent from the rates table keep ``default_permille``. The md5 bucket
+    absent from the rates keep ``default_permille``. The md5 bucket
     makes the verdict a pure per-row predicate — reproducible across
     retries/restarts (same property as ``uniform_sample``), no RNG state,
     subset-invariant (a doc keeps the same fate when the corpus around it
     grows), and independent of any structure in the id allocation (see
     ``md5_bucket`` for why a multiplicative hash is NOT safe here).
 
-    Scale: the rates table is corpus-count-sized (tens of rows), so it is
-    read ONCE, at call time, and becomes one literal ``CASE`` rate
-    expression: every later action over the result is one corpus scan
-    with per-row arithmetic — zero shuffles and no rates-side job. A
-    source listed twice raises ``ValueError`` here; rates rows with a NULL
-    source match nothing (as in an equi-join), and a NULL rate falls back
-    to ``default_permille``.
+    Scale: the rates are corpus-count-sized (tens of entries) and become
+    one literal ``CASE`` rate expression: every action over the result is
+    one corpus scan with per-row arithmetic — zero shuffles and no
+    rates-side job. A mapping costs no Spark job at all; a DataFrame is
+    read once, at call time (one job), and a source listed twice there
+    raises ``ValueError``. A NULL source matches nothing (as in an
+    equi-join), and a NULL rate falls back to ``default_permille``.
     """
-    src_t = rates.schema[source_col].dataType
-    rate_t = rates.schema[rate_col].dataType
-    table: dict = {}
-    for src, v in rates.select(source_col, rate_col).collect():
-        if src is None:
-            continue
-        if src in table:
-            raise ValueError(f"mixture_sample: duplicate rates row for source {src!r}")
-        table[src] = v
-    # literals typed as the rates columns, so ``==`` coerces exactly as the
-    # equi-join against the rates table would
+    src_t = rate_t = None
+    if isinstance(rates, DataFrame):
+        # literals typed as the rates columns, so ``==`` coerces exactly as
+        # the equi-join against the rates table would
+        src_t = rates.schema[source_col].dataType
+        rate_t = rates.schema[rate_col].dataType
+        table: dict = {}
+        for src, v in rates.select(source_col, rate_col).collect():
+            if src in table and src is not None:
+                raise ValueError(f"mixture_sample: duplicate rates row for source {src!r}")
+            table[src] = v
+    else:
+        table = dict(rates)
+    table.pop(None, None)  # a NULL source matches nothing
+
+    def typed(v, t):
+        return F.lit(v) if t is None else F.lit(v).cast(t)
+
     default = F.lit(default_permille)
     rate = F  # F.when opens the CASE, Column.when adds each branch
     for s, v in table.items():
         rate = rate.when(
-            F.col(source_col) == F.lit(s).cast(src_t),
-            default if v is None else F.lit(v).cast(rate_t),
+            F.col(source_col) == typed(s, src_t),
+            default if v is None else typed(v, rate_t),
         )
     rate = default if rate is F else rate.otherwise(default)
     return df.filter(md5_bucket(key, 1000) < rate)

@@ -201,13 +201,10 @@ def pipe_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-mille rate (src0 keep-all ... src3 1/8, everything else 70%) via
     the deterministic md5-bucket survival test, then report the post-mix
     per-source composition. operators/sample.py ``mixture_sample``:
-    the rates are read once into a literal CASE rate, zero-shuffle filter."""
+    the rates mapping becomes a literal CASE rate, zero-shuffle filter."""
     docs = load_table(spark, sf_dir, "documents")
-    rates = spark.createDataFrame(
-        [(k, v) for k, v in MIX_RATES.items()], "source string, rate_permille int"
-    )
     kept = mixture_sample(
-        docs, rates, key="doc_id", source_col="source",
+        docs, MIX_RATES, key="doc_id", source_col="source",
         default_permille=MIX_DEFAULT,
     )
     return kept.groupBy("source").agg(

@@ -27,6 +27,16 @@ BUILDER_CONF = {
     # One night pass uses ~100 distinct generated classes; Spark's default
     # LRU of 100 evicted each before the next pass, which recompiled it.
     "spark.sql.codegen.cache.maxEntries": "1000",
+    # Driver JIT: C2 promotion thresholds 4x HotSpot's, so C1 still compiles
+    # everything early but C2 only compiles code that stays hot (the
+    # per-batch planning and scheduling path, generated row loops), not
+    # planner code that runs a few times per pass. defaultJavaOptions, not
+    # extraJavaOptions: the launcher prepends it to a caller's
+    # extraJavaOptions instead of being replaced by it.
+    "spark.driver.defaultJavaOptions": (
+        "-XX:Tier4InvocationThreshold=20000 -XX:Tier4MinInvocationThreshold=2400"
+        " -XX:Tier4CompileThreshold=60000 -XX:Tier4BackEdgeThreshold=160000"
+    ),
 }
 
 # Dynamic (session-settable) confs applied even when we are handed an

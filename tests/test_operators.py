@@ -1369,6 +1369,38 @@ def test_mixture_sample_rates_and_subset_invariance(spark):
     }
 
 
+def test_mixture_sample_mapping_and_frame_rates_agree(spark):
+    """A ``{source: rate}`` mapping keeps the same rows as the rates
+    DataFrame it mirrors, with a NULL rate (default), a source missing
+    from the rates (default) and NULL-source corpus rows (default)."""
+    import hashlib
+
+    from fink_filters_spark.operators.sample import mixture_sample
+
+    n = 2000
+    docs = spark.createDataFrame(
+        [(i, None if i % 10 == 9 else f"s{i % 4}") for i in range(n)],
+        "doc_id long, source string",
+    )
+    frame = spark.createDataFrame(
+        [("s0", 1000), ("s1", 500), ("s2", None)], "source string, rate_permille int"
+    )
+    mapping = {"s0": 1000, "s1": 500, "s2": None}
+
+    def kept(rates):
+        return sorted(r.doc_id for r in mixture_sample(
+            docs, rates, key="doc_id", source_col="source", default_permille=250
+        ).collect())
+
+    rate = {"s0": 1000, "s1": 500}
+    expected = [
+        i for i in range(n)
+        if int(hashlib.md5(str(i).encode()).hexdigest()[:5], 16) % 1000
+        < (250 if i % 10 == 9 else rate.get(f"s{i % 4}", 250))
+    ]
+    assert kept(mapping) == kept(frame) == expected
+
+
 def test_bpe_train_matches_sennrich_example(spark):
     """BPE trainer golden on the classic worked example (Sennrich et al.
     2016 §3.2 uses {low, lower, newest, widest}): with end-of-word
