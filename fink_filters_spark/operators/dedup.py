@@ -1,15 +1,17 @@
 """Deduplication operators for large-scale training-data pipelines.
 
 Five families. Set math (joins, aggregations, band generation) is native
-Catalyst; the Python stages are the Arrow-vectorized gram kernels of
-``operators/grams.py`` — per-character polynomial hashing is exactly the
+Catalyst; the Python stages are the block-pair cosine matmul and the
+Arrow-vectorized gram kernels of ``operators/grams.py`` — per-character
+polynomial hashing is exactly the
 workload where interpreted HOF lambdas lose to a NumPy batch kernel
 (pyspark guide: "Pandas UDFs beat row-at-a-time by 10-100x"); pure-
 Catalyst references (``_hashed_shingled_native``,
 ``winnowing_fingerprints_native``, ``simhash_agg``) keep the no-Python
 path available and bit-identical. Every text operator here accepts any
 id type; only ``sparse_cosine_pairs`` and ``embedding_pairs`` need
-integer ids.
+integer ids (anything else raises ``TypeError`` up front) and return
+them in the input's type.
 
 - exact        — normalize + hash-groupBy; one shuffle on the text hash.
 - n-gram Jaccard — exact set similarity over word n-gram shingles via an
@@ -26,8 +28,11 @@ integer ids.
   distance <= k. Candidates via 4x12-bit band join: Hamming<=3 guarantees
   >=1 identical band (pigeonhole), so the band join is lossless vs the
   cross join.
-- embedding cosine — quantized-integer cosine over an array<float> column
-  (see functions/vectors.py); exact all-pairs here, LSH/IVF variants in
+- cosine       — embedding cosine over quantized array<float> vectors
+  (functions/vectors.py) and sparse TF-IDF cosine share one block-pair
+  int64 matmul kernel (``_block_cosine_pairs``); sparse cosine takes it
+  when the vocabulary is small and an inverted-index posting join
+  otherwise. Exact all-pairs here; LSH/IVF variants in
   operators/similarity.py for the 100 TB path.
 """
 
@@ -1074,30 +1079,19 @@ def semantic_dedup(
     at 100 TB — the O(N^2) comparison is confined to within-cluster pairs
     (expected cluster size N/k), expressed as a self equi-join keyed by the
     centroid id: one shuffle on ``centroid_id``, no broadcast of corpus
-    state, AQE splits skewed clusters. Centroid assignment is inlined (the
-    same broadcast-NLJ + per-vector window as ``ivf_assign``) so the
-    corpus is scanned and quantized ONCE, with the quantized vector and
-    norm riding through the assignment window instead of re-deriving them
-    in a second scan + join. Quantized-integer cosine keeps the math
+    state, AQE splits skewed clusters. Centroid assignment is
+    ``ivf_assign``'s (``similarity._nearest_centroids``), with the
+    quantized vector and norm riding through its window, so the corpus is
+    scanned and quantized ONCE. Quantized-integer cosine keeps the math
     bit-identical to the DuckDB oracle; zero-norm vectors get NULL cosine
     (see ``_cos``), so they neither error under ANSI nor mark anything as
     duplicate.
     """
-    from pyspark.sql import Window
-
-    from .similarity import _cos, _quantized
+    from .similarity import _cos, _nearest_centroids, _quantized
 
     q = _quantized(corpus, c_id, c_vec, "vec_id", "__v", "__nsq")
     cents = _quantized(centroids, cent_id, cent_vec, "centroid_id", "__kv", "__kn")
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc(_cos("__v", "__kv", "__nsq", "__kn")), F.asc("centroid_id")
-    )
-    j = (
-        q.join(F.broadcast(cents))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("vec_id", "centroid_id", "__v", "__nsq")
-    )
+    j = _nearest_centroids(q, cents, "vec_id", "__v", "__nsq").drop("cosine")
     # cache barrier: j feeds both sides of the pair self-join AND the final
     # verdict join — without it the scan+quantize+assign subtree executes
     # three times (same precedent as jaccard_pairs' grp cache). The cache
@@ -1681,70 +1675,50 @@ def connected_components(
         edges.unpersist()
 
 
-def embedding_pairs(
-    df: DataFrame, id_col: str, vec_col: str, tau: float, n_blocks: int = 16
-) -> DataFrame:
-    """Exact embedding-cosine near-dup pairs (id_a < id_b, cosine >= tau).
+#: Block-pair cosine layout: rows go to ``_N_BLOCKS`` blocks by id, and
+#: each block pair's matmul runs in ``_TILE_A`` x ``_TILE_B`` tiles, so
+#: peak task memory is one tile of doubles whatever the block size.
+_N_BLOCKS = 16
+_TILE_A, _TILE_B = 1024, 4096
 
-    Brute-force all-pairs as a DISTRIBUTED block-matrix join — no driver
-    collect, no corpus broadcast: rows are assigned to ``n_blocks`` blocks
-    by id, each block is packed into one row (ids + quantized vectors), and
-    the B*(B+1)/2 unordered block pairs are formed by a tiny nested-loop
-    join over B rows per side. Each block-pair task then does ONE int64
-    NumPy matmul (exact integer dot products) instead of interpreted array
-    folds. Every unordered row pair lands in exactly one block pair, so the
-    result is complete and duplicate-free.
 
-    Exactness/parity: integer dot products are exact; cosine is the same
-    deterministic double expression (dot / sqrt(na) / sqrt(nb)) as the SQL
-    oracle; rounding uses floor(x*1e6 + 0.5) which is precisely DuckDB's
-    round() for positive doubles.
+def _block_cosine_pairs(vecs: DataFrame, tau: float) -> DataFrame:
+    """All pairs (id_a < id_b, cosine >= tau, unrounded) over
+    ``vecs`` = (__id integral, __q array<long>) as a distributed block
+    matmul — no driver collect, no corpus broadcast. Rows are packed into
+    ``_N_BLOCKS`` block rows by ``pmod(id)``; the B(B+1)/2 unordered block
+    pairs come from a nested-loop join over B rows per side, and each pair
+    is one tiled int64 NumPy matmul. Every unordered row pair lands in
+    exactly one block pair, so the result is complete and duplicate-free.
 
-    Scale: pick ``n_blocks`` so one block (~N/B rows x dim x 8 bytes) fits
-    comfortably in a task (e.g. B ~ N*dim*8 / 256 MB); work is B^2/2 matmul
-    tasks — the unavoidable all-pairs FLOPs, now spread across the cluster
-    instead of bounded by driver RAM. Inside each block pair the cosine
-    matrix is computed in FIXED-ROW TILES (``tile`` rows of A at a time),
-    so peak task memory is tile x |block| doubles — independent of how big
-    blocks get — never the full |block|^2 matrix. For sub-quadratic
-    candidate generation use operators/similarity.py (IVF / LSH blocking).
-    """
+    Exactness: dot products and squared norms are exact int64; the cosine
+    is the SQL oracles' double expression ``dot / sqrt(n_lo) / sqrt(n_hi)``
+    with the SMALLER id's norm first, chosen per pair because block order
+    is not id order (the two division orders can differ by one ulp at
+    tau). A zero norm gives NaN, which fails ``>= tau`` — the pairs the
+    oracles' ``na > 0 AND nb > 0`` guards drop."""
     from collections.abc import Iterator
 
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    q = _spread(df).select(F.col(id_col).alias("__id"), quantize_vec(vec_col).alias("__q"))
     blocks = (
-        q.withColumn("__b", F.pmod(F.col("__id"), F.lit(n_blocks)))
+        vecs.withColumn("__b", F.pmod(F.col("__id"), F.lit(_N_BLOCKS)))
         .groupBy("__b")
         .agg(F.collect_list(F.struct("__id", "__q")).alias("__rows"))
     )
     a = blocks.select(F.col("__b").alias("__ba"), F.col("__rows").alias("__ra"))
     b = blocks.select(F.col("__b").alias("__bb"), F.col("__rows").alias("__rb"))
-    # unordered block pairs (ba <= bb): B rows x B rows nested-loop join —
-    # trivially small; the heavy work happens inside the per-pair kernel
+    # B x B rows: trivially small; the heavy work is the per-pair kernel
     joined = a.join(b, F.col("__ba") <= F.col("__bb")).repartition(
-        max(df.sparkSession.sparkContext.defaultParallelism, n_blocks)
-    )
-
-    out_schema = StructType(
-        [
-            StructField("id_a", LongType()),
-            StructField("id_b", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
+        max(vecs.sparkSession.sparkContext.defaultParallelism, _N_BLOCKS)
     )
 
     def _unpack(cell):
-        import numpy as _np
+        ids = np.array([r["__id"] for r in cell], dtype=np.int64)
+        mat = np.stack([np.asarray(r["__q"], dtype=np.int64) for r in cell])
+        # sqrt of the int64 norm cast to double, as sqrt(CAST(n AS DOUBLE))
+        return ids, mat, np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
 
-        ids = _np.array([r["__id"] for r in cell], dtype=_np.int64)
-        mat = _np.stack([_np.asarray(r["__q"], dtype=_np.int64) for r in cell])
-        return ids, mat, _np.sqrt((mat * mat).sum(axis=1).astype(_np.float64))
-
-    def kernel(batches: Iterator, tile: int = 4096) -> Iterator:
-        import numpy as _np
-        import pandas as _pd
+    def kernel(batches: Iterator) -> Iterator:
+        import pandas as pd
 
         for pdf in batches:
             for ba, bb, ra, rb in zip(pdf["__ba"], pdf["__bb"], pdf["__ra"], pdf["__rb"]):
@@ -1752,35 +1726,67 @@ def embedding_pairs(
                     continue
                 a_ids, a_mat, a_sq = _unpack(ra)
                 b_ids, b_mat, b_sq = _unpack(rb)
-                # tile the A side: peak memory tile x |B| doubles, not |A| x |B|
-                for lo in range(0, len(a_ids), tile):
-                    hi = lo + tile
-                    cos = (
-                        (a_mat[lo:hi] @ b_mat.T).astype(_np.float64)
-                        / a_sq[lo:hi, None]
-                        / b_sq[None, :]
-                    )
-                    if ba == bb:
-                        # diagonal block: order within the block, skip self-pairs
-                        mask = (cos >= tau) & (a_ids[lo:hi, None] < b_ids[None, :])
-                    else:
-                        # off-diagonal: ids interleave across blocks — emit every
-                        # qualifying pair once, ordered per-pair below
+                for lo in range(0, len(a_ids), _TILE_A):
+                    hi = lo + _TILE_A
+                    for blo in range(0, len(b_ids), _TILE_B):
+                        bhi = blo + _TILE_B
+                        lt = a_ids[lo:hi, None] < b_ids[None, blo:bhi]
+                        sa, sb = a_sq[lo:hi, None], b_sq[None, blo:bhi]
+                        with np.errstate(divide="ignore", invalid="ignore"):
+                            cos = (
+                                (a_mat[lo:hi] @ b_mat[blo:bhi].T).astype(np.float64)
+                                / np.where(lt, sa, sb)
+                                / np.where(lt, sb, sa)
+                            )
                         mask = cos >= tau
-                    ii, jj = _np.nonzero(mask)
-                    if len(ii) == 0:
-                        continue
-                    ida, idb = a_ids[lo:hi][ii], b_ids[jj]
-                    c = cos[ii, jj]
-                    yield _pd.DataFrame(
-                        {
-                            "id_a": _np.minimum(ida, idb),
-                            "id_b": _np.maximum(ida, idb),
-                            "cosine": _np.floor(c * 1e6 + 0.5) / 1e6,
-                        }
-                    )
+                        if ba == bb:  # diagonal block: each pair once, no self-pairs
+                            mask &= lt
+                        ii, jj = np.nonzero(mask)
+                        if len(ii) == 0:
+                            continue
+                        ida, idb = a_ids[lo:hi][ii], b_ids[blo:bhi][jj]
+                        yield pd.DataFrame(
+                            {
+                                "id_a": np.minimum(ida, idb),
+                                "id_b": np.maximum(ida, idb),
+                                "cosine": cos[ii, jj],
+                            }
+                        )
 
-    return joined.mapInPandas(kernel, out_schema)
+    return joined.mapInPandas(kernel, "id_a long, id_b long, cosine double")
+
+
+def _integral_id_type(df: DataFrame, id_col: str, op: str):
+    """The id column's type; the block and pair-key packing need integers."""
+    id_type = df.select(id_col).schema[0].dataType
+    if not isinstance(id_type, IntegralType):
+        raise TypeError(
+            f"{op}: id column {id_col!r} must be an integer "
+            f"type, got {id_type.simpleString()}"
+        )
+    return id_type
+
+
+def embedding_pairs(df: DataFrame, id_col: str, vec_col: str, tau: float) -> DataFrame:
+    """Exact embedding-cosine near-dup pairs (id_a < id_b, cosine >= tau)
+    over quantized vectors, by the block-pair kernel
+    ``_block_cosine_pairs``. The cosine is rounded with
+    ``floor(x*1e6 + 0.5)``, which is DuckDB's round() for positive doubles.
+
+    ``id_col`` must be an integer column; ``id_a``/``id_b`` come back in
+    its type. Any other type raises ``TypeError`` up front.
+
+    Scale: one block holds ~N/16 rows x dim x 8 bytes and the work is
+    136 matmul tasks — the all-pairs FLOPs spread over the cluster. For
+    sub-quadratic candidate generation use operators/similarity.py
+    (IVF / LSH blocking)."""
+    id_type = _integral_id_type(df, id_col, "embedding_pairs")
+    q = _spread(df).select(F.col(id_col).alias("__id"), quantize_vec(vec_col).alias("__q"))
+    return _block_cosine_pairs(q, tau).select(
+        F.col("id_a").cast(id_type).alias("id_a"),
+        F.col("id_b").cast(id_type).alias("id_b"),
+        (F.floor(F.col("cosine") * 1e6 + 0.5) / 1e6).alias("cosine"),
+    )
 
 
 #: Dense-gate bounds for ``sparse_cosine_pairs`` (see its probe): the
@@ -1791,130 +1797,31 @@ _DENSE_MAX_VOCAB = 1024
 _DENSE_MAX_CELLS = 1 << 26
 
 
-def _dense_int_cosine_pairs(
-    wt: DataFrame, vocab: list[int], tau: float, n_blocks: int = 16
-) -> DataFrame:
+def _dense_int_cosine_pairs(wt: DataFrame, vocab: list[int], tau: float) -> DataFrame:
     """All-pairs cosine over a SMALL-VOCABULARY exact-integer TF-IDF index
-    (``wt``: __id, __w, __wgt) as a distributed block matmul — the dense
-    dual of the inverted-index posting join, same shape as
-    ``embedding_pairs``: documents become dense int64 weight vectors over
-    the sorted ``vocab`` slots, blocks of ~N/B docs pack into single rows,
-    and each of the B(B+1)/2 unordered block pairs computes one exact
-    int64 NumPy matmul instead of shuffling Σ df(t)² co-posting rows.
-
-    Exactness/parity with the posting branch (and the SQL oracle): the
-    dot product is the same int64 sum in a different order; norms are the
-    same Σ wgt² int64; the cosine is the same double expression
-    (cast-to-double dot / sqrt(norm of the smaller id) / sqrt(norm of the
-    larger id) — correctly rounded IEEE ops in the same order, chosen per
-    pair since block order is not id order), the ``>= tau`` comparison is on
-    identical doubles, and rounding is left to the CALLER's ``F.round``
-    so both branches share the one rounding expression. Zero-norm
-    documents produce NaN cosines, excluded by the mask exactly as the
-    posting branch's ``WHEN na > 0 AND nb > 0`` guard excludes them.
-    Both matmul sides are tiled, so peak task memory is tile_a x tile_b
-    doubles regardless of block size."""
-    from collections.abc import Iterator
-
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
+    (``wt``: __id, __w, __wgt) — the dense dual of the inverted-index
+    posting join: documents become dense int64 weight vectors over the
+    sorted ``vocab`` slots and go through ``_block_cosine_pairs`` instead
+    of shuffling Σ df(t)² co-posting rows. Same int64 dots and norms, same
+    double cosine, same ``>= tau`` as the posting branch; the rounding is
+    the caller's ``F.round``."""
     slot_args = []
     for i, w in enumerate(vocab):
         slot_args += [F.lit(w), F.lit(i)]
     slot = F.create_map(*slot_args)
-    nv = len(vocab)
     vecs = (
-        wt.select(
-            "__id", slot[F.col("__w")].alias("__slot"), "__wgt"
-        )
+        wt.select("__id", slot[F.col("__w")].alias("__slot"), "__wgt")
         .groupBy("__id")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("__slot", "__wgt"))
-            ).alias("__m")
-        )
+        .agg(F.map_from_entries(F.collect_list(F.struct("__slot", "__wgt"))).alias("__m"))
         .select(
             "__id",
             F.transform(
-                F.sequence(F.lit(0), F.lit(nv - 1)),
-                lambda i: F.coalesce(
-                    F.element_at(F.col("__m"), i), F.lit(0).cast("long")
-                ),
+                F.sequence(F.lit(0), F.lit(len(vocab) - 1)),
+                lambda i: F.coalesce(F.element_at(F.col("__m"), i), F.lit(0).cast("long")),
             ).alias("__q"),
         )
     )
-    blocks = (
-        vecs.withColumn("__b", F.pmod(F.col("__id"), F.lit(n_blocks)))
-        .groupBy("__b")
-        .agg(F.collect_list(F.struct("__id", "__q")).alias("__rows"))
-    )
-    a = blocks.select(F.col("__b").alias("__ba"), F.col("__rows").alias("__ra"))
-    b = blocks.select(F.col("__b").alias("__bb"), F.col("__rows").alias("__rb"))
-    joined = a.join(b, F.col("__ba") <= F.col("__bb")).repartition(
-        max(wt.sparkSession.sparkContext.defaultParallelism, n_blocks)
-    )
-
-    out_schema = StructType(
-        [
-            StructField("id_a", LongType()),
-            StructField("id_b", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
-    def _unpack(cell):
-        import numpy as _np
-
-        ids = _np.array([r["__id"] for r in cell], dtype=_np.int64)
-        mat = _np.stack([_np.asarray(r["__q"], dtype=_np.int64) for r in cell])
-        # sqrt over the int64 norm cast to double — identical to the SQL
-        # expression sqrt(CAST(sum(wgt*wgt) AS DOUBLE))
-        return ids, mat, _np.sqrt((mat * mat).sum(axis=1).astype(_np.float64))
-
-    def kernel(batches: Iterator, ta: int = 1024, tb: int = 4096) -> Iterator:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            for ba, bb, ra, rb in zip(
-                pdf["__ba"], pdf["__bb"], pdf["__ra"], pdf["__rb"]
-            ):
-                if len(ra) == 0 or len(rb) == 0:
-                    continue
-                a_ids, a_mat, a_sq = _unpack(ra)
-                b_ids, b_mat, b_sq = _unpack(rb)
-                for lo in range(0, len(a_ids), ta):
-                    hi = lo + ta
-                    for blo in range(0, len(b_ids), tb):
-                        bhi = blo + tb
-                        lt = a_ids[lo:hi, None] < b_ids[None, blo:bhi]
-                        sa, sb = a_sq[lo:hi, None], b_sq[None, blo:bhi]
-                        with _np.errstate(divide="ignore", invalid="ignore"):
-                            cos = (
-                                (a_mat[lo:hi] @ b_mat[blo:bhi].T).astype(
-                                    _np.float64
-                                )
-                                / _np.where(lt, sa, sb)
-                                / _np.where(lt, sb, sa)
-                            )
-                        # NaN (zero-norm side) compares False — the same
-                        # pairs the posting branch's na/nb > 0 guard drops
-                        mask = cos >= tau
-                        if ba == bb:
-                            mask &= lt
-                        ii, jj = _np.nonzero(mask)
-                        if len(ii) == 0:
-                            continue
-                        ida, idb = a_ids[lo:hi][ii], b_ids[blo:bhi][jj]
-                        yield _pd.DataFrame(
-                            {
-                                "id_a": _np.minimum(ida, idb),
-                                "id_b": _np.maximum(ida, idb),
-                                "cosine": cos[ii, jj],
-                            }
-                        )
-
-    return joined.mapInPandas(kernel, out_schema)
+    return _block_cosine_pairs(vecs, tau)
 
 
 def sparse_cosine_pairs(
@@ -1954,12 +1861,7 @@ def sparse_cosine_pairs(
     ``TypeError`` up front."""
     from ..functions.text import word_hashes
 
-    id_type = df.select(id_col).schema[0].dataType
-    if not isinstance(id_type, IntegralType):
-        raise TypeError(
-            f"sparse_cosine_pairs: id column {id_col!r} must be an integer "
-            f"type, got {id_type.simpleString()}"
-        )
+    id_type = _integral_id_type(df, id_col, "sparse_cosine_pairs")
     toks = _spread(df).select(
         F.col(id_col).alias("__id"), F.explode(word_hashes(text_col)).alias("__w")
     )

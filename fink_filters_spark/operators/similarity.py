@@ -23,9 +23,10 @@ for cross-engine bit parity.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+import numpy as np
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ..functions.vectors import dot_q, norm_sq_q, quantize_vec
+from ..functions.vectors import VEC_SCALE, dot_q, norm_sq_q, quantize_vec
 
 
 def _quantized(df: DataFrame, id_col: str, vec_col: str, id_alias: str, vec_alias: str, nsq_alias: str) -> DataFrame:
@@ -52,6 +53,62 @@ def _cos(av, bv, ansq, bnsq) -> "F.Column":
     )
 
 
+def _nearest_centroids(
+    side: DataFrame, cents: DataFrame, id_col: str, vec: str, nsq: str, n: int = 1
+) -> DataFrame:
+    """Every row of ``side`` (all its columns ride through) with its ``n``
+    max-cosine centroids among ``cents`` (centroid_id, __kv, __kn), ties to
+    the smaller centroid id, plus the unrounded ``cosine``. A broadcast
+    nested-loop join and one rank window partitioned by ``id_col``, so the
+    side's vectors are quantized once and shuffled once."""
+    scored = side.join(F.broadcast(cents)).select(
+        *side.columns, "centroid_id", _cos(vec, "__kv", nsq, "__kn").alias("cosine")
+    )
+    w = Window.partitionBy(id_col).orderBy(F.desc("cosine"), F.asc("centroid_id"))
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= n)
+        .drop("__rn")
+    )
+
+
+def _topk(cand: DataFrame, k: int, score: Column, *out: Column) -> DataFrame:
+    """Shared top-k tail: score the candidate pairs (``__qid``/``__cid``
+    and their quantized sides) as ``__s``, rank per query by score desc
+    with neighbor_id asc as the tie-break, keep the top ``k``, and project
+    ``out`` between the ids and the rank."""
+    pairs = cand.select(
+        F.col("__qid").alias("q_id"), F.col("__cid").alias("neighbor_id"), score.alias("__s")
+    )
+    w = Window.partitionBy("q_id").orderBy(F.desc("__s"), F.asc("neighbor_id"))
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "neighbor_id", *out, "rank")
+    )
+
+
+def _topk_by_cosine(cand: DataFrame, k: int) -> DataFrame:
+    """Top-k by quantized cosine, rounded to 6 places for display."""
+    return _topk(
+        cand, k, _cos("__qv", "__cv", "__qn", "__cn"), F.round("__s", 6).alias("cosine")
+    )
+
+
+def _topk_by_dot(cand: DataFrame, k: int) -> DataFrame:
+    """MIPS top-k by the exact-integer dot product, divided back to float
+    once for display."""
+    return _topk(
+        cand,
+        k,
+        dot_q(F.col("__qv"), F.col("__cv")),
+        F.round(F.col("__s").cast("double") / (VEC_SCALE * VEC_SCALE), 6).alias("dot"),
+        # exact integer dot in scale^2 units — the hash-stable column
+        # the query layer exposes (hash-stability, DESIGN.md)
+        F.col("__s").cast("long").alias("dot_q12"),
+    )
+
+
 def knn_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
@@ -64,17 +121,7 @@ def knn_bruteforce(
     """Exact top-k cosine neighbors per query (excludes self-matches by id)."""
     q = _quantized(queries, q_id, q_vec, "__qid", "__qv", "__qn")
     c = _quantized(corpus, c_id, c_vec, "__cid", "__cv", "__cn")
-    pairs = c.join(F.broadcast(q), F.col("__qid") != F.col("__cid")).select(
-        F.col("__qid").alias("q_id"),
-        F.col("__cid").alias("neighbor_id"),
-        _cos("__qv", "__cv", "__qn", "__cn").alias("cosine"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _topk_by_cosine(c.join(F.broadcast(q), F.col("__qid") != F.col("__cid")), k)
 
 
 def ivf_assign(
@@ -89,16 +136,8 @@ def ivf_assign(
     ties by centroid id). Output: (vec_id, centroid_id, cosine)."""
     c = _quantized(corpus, c_id, c_vec, "vec_id", "__cv", "__cn")
     cents = _quantized(centroids, cent_id, cent_vec, "centroid_id", "__kv", "__kn")
-    scored = c.join(F.broadcast(cents)).select(
-        "vec_id",
-        "centroid_id",
-        _cos("__cv", "__kv", "__cn", "__kn").alias("cosine"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("centroid_id"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("vec_id", "centroid_id", F.round("cosine", 6).alias("cosine"))
+    return _nearest_centroids(c, cents, "vec_id", "__cv", "__cn").select(
+        "vec_id", "centroid_id", F.round("cosine", 6).alias("cosine")
     )
 
 
@@ -120,48 +159,17 @@ def ivf_search(
 
     At scale the corpus is stored partitioned/bucketed by ``centroid_id``
     (partition pruning makes the probe a targeted scan, not a full pass).
-    """
-    # assignment computed INLINE carrying the quantized vectors through the
-    # rank window: one quantization pass over the corpus and one shuffle
-    # (the window's, on __cid) instead of re-quantizing and shuffle-joining
-    # a corpus-sized assignment back by id (round-7 review finding)
-    c0 = _quantized(corpus, c_id, c_vec, "__cid", "__cv", "__cn")
-    cents = _quantized(centroids, cent_id, cent_vec, "__kcent", "__kv", "__kn")
-    ascored = c0.join(F.broadcast(cents)).select(
-        "__cid", "__cv", "__cn", "__kcent",
-        _cos("__cv", "__kv", "__cn", "__kn").alias("__ac"),
-    )
-    wa = Window.partitionBy("__cid").orderBy(F.desc("__ac"), F.asc("__kcent"))
-    c = (
-        ascored.withColumn("__arn", F.row_number().over(wa))
-        .filter(F.col("__arn") == 1)
-        .select("__cid", "__cv", "__cn", F.col("__kcent").alias("__ccent"))
-    )
+    The corpus assignment carries the quantized vectors through its rank
+    window, so the corpus is quantized once and shuffled once."""
+    c = _quantized(corpus, c_id, c_vec, "__cid", "__cv", "__cn")
     q = _quantized(queries, q_id, q_vec, "__qid", "__qv", "__qn")
-    probe_scored = q.join(F.broadcast(cents)).select(
-        "__qid", "__qv", "__qn", "__kcent",
-        _cos("__qv", "__kv", "__qn", "__kn").alias("__pc"),
+    cents = _quantized(centroids, cent_id, cent_vec, "centroid_id", "__kv", "__kn")
+    assigned = _nearest_centroids(c, cents, "__cid", "__cv", "__cn").drop("cosine")
+    probes = _nearest_centroids(q, cents, "__qid", "__qv", "__qn", nprobe).drop("cosine")
+    cand = assigned.join(F.broadcast(probes), "centroid_id").filter(
+        F.col("__qid") != F.col("__cid")
     )
-    wq = Window.partitionBy("__qid").orderBy(F.desc("__pc"), F.asc("__kcent"))
-    probes = (
-        probe_scored.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= nprobe)
-        .select("__qid", "__qv", "__qn", "__kcent")
-    )
-    pairs = c.join(
-        F.broadcast(probes),
-        (F.col("__ccent") == F.col("__kcent")) & (F.col("__qid") != F.col("__cid")),
-    ).select(
-        F.col("__qid").alias("q_id"),
-        F.col("__cid").alias("neighbor_id"),
-        _cos("__qv", "__cv", "__qn", "__cn").alias("cosine"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _topk_by_cosine(cand, k)
 
 
 def sign_planes(n_planes: int, dim: int, seed: int = 0) -> list[list[int]]:
@@ -182,11 +190,11 @@ def sign_planes(n_planes: int, dim: int, seed: int = 0) -> list[list[int]]:
 
 def _band_signatures(df: DataFrame, vec_col: str, planes: list[list[int]],
                      band_bits: int) -> DataFrame:
-    """Add ``band`` / ``sig`` columns, one row per (input row, band).
+    """Add ``band`` / ``sig`` columns, one row per (input row, band): the
+    pure-Catalyst reference for ``_band_signatures_arrow``.
 
-    All JVM-side: per-plane bit = sign of an exact integer dot product
-    (quantized vector × ±1 literal array), band signature = bit-packed sum.
-    The P dot products run inside whole-stage codegen over one row pass."""
+    Per-plane bit = sign of an exact integer dot product (quantized
+    vector × ±1 literal array), band signature = bit-packed sum."""
     n_bands = len(planes) // band_bits
     bits = [
         F.when(dot_q(F.col(vec_col), F.array(*[F.lit(s) for s in plane])) >= 0, 1).otherwise(0)
@@ -203,6 +211,22 @@ def _band_signatures(df: DataFrame, vec_col: str, planes: list[list[int]],
     )
 
 
+def _half_up(y: np.ndarray) -> np.ndarray:
+    """BigDecimal-HALF_UP on non-negative doubles, bit-for-bit. The
+    fractional part y - floor(y) is EXACT for y < 2^52, so comparing it to
+    0.5 reproduces HALF_UP; ``floor(y + 0.5)`` does not (adding 0.5 can
+    itself round up, e.g. y = 0.5 - 2^-54 gives 1), and ``np.round`` ties
+    to even."""
+    fl = np.floor(y)
+    return fl + ((y - fl) >= 0.5)
+
+
+def _quantize_np(mat: np.ndarray) -> np.ndarray:
+    """NumPy twin of ``quantize_vec``: ``round(x * VEC_SCALE)`` as int64,
+    HALF_UP like Spark's ``round``, element for element."""
+    return (np.sign(mat) * _half_up(np.abs(mat) * VEC_SCALE)).astype(np.int64)
+
+
 def _band_signatures_arrow(
     df: DataFrame,
     id_col: str,
@@ -210,56 +234,27 @@ def _band_signatures_arrow(
     planes: list[list[int]],
     band_bits: int,
     id_alias: str,
-    vec_alias: str,
-    nsq_alias: str,
     aug_m2_col: str | None = None,
-    vectors: bool = True,
 ) -> DataFrame:
-    """Arrow fast path for quantize + norm + P-bit signatures: one NumPy
-    int64 matmul per batch replaces P interpreted ``aggregate`` folds per
-    row (~6x on this box; bit-identical — see the rounding note below).
-    Output: one row per (input row, band) after a native posexplode.
+    """``(id_alias, band, sig)``, one row per (input row, band): quantize
+    and sign-project a batch as one NumPy int64 matmul instead of P
+    interpreted ``aggregate`` folds per row, bit-identical to
+    ``_band_signatures`` over ``_quantized``. Only ids leave the kernel:
+    callers re-attach vectors after their id-level dedup, so the widest
+    column is not shuffled once per band.
 
-    Rounding parity (round-7 review): ``floor(|x|*scale + 0.5)`` is NOT
-    bit-identical to Spark's BigDecimal HALF_UP — adding 0.5 can itself
-    round up at binade boundaries (e.g. |x|*scale = 0.5 - 2^-54 gives 1,
-    HALF_UP gives 0). The kernel instead compares the EXACT fractional
-    part: ``fl = floor(y); q = fl + ((y - fl) >= 0.5)`` — for y < 2^52
-    the subtraction is exact (both operands share y's ulp grid), so the
-    comparison reproduces HALF_UP on the exact double bit-for-bit. The
-    same form replaces ``np.round`` (banker's) on the MIPS sqrt below.
-
-    Input contract (validated, matching the non-Arrow path's ANSI
+    Input contract (validated, matching the Catalyst path's ANSI
     behavior of failing loudly): embeddings must be non-NULL, rectangular
     and NaN-free — a NaN would otherwise cast to INT64_MIN silently.
 
     ``aug_m2_col``: MIPS norm-augmentation. Names a column holding the
     corpus-max quantized norm-square M2 (a broadcast scalar); the planes
     must then span dim+1 coordinates, and the signature matmul appends
-    ``half_up(sqrt(M2 - |q|^2))`` to each quantized vector (the
-    exact-frac form above — np.round's banker's tie would diverge from
-    the oracle's round() whenever the correctly-rounded sqrt double
-    lands exactly on k+0.5, reachable once sqrt magnitudes exceed ~2^25).
-    The OUTPUT vector stays un-augmented: a query's augmented coordinate
-    is 0, so candidate scoring is the plain original-dimension dot
-    product.
-
-    ``vectors=False`` (round 10, guide §2.3 — shuffle fewer bytes): emit
-    only ``(id, band, sig)``. The banded table otherwise carries every
-    vector dim*8 bytes across the Arrow boundary and then once PER BAND
-    through the candidate join and the (q, c) dedup shuffle — n_bands-fold
-    duplication of the widest column in the pipeline. Narrow callers
-    re-attach vectors AFTER the id-level dedup from one ``_quantized``
-    codegen pass (bit-identical to the kernel's quantization — the
-    HALF_UP parity note above is exactly that statement), so each vector
-    crosses one join instead of n_bands shuffles. Validation (NULL/NaN/
-    ragged) is unchanged — the signature matmul needs the full matrix
-    either way."""
+    ``half_up(sqrt(M2 - |q|^2))`` to each quantized vector (HALF_UP, as
+    the oracle's round(): a correctly-rounded sqrt can land exactly on
+    k+0.5 once magnitudes exceed ~2^25)."""
     from collections.abc import Iterator
 
-    import numpy as np
-
-    from ..functions.vectors import VEC_SCALE
     from .grams import _spread
 
     if band_bits > 31:
@@ -268,98 +263,96 @@ def _band_signatures_arrow(
             "(bit 31 would wrap negative and split from the literal-sum "
             "path); use band_bits <= 31"
         )
+    if len(planes) % band_bits:
+        raise ValueError(
+            f"{len(planes)} sign planes do not split into bands of "
+            f"band_bits={band_bits}; n_planes must be a multiple of band_bits"
+        )
     pmat = np.asarray(planes, dtype=np.int64)
     n_bands = len(planes) // band_bits
     weights = (np.int64(1) << np.arange(band_bits, dtype=np.int64))
 
-    def _half_up(y):
-        """BigDecimal-HALF_UP on non-negative doubles, bit-for-bit: the
-        fractional part y - floor(y) is EXACT for y < 2^52, so comparing
-        it to 0.5 cannot be perturbed the way floor(y + 0.5) is."""
-        import numpy as _np
-
-        fl = _np.floor(y)
-        return fl + ((y - fl) >= 0.5)
-
     def kernel(batches: Iterator) -> Iterator:
-        import numpy as _np
-        import pandas as _pd
+        import pandas as pd
 
         for pdf in batches:
             if len(pdf) == 0:
-                empty = {"__i": pdf["__id"]}
-                if vectors:
-                    empty["__q"] = []
-                    empty["__n"] = _pd.Series([], dtype="float64")
-                empty["__s"] = []
-                yield _pd.DataFrame(empty)
+                yield pd.DataFrame({"__i": pdf["__id"], "__s": []})
                 continue
             if pdf["__v"].isna().any():
                 raise ValueError(
                     f"_band_signatures_arrow: NULL embedding in {vec_col!r} "
-                    "(the non-Arrow path fails here too; drop or impute "
+                    "(the Catalyst path fails here too; drop or impute "
                     "upstream)"
                 )
             try:
-                mat = _np.stack(
-                    [_np.asarray(v, dtype=_np.float64) for v in pdf["__v"]]
-                )
+                mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["__v"]])
             except ValueError as e:
                 raise ValueError(
                     f"_band_signatures_arrow: ragged embeddings in "
                     f"{vec_col!r} — all vectors must share one dimension"
                 ) from e
-            if _np.isnan(mat).any():
+            if np.isnan(mat).any():
                 raise ValueError(
                     f"_band_signatures_arrow: NaN embedding element in "
                     f"{vec_col!r} (would quantize to INT64_MIN silently)"
                 )
-            q = (_np.sign(mat) * _half_up(_np.abs(mat) * VEC_SCALE)).astype(_np.int64)
-            nsq = (q * q).sum(axis=1)
-            sig_in = q
+            q = _quantize_np(mat)
             if aug_m2_col is not None:
-                m2 = pdf["__m2"].to_numpy().astype(_np.int64)
-                aug = _half_up(_np.sqrt((m2 - nsq).astype(_np.float64)))
-                sig_in = _np.concatenate([q, aug.astype(_np.int64)[:, None]], axis=1)
-            if sig_in.shape[1] != pmat.shape[1]:
+                m2 = pdf["__m2"].to_numpy().astype(np.int64)
+                aug = _half_up(np.sqrt((m2 - (q * q).sum(axis=1)).astype(np.float64)))
+                q = np.concatenate([q, aug.astype(np.int64)[:, None]], axis=1)
+            if q.shape[1] != pmat.shape[1]:
                 # clear message instead of an opaque matmul shape error —
                 # the natural misuse is dim-wide lsh_search planes passed
                 # to the MIPS path, which needs dim+1 (norm augmentation)
                 raise ValueError(
                     f"sign planes span {pmat.shape[1]} coordinates but "
-                    f"vectors have {sig_in.shape[1]} "
+                    f"vectors have {q.shape[1]} "
                     f"({'dim+1, norm-augmented' if aug_m2_col else 'dim'})"
                 )
-            bits = (sig_in @ pmat.T >= 0).astype(_np.int64)
-            sigs = (bits.reshape(len(q), n_bands, band_bits) @ weights).astype(_np.int32)
-            out_cols = {"__i": pdf["__id"].to_numpy()}
-            if vectors:
-                out_cols["__q"] = list(q)
-                out_cols["__n"] = nsq.astype("float64")
-            out_cols["__s"] = list(sigs)
-            yield _pd.DataFrame(out_cols)
+            bits = (q @ pmat.T >= 0).astype(np.int64)
+            sigs = (bits.reshape(len(q), n_bands, band_bits) @ weights).astype(np.int32)
+            yield pd.DataFrame({"__i": pdf["__id"].to_numpy(), "__s": list(sigs)})
 
     cols = [F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")]
     if aug_m2_col is not None:
         cols.append(F.col(aug_m2_col).alias("__m2"))
-    src = _spread(df).select(*cols)
     # id passes through untouched — declare ITS type, not a hardcoded long
-    # (string/UUID ids work on the non-Arrow path and must work here too)
     id_type = df.schema[id_col].dataType.simpleString()
-    if not vectors:
-        out = src.mapInPandas(kernel, f"__i {id_type}, __s array<int>")
-        return out.select(
-            F.col("__i").alias(id_alias),
-            F.posexplode("__s").alias("band", "sig"),
-        )
-    out = src.mapInPandas(
-        kernel, f"__i {id_type}, __q array<long>, __n double, __s array<int>"
-    )
-    return out.select(
-        F.col("__i").alias(id_alias),
-        F.col("__q").alias(vec_alias),
-        F.col("__n").alias(nsq_alias),
-        F.posexplode("__s").alias("band", "sig"),
+    out = _spread(df).select(*cols).mapInPandas(kernel, f"__i {id_type}, __s array<int>")
+    return out.select(F.col("__i").alias(id_alias), F.posexplode("__s").alias("band", "sig"))
+
+
+def _band_candidates(
+    qsig: DataFrame,
+    csig: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame,
+    q_id: str,
+    c_id: str,
+    q_vec: str,
+    c_vec: str,
+) -> DataFrame:
+    """The narrow band probe: distinct (``__qid``, ``__cid``) pairs that
+    share a ``(band, sig)`` bucket, self-matches dropped, then each side's
+    quantized vector and norm re-attached by id from one ``_quantized``
+    pass — so vectors cross one join, not one shuffle per band.
+
+    Input contract: ids must be UNIQUE per side and the id→vector mapping
+    DETERMINISTIC across plan branches. Each side is evaluated twice
+    (signature kernel + re-attach), so a duplicate id multiplies candidate
+    rows, and an id from ``rand()`` / ``monotonically_increasing_id`` over
+    an uncached source can differ between the branches. Cache (or
+    checkpoint) such inputs first; an expensive uncached source also pays
+    its scan twice."""
+    return (
+        csig.join(qsig, ["band", "sig"])
+        .filter(F.col("__qid") != F.col("__cid"))
+        .select("__qid", "__cid")
+        .dropDuplicates(["__qid", "__cid"])
+        .join(_quantized(corpus, c_id, c_vec, "__cid", "__cv", "__cn"), "__cid")
+        .join(_quantized(queries, q_id, q_vec, "__qid", "__qv", "__qn"), "__qid")
     )
 
 
@@ -373,75 +366,22 @@ def lsh_search(
     c_id: str = "vec_id",
     q_vec: str = "embedding",
     c_vec: str = "embedding",
-    arrow: bool = True,
 ) -> DataFrame:
     """Sign-projection LSH ANN: candidates share at least one band signature
     with the query; exact cosine + top-k within candidates.
 
-    Scale: corpus signatures are one codegen pass; the candidate join is a
-    plain equi join on ``(band, sig)`` — shuffle-partitioned by bucket, no
-    all-pairs stage, and at rest the corpus can be stored bucketed by
-    ``(band, sig)`` so probes prune partitions. More planes per band →
-    fewer, more precise candidates; more bands → higher recall.
-
-    Input contract (round-10 narrow-probe shape, flagged in the round-10
-    advisory): ids must be UNIQUE per side and the id→vector mapping
-    DETERMINISTIC across plan branches. The arrow path evaluates each side
-    twice (signature kernel + ``_quantized`` re-attach), so a duplicate id
-    would multiply candidate rows at distinct ranks (the old wide path kept
-    one row per (q, c)), and an id derived from ``rand()`` /
-    ``monotonically_increasing_id`` over an uncached source could differ
-    between the two branches, silently dropping or mis-scoring candidates.
-    Cache (or checkpoint) nondeterministic inputs before calling; an
-    expensive uncached source also pays its scan twice here."""
-    assert len(planes) % band_bits == 0, "n_planes must be a multiple of band_bits"
-    if arrow:
-        # Narrow band probe (round 10, guide §2.3): only ids ride the band
-        # join and the (q, c) dedup shuffle — the wide form carried both
-        # dim-long vectors once per colliding band (n_bands-fold duplication
-        # of the widest column) through both shuffles. Vectors re-attach
-        # AFTER the id-level dedup from one _quantized codegen pass per
-        # side, bit-identical to the kernel's quantization (HALF_UP parity,
-        # _band_signatures_arrow docstring), so the emitted cosines are
-        # unchanged — the arrow/non-arrow equivalence test pins it.
-        qsig = _band_signatures_arrow(queries, q_id, q_vec, planes, band_bits,
-                                      "__qid", "__qv", "__qn", vectors=False)
-        csig = _band_signatures_arrow(corpus, c_id, c_vec, planes, band_bits,
-                                      "__cid", "__cv", "__cn", vectors=False)
-        cand = (
-            csig.join(qsig, ["band", "sig"])
-            .filter(F.col("__qid") != F.col("__cid"))
-            .select("__qid", "__cid")
-            .dropDuplicates(["__qid", "__cid"])
-            .join(_quantized(corpus, c_id, c_vec, "__cid", "__cv", "__cn"),
-                  "__cid")
-            .join(_quantized(queries, q_id, q_vec, "__qid", "__qv", "__qn"),
-                  "__qid")
-        )
-    else:
-        q = _band_signatures(
-            _quantized(queries, q_id, q_vec, "__qid", "__qv", "__qn"), "__qv", planes, band_bits
-        )
-        c = _band_signatures(
-            _quantized(corpus, c_id, c_vec, "__cid", "__cv", "__cn"), "__cv", planes, band_bits
-        )
-        cand = (
-            c.join(q, ["band", "sig"])
-            .filter(F.col("__qid") != F.col("__cid"))
-            .select("__qid", "__qv", "__qn", "__cid", "__cv", "__cn")
-            .dropDuplicates(["__qid", "__cid"])
-        )
-    pairs = cand.select(
-        F.col("__qid").alias("q_id"),
-        F.col("__cid").alias("neighbor_id"),
-        _cos("__qv", "__cv", "__qn", "__cn").alias("cosine"),
+    Scale: corpus signatures are one Arrow matmul pass; the candidate join
+    is a plain equi join on ``(band, sig)`` — shuffle-partitioned by
+    bucket, no all-pairs stage, and at rest the corpus can be stored
+    bucketed by ``(band, sig)`` so probes prune partitions. More planes
+    per band → fewer, more precise candidates; more bands → higher recall.
+    Input contract: see ``_band_candidates``."""
+    cand = _band_candidates(
+        _band_signatures_arrow(queries, q_id, q_vec, planes, band_bits, "__qid"),
+        _band_signatures_arrow(corpus, c_id, c_vec, planes, band_bits, "__cid"),
+        queries, corpus, q_id, c_id, q_vec, c_vec,
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _topk_by_cosine(cand, k)
 
 
 def _pq_subvectors(
@@ -472,9 +412,7 @@ def _pq_subvectors(
     # pipelined above it — codebook distance math in pq_encode, the
     # training aggregate's map side) otherwise runs inside the file scan's
     # task layout; a single-row-group corpus file serializes all of it on
-    # one core (round-10 stage profile: two ~1.3s single-task stages in
-    # sim_pq_encode). No-op when the scan is already at cluster
-    # parallelism.
+    # one core. No-op when the scan is already at cluster parallelism.
     from ..tables import scan_floor
 
     return scan_floor(df).select(
@@ -637,7 +575,7 @@ def kmeans_lloyd(
         )
     dim = len(cents[0][1])
     q = _quantized(corpus, c_id, c_vec, "vec_id", "__v", "__nsq")
-    # dimension guard (round-7 review): a corpus vector LONGER than the
+    # dimension guard: a corpus vector LONGER than the
     # seed dim makes zip_with pad with NULL -> NULL cosine against every
     # centroid -> array_max's tiebreak silently collapses the whole corpus
     # into the smallest centroid id; a SHORTER one dies mid-job with an
@@ -713,29 +651,6 @@ def kmeans_lloyd(
     return out
 
 
-def _topk_by_dot(pairs: DataFrame, k: int) -> DataFrame:
-    """Shared MIPS tail: rank (q_id, neighbor_id, __dq exact-integer dot)
-    per query by dot desc (neighbor_id tie-break), keep top-k, divide the
-    quantized dot back to float once for display."""
-    from ..functions.vectors import VEC_SCALE
-
-    w = Window.partitionBy("q_id").orderBy(F.desc("__dq"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.round(F.col("__dq").cast("double") / (VEC_SCALE * VEC_SCALE), 6)
-            .alias("dot"),
-            # exact integer dot in scale^2 units — the hash-stable column
-            # the query layer exposes (hash-stability, DESIGN.md)
-            F.col("__dq").cast("long").alias("dot_q12"),
-            "rank",
-        )
-    )
-
-
 def maxdot_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -760,12 +675,7 @@ def maxdot_topk(
     c = corpus.select(
         F.col(c_id).alias("__cid"), quantize_vec(c_vec).alias("__cv")
     )
-    pairs = c.join(F.broadcast(q), F.col("__qid") != F.col("__cid")).select(
-        F.col("__qid").alias("q_id"),
-        F.col("__cid").alias("neighbor_id"),
-        dot_q(F.col("__qv"), F.col("__cv")).alias("__dq"),
-    )
-    return _topk_by_dot(pairs, k)
+    return _topk_by_dot(c.join(F.broadcast(q), F.col("__qid") != F.col("__cid")), k)
 
 
 def mips_lsh_search(
@@ -797,45 +707,18 @@ def mips_lsh_search(
     top of ``lsh_search``'s shape — signatures via the Arrow matmul
     kernel (the 60-plane x 65-dim expression tree was ~10x slower as
     interpreted per-row folds), the candidate probe a plain equi join on
-    (band, sig). Candidate scoring uses the un-augmented vectors: the
-    query's augmented coordinate is 0, so the augmented dot product IS
-    the original dot product.
-
-    Input contract: same as ``lsh_search`` (round-10 advisory) — unique
-    ids per side and a deterministic id→vector mapping across plan
-    branches; the narrow probe re-attaches vectors in a second branch, so
-    duplicate ids inflate top-k and nondeterministic uncached sources can
-    mis-score candidates. Cache nondeterministic inputs first."""
-    assert len(planes) % band_bits == 0, "n_planes must be a multiple of band_bits"
+    (band, sig), scored on the un-augmented vectors. Input contract: see
+    ``_band_candidates``."""
     dim = len(planes[0]) - 1
     c = corpus.select(F.col(c_id).alias("__cid0"), F.col(c_vec).alias("__cv0"))
     m2 = c.groupBy().agg(
         F.max(norm_sq_q(quantize_vec("__cv0")).cast("long")).alias("__m2s")
     )
-    c_aug = c.crossJoin(F.broadcast(m2))
-    # Narrow band probe (round 10, guide §2.3 — same rewrite as lsh_search):
-    # only ids through the band join + dedup (the MIPS bands are 10-wide
-    # here, so the wide form shuffled every 65-dim vector up to 10x);
-    # un-augmented vectors re-attach post-dedup via _quantized (scoring
-    # never needs the augmented coordinate — a query's is 0).
-    sc = _band_signatures_arrow(c_aug, "__cid0", "__cv0", planes, band_bits,
-                                "__cid", "__cv", "__cn", aug_m2_col="__m2s",
-                                vectors=False)
-    sq = _band_signatures_arrow(
-        queries, q_id, q_vec, [p[:dim] for p in planes], band_bits,
-        "__qid", "__qv", "__qn", vectors=False,
+    cand = _band_candidates(
+        _band_signatures_arrow(queries, q_id, q_vec, [p[:dim] for p in planes],
+                               band_bits, "__qid"),
+        _band_signatures_arrow(c.crossJoin(F.broadcast(m2)), "__cid0", "__cv0", planes,
+                               band_bits, "__cid", aug_m2_col="__m2s"),
+        queries, corpus, q_id, c_id, q_vec, c_vec,
     )
-    cand = (
-        sc.join(sq, ["band", "sig"])
-        .filter(F.col("__qid") != F.col("__cid"))
-        .select("__qid", "__cid")
-        .dropDuplicates(["__qid", "__cid"])
-        .join(_quantized(corpus, c_id, c_vec, "__cid", "__cv", "__cn"), "__cid")
-        .join(_quantized(queries, q_id, q_vec, "__qid", "__qv", "__qn"), "__qid")
-    )
-    pairs = cand.select(
-        F.col("__qid").alias("q_id"),
-        F.col("__cid").alias("neighbor_id"),
-        dot_q(F.col("__qv"), F.col("__cv")).alias("__dq"),
-    )
-    return _topk_by_dot(pairs, k)
+    return _topk_by_dot(cand, k)

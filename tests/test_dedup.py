@@ -298,6 +298,17 @@ def test_embedding_pairs_matches_numpy(spark):
     assert set(got) == want
     assert (0, 30) in got and got[(0, 30)] > 0.99
 
+    # ids come back in the input's integer type; non-integral ids are refused
+    as_int = embedding_pairs(
+        df.withColumn("vec_id", df["vec_id"].cast("int")), "vec_id", "embedding", 0.95
+    )
+    assert as_int.schema.simpleString() == "struct<id_a:int,id_b:int,cosine:double>"
+    assert {(r.id_a, r.id_b) for r in as_int.collect()} == want
+    with pytest.raises(TypeError, match="integer"):
+        embedding_pairs(
+            df.withColumn("vec_id", df["vec_id"].cast("string")), "vec_id", "embedding", 0.95
+        )
+
 
 def test_connected_components_paths_agree(spark):
     """Driver union-find and the distributed star rounds produce identical
@@ -818,14 +829,16 @@ def test_sparse_cosine_dense_gate_matches_posting_path(spark):
 
 
 def test_dense_cosine_divides_by_smaller_id_norm_first(spark):
-    """The dense block-matmul cosine divides in the posting join's order:
-    by the smaller id's norm first. Ids 15 and 16 over 16 blocks land in
-    blocks 15 and 0, so block order is the reverse of id order; for these
-    two vectors the two division orders differ by one ulp, and tau sits
-    exactly on the posting-order value."""
+    """The block-pair cosine kernel divides in the posting join's (and the
+    embedding oracle's) order: by the smaller id's norm first. Ids 15 and
+    16 over 16 blocks land in blocks 15 and 0, so block order is the
+    reverse of id order; for these two vectors the two division orders
+    differ by one ulp, and tau sits exactly on the id-order value. Both
+    callers of the kernel are checked: the dense TF-IDF path and
+    ``embedding_pairs``."""
     import math
 
-    from fink_filters_spark.operators.dedup import _dense_int_cosine_pairs
+    from fink_filters_spark.operators.dedup import _dense_int_cosine_pairs, embedding_pairs
 
     v15, v16 = [16, 19, 8], [14, 19, 13]
     dot = sum(a * b for a, b in zip(v15, v16))
@@ -841,6 +854,13 @@ def test_dense_cosine_divides_by_smaller_id_norm_first(spark):
     )
     got = [tuple(r) for r in _dense_int_cosine_pairs(wt, [0, 1, 2], tau).collect()]
     assert got == [(15, 16, tau)]
+
+    em = spark.createDataFrame(
+        [(15, [16e-6, 19e-6, 8e-6]), (16, [14e-6, 19e-6, 13e-6])],  # quantize to v15, v16
+        "vec_id long, embedding array<double>",
+    )
+    got = [tuple(r) for r in embedding_pairs(em, "vec_id", "embedding", tau).collect()]
+    assert got == [(15, 16, math.floor(tau * 1e6 + 0.5) / 1e6)]
 
 
 def test_sparse_cosine_df_pruning_and_reordering_robustness(spark):

@@ -532,24 +532,34 @@ def test_similarity_lsh_search_subset_of_exact_ranking(spark):
     assert {k[0] for k in a} == {k[0] for k in e}
 
 
-def test_lsh_arrow_and_native_paths_agree(spark):
-    """The Arrow matmul signature kernel is bit-identical to the native
-    HOF-fold path (same quantization, same bits, same cosines)."""
-    from fink_filters_spark.operators.similarity import lsh_search, sign_planes
+def test_lsh_band_signatures_arrow_match_catalyst(spark):
+    """The Arrow matmul signature kernel emits the same (id, band, sig)
+    rows as the Catalyst reference ``_band_signatures`` over
+    ``_quantized`` on the same input (same quantization, same bits), for
+    long and string ids."""
+    from fink_filters_spark.operators.similarity import (
+        _band_signatures,
+        _band_signatures_arrow,
+        _quantized,
+        sign_planes,
+    )
 
     rng = np.random.default_rng(11)
     vecs = rng.normal(size=(80, 12)).astype(float)
-    pdf = pd.DataFrame(
-        {"vec_id": np.arange(80, dtype=np.int64), "embedding": [v.tolist() for v in vecs]}
-    )
-    corpus = spark.createDataFrame(pdf)
-    queries = corpus.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
     planes = sign_planes(8, 12, seed=3)
-    a = lsh_search(queries, corpus, k=10, planes=planes, band_bits=4, arrow=True)
-    n = lsh_search(queries, corpus, k=10, planes=planes, band_bits=4, arrow=False)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, n.collect()))
+    for ids in (list(range(80)), [f"v-{i}" for i in range(80)]):
+        typ = "string" if isinstance(ids[0], str) else "long"
+        df = spark.createDataFrame(
+            [(i, v.tolist()) for i, v in zip(ids, vecs)], f"vec_id {typ}, embedding array<double>"
+        )
+        arrow = _band_signatures_arrow(df, "vec_id", "embedding", planes, 4, "__i")
+        native = _band_signatures(
+            _quantized(df, "vec_id", "embedding", "__i", "__q", "__n"), "__q", planes, 4
+        ).select("__i", "band", "sig")
+        assert arrow.schema.simpleString() == native.schema.simpleString()
+        got = sorted(map(tuple, arrow.collect()))
+        assert len(got) == 80 * 2
+        assert got == sorted(map(tuple, native.collect()))
 
 
 def test_multimodal_frame_sample_resize_audio(spark):
@@ -1635,16 +1645,17 @@ def test_retention_cohorts_toy(spark):
 
 
 def test_lsh_arrow_kernel_guards_and_halfup(spark):
-    """Round-7 review hardening of the Arrow signature kernel: NaN / NULL
-    embeddings fail loudly (a NaN would quantize to INT64_MIN silently),
-    band_bits > 31 is refused (int32 signature would wrap), and the
-    quantization is exact BigDecimal-HALF_UP (the floor(y+0.5) form
-    rounds up spuriously at binade boundaries)."""
+    """Hardening of the Arrow signature kernel: NaN / NULL embeddings fail
+    loudly (a NaN would quantize to INT64_MIN silently), band_bits > 31 is
+    refused (int32 signature would wrap), so is a plane count that does
+    not split into bands, and the quantization is exact BigDecimal-HALF_UP
+    (the floor(y+0.5) form rounds up spuriously at binade boundaries)."""
     import numpy as np
     import pytest as _pytest
 
     from fink_filters_spark.operators.similarity import (
         _band_signatures_arrow,
+        _quantize_np,
         sign_planes,
     )
 
@@ -1664,10 +1675,10 @@ def test_lsh_arrow_kernel_guards_and_halfup(spark):
         [(1, vals[:2])] + [(i + 2, vals[2 * i + 2:2 * i + 4]) for i in range(30)],
         "vec_id long, embedding array<double>",
     )
+    # the kernel's own quantization, over the rows as the kernel sees them
     got = {
-        r["__i"]: list(r["__q"])
-        for r in _band_signatures_arrow(ok, "vec_id", "embedding", planes, 8,
-                                        "__i", "__q", "__n").collect()
+        r["vec_id"]: _quantize_np(np.asarray([r["embedding"]], dtype=np.float64))[0].tolist()
+        for r in ok.collect()
     }
     from pyspark.sql import functions as F2
 
@@ -1686,24 +1697,23 @@ def test_lsh_arrow_kernel_guards_and_halfup(spark):
         [(1, [float("nan"), 1.0])], "vec_id long, embedding array<double>"
     )
     with _pytest.raises(Exception, match="NaN"):
-        _band_signatures_arrow(bad_nan, "vec_id", "embedding", planes, 8,
-                               "__i", "__q", "__n").collect()
+        _band_signatures_arrow(bad_nan, "vec_id", "embedding", planes, 8, "__i").collect()
 
     bad_null = spark.createDataFrame(
         [(1, None)], "vec_id long, embedding array<double>"
     )
     with _pytest.raises(Exception, match="NULL embedding"):
-        _band_signatures_arrow(bad_null, "vec_id", "embedding", planes, 8,
-                               "__i", "__q", "__n").collect()
+        _band_signatures_arrow(bad_null, "vec_id", "embedding", planes, 8, "__i").collect()
 
     with _pytest.raises(ValueError, match="band_bits"):
-        _band_signatures_arrow(ok, "vec_id", "embedding",
-                               sign_planes(32, 2), 32, "__i", "__q", "__n")
+        _band_signatures_arrow(ok, "vec_id", "embedding", sign_planes(32, 2), 32, "__i")
+    with _pytest.raises(ValueError, match="multiple of band_bits"):
+        _band_signatures_arrow(ok, "vec_id", "embedding", sign_planes(12, 2), 8, "__i")
 
 
 def test_lsh_arrow_kernel_string_ids(spark):
     """The id column passes through with ITS declared type — string ids
-    (supported by the non-Arrow path) must not break the Arrow schema."""
+    (supported by the Catalyst path) must not break the Arrow schema."""
     from fink_filters_spark.operators.similarity import (
         _band_signatures_arrow,
         sign_planes,
@@ -1713,8 +1723,8 @@ def test_lsh_arrow_kernel_string_ids(spark):
         [("a-1", [1.0, 2.0]), ("b-2", [2.0, 1.0])],
         "vec_id string, embedding array<double>",
     )
-    out = _band_signatures_arrow(df, "vec_id", "embedding",
-                                 sign_planes(8, 2), 8, "__i", "__q", "__n")
+    out = _band_signatures_arrow(df, "vec_id", "embedding", sign_planes(8, 2), 8, "__i")
+    assert out.schema["__i"].dataType.simpleString() == "string"
     assert {r["__i"] for r in out.collect()} == {"a-1", "b-2"}
 
 

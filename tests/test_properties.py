@@ -937,6 +937,84 @@ def test_connected_components_paths_agree_property(spark, graph):
     assert sorted(map(tuple, dist.collect())) == want
 
 
+def _tfidf_cosines(rows, idf_scale=1000):
+    """Unrounded TF-IDF cosines of ``sparse_cosine_pairs`` for every id
+    pair (a < b) with nonzero norms, computed here in plain Python."""
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
+
+    tfs = {i: Counter(t.split()) for i, t in rows}
+    dfreq = Counter(w for tf in tfs.values() for w in tf)
+    idf = {
+        w: int(Decimal(math.log(len(rows) / d) * idf_scale).quantize(Decimal(1), ROUND_HALF_UP))
+        for w, d in dfreq.items()
+    }
+    vec = {i: {w: c * idf[w] for w, c in tf.items()} for i, tf in tfs.items()}
+    nn = {i: sum(x * x for x in v.values()) for i, v in vec.items()}
+    return {
+        (a, b): sum(x * vec[b].get(w, 0) for w, x in vec[a].items())
+        / math.sqrt(nn[a]) / math.sqrt(nn[b])
+        for a in vec for b in vec if a < b and nn[a] > 0 and nn[b] > 0
+    }
+
+
+@st.composite
+def _tfidf_corpora(draw):
+    """(id type, rows, tau): documents over a five-word vocabulary. Some
+    corpora add a word to every document plus a document holding only that
+    word (idf 0, so that document's norm is 0); some repeat one document,
+    so every term is in every document and every norm is 0. tau is set
+    exactly to a cosine the corpus attains when it attains a positive one."""
+    typ = draw(st.sampled_from(["int", "long"]))
+    n = draw(st.integers(min_value=2, max_value=7))
+    doc = st.lists(st.sampled_from(["red", "green", "blue", "cyan", "zeta"]),
+                   min_size=1, max_size=6)
+    docs = draw(st.lists(doc, min_size=n, max_size=n))
+    shape = draw(st.sampled_from(["plain", "common", "repeated"]))
+    if shape == "common":
+        docs = [d + ["common"] for d in docs] + [["common"] * draw(st.integers(1, 3))]
+    elif shape == "repeated":
+        docs = [docs[0]] * n
+    ids = draw(st.lists(st.integers(min_value=-40, max_value=40),
+                        min_size=len(docs), max_size=len(docs), unique=True))
+    rows = [(i, " ".join(d)) for i, d in zip(ids, docs)]
+    attained = sorted(c for c in _tfidf_cosines(rows).values() if c > 0)
+    tau = draw(st.sampled_from(attained)) if attained else 0.5
+    return typ, rows, tau
+
+
+_ZERO_NORM_DOC = [(1, "red common"), (2, "red blue common"), (3, "common")]
+
+
+@SLOW
+@given(corpus=_tfidf_corpora())
+@example(corpus=("long", _ZERO_NORM_DOC, _tfidf_cosines(_ZERO_NORM_DOC)[(1, 2)]))
+@example(corpus=("int", [(4, "red blue"), (-3, "red blue")], 0.5))
+def test_sparse_cosine_dense_and_posting_paths_agree(spark, corpus):
+    """The dense block-matmul path and the posting join (forced by a 0
+    vocabulary bound) of ``sparse_cosine_pairs`` return identical rows AND
+    schema, on corpora with zero-norm documents and with tau exactly on an
+    attained cosine, and the pairs are the ones computed here."""
+    from unittest import mock
+
+    import fink_filters_spark.operators.dedup as d
+
+    typ, rows, tau = corpus
+    df = spark.createDataFrame(rows, f"doc_id {typ}, text string")
+
+    def run():
+        out = d.sparse_cosine_pairs(df, "doc_id", "text", tau=tau)
+        return out.schema, sorted(map(tuple, out.collect()))
+
+    dense = run()
+    with mock.patch.object(d, "_DENSE_MAX_VOCAB", 0):
+        posting = run()
+    spark.catalog.clearCache()
+    assert dense == posting
+    want = sorted(k for k, c in _tfidf_cosines(rows).items() if c >= tau)
+    assert [(a, b) for a, b, _ in dense[1]] == want
+
+
 @settings(max_examples=50, deadline=None)
 @given(
     st.lists(

@@ -53,13 +53,19 @@ def value_hash(rows: list[dict]) -> str:
 
 
 def main() -> int:
+    import os
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = set(sys.argv[2:])
+    if not os.path.isdir(sf_dir):
+        print(__doc__.strip().splitlines()[-1], file=sys.stderr)
+        print(f"not a data directory: {sf_dir!r}", file=sys.stderr)
+        return 2
+
     import duckdb
 
     from fink_filters_spark.session import get_session
     from fink_filters_spark.tables import TABLE_NAMES
-
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
 
