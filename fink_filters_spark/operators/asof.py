@@ -24,7 +24,7 @@ The carried payload is ONE STRUCT per right row, not per-column lasts:
 per-column ``last(ignorenulls)`` cannot tell a genuinely NULL right value
 from a left-row placeholder, so it would skip NULL payloads (carrying a
 STALE older value) and could stitch columns from DIFFERENT right rows
-into a row that never existed (round-7 review finding).
+into a row that never existed.
 """
 
 from __future__ import annotations
@@ -38,8 +38,7 @@ _RESERVED = ("__t", "__is_r", "__p")
 def _time_key(df: DataFrame, col: str):
     """Order key in microseconds for integral or timestamp time columns.
     A bare cast('long') on a TIMESTAMP yields epoch SECONDS — sub-second
-    ordering lost, a later-in-the-same-second right row would match
-    (round-7 review finding)."""
+    ordering lost, a later-in-the-same-second right row would match."""
     dt = df.schema[col].dataType.simpleString()
     if dt in ("timestamp", "timestamp_ntz"):
         return F.unix_micros(F.col(col).cast("timestamp"))

@@ -289,7 +289,7 @@ def unimax_allocation(
     # a NULL token count is a data error, not a stratum: it would be
     # counted in NEITHER sat_tok nor n_unsat (saturated = NULL) yet still
     # fall into the allocation CASE's ELSE branch and receive the full
-    # water level — silently over-allocating the budget (round-7 review)
+    # water level — silently over-allocating the budget
     n_tok = F.when(
         F.col(tokens_col).isNotNull(), F.col(tokens_col).cast("long")
     ).otherwise(

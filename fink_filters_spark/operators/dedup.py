@@ -1,42 +1,44 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Five families. Set math (joins, aggregations, band generation) is native
-Catalyst; the Python stages are the block-pair cosine matmul and the
-Arrow-vectorized gram kernels of ``operators/grams.py`` — per-character
-polynomial hashing is exactly the
-workload where interpreted HOF lambdas lose to a NumPy batch kernel
-(pyspark guide: "Pandas UDFs beat row-at-a-time by 10-100x"); pure-
-Catalyst references (``_hashed_shingled_native``,
-``winnowing_fingerprints_native``, ``simhash_agg``) keep the no-Python
-path available and bit-identical. Every text operator here accepts any
-id type; only ``sparse_cosine_pairs`` and ``embedding_pairs`` need
-integer ids (anything else raises ``TypeError`` up front) and return
-them in the input's type.
+Set math (joins, aggregations, band generation) is native Catalyst; the
+Python stages are the block-pair cosine matmul and the Arrow-vectorized
+gram kernels of ``operators/grams.py``, because per-character polynomial
+hashing is where interpreted higher-order lambdas lose to a NumPy batch
+kernel. Pure-Catalyst references (``_hashed_shingled_native``,
+``winnowing_fingerprints_native``, ``simhash_agg``) keep a bit-identical
+no-Python path. Every text operator accepts any id type; only
+``sparse_cosine_pairs`` and ``embedding_pairs`` need integer ids (anything
+else raises ``TypeError`` up front) and return them in the input's type.
 
-- exact        — normalize + hash-groupBy; one shuffle on the text hash.
-- n-gram Jaccard — exact set similarity over word n-gram shingles via an
-  inverted-index join (shingle -> postings), NOT an all-pairs cross join:
-  pairs are generated only for docs sharing >=1 shingle, then Jaccard is
-  |∩| / (|A|+|B|-|∩|) from the co-occurrence count. This is the
-  scale-correct exact path (shuffle keyed by shingle; AQE splits skewed
-  postings).
-- MinHash + LSH — signature = min over shingle hashes of (a·h+b) mod P for
-  H fixed (a,b) pairs; band keys of r rows; candidate pairs via equi-join on
-  band key; verified against exact Jaccard. Integer-only math so the DuckDB
-  oracle reproduces it bit-for-bit.
-- SimHash      — 48-bit fingerprint from word hashes; near-dup = Hamming
-  distance <= k. Candidates via 4x12-bit band join: Hamming<=3 guarantees
-  >=1 identical band (pigeonhole), so the band join is lossless vs the
-  cross join.
-- cosine       — embedding cosine over quantized array<float> vectors
-  (functions/vectors.py) and sparse TF-IDF cosine share one block-pair
-  int64 matmul kernel (``_block_cosine_pairs``); sparse cosine takes it
-  when the vocabulary is small and an inverted-index posting join
-  otherwise. Exact all-pairs here; LSH/IVF variants in
-  operators/similarity.py for the 100 TB path.
+- exact — normalize + hash-groupBy; one shuffle on the text hash.
+- shingle pairs — word n-gram shingle sets. ``jaccard_pairs`` and
+  ``containment_pairs`` are exact, by an inverted-index co-occurrence join
+  (pairs only for docs sharing a shingle). ``minhash_lsh_pairs`` and
+  ``minhash_lookup`` bucket MinHash signatures into bands and verify the
+  candidates by exact Jaccard; integer-only math, so the DuckDB oracles
+  reproduce them bit for bit.
+- winnowing — MOSS fingerprints, the pairs sharing them and the positions
+  where they overlap.
+- spans — ExactSubstr: token spans shared by >= 2 documents, profiled
+  (``duplicated_spans``) or cut out (``trim_duplicated_spans``).
+- decontamination — drop or score training documents by their n-gram
+  overlap with an evaluation set.
+- SimHash — 48-bit fingerprints; near-dup = Hamming distance <= k, with
+  candidates from a 4 x 12-bit band join, lossless for Hamming <= 3 by
+  pigeonhole.
+- cosine — embedding cosine, sparse TF-IDF cosine and SemDeDup over one
+  block-pair int64 matmul kernel (``_block_cosine_pairs``) or a posting
+  join; LSH/IVF variants live in operators/similarity.py.
+- components — connected components of a pair graph.
+
+The shingle-set pair joins share one band-bucket join (``_band_pairs``),
+one exact verification (``_verified_jaccard``) and one representative
+collapse (``_representatives``), decided from the data (DESIGN.md, Dedup).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
@@ -108,20 +110,16 @@ def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def _hashed_shingled_native(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """Pure-Catalyst variant of ``_hashed_shingled`` (HOF char-folds).
-
-    Kept as the no-Python reference path; ~6x slower than the Arrow kernel
-    because the per-character polynomial fold evaluates as interpreted
-    higher-order lambdas (outside whole-stage codegen).
+    """Pure-Catalyst variant of ``_hashed_shingled`` (HOF char-folds), the
+    no-Python reference path; slower than the Arrow kernel because the
+    per-character fold runs as interpreted higher-order lambdas.
     """
     from ..functions.text import combine_word_hashes, word_hashes
 
-    # the cache() between the two selects is a hard optimizer barrier: the
-    # projection-collapse/pushdown rules otherwise inline the word_hashes
-    # expression into every element_at of the combine stage, re-hashing all
-    # words per shingle position (observed 56s instead of ~5s at sf0.1 —
-    # an exchange alone does NOT block it, projections push through
-    # exchanges). The cached stage is tiny (ids + word-hash arrays).
+    # the cache() is an optimizer barrier: without it projection collapse
+    # inlines word_hashes into every element_at of the combine stage and
+    # re-hashes all words per shingle position (an exchange does not block
+    # it)
     wh = _spread(df).select(F.col(id_col).alias("__id"), word_hashes(text_col).alias("__wh"))
     wh = wh.cache()
     return wh.select("__id", combine_word_hashes("__wh", n).alias("__sh")).filter(
@@ -172,18 +170,16 @@ def _hashed_shingled(
     return _map_text(df, id_col, text_col, body, schema)
 
 
-def simhash_fingerprints(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, bits: int = SIMHASH_BITS
-) -> DataFrame:
-    """(__id, __sim): SimHash fingerprints in ONE fused Arrow pass — the
-    shingle-hash kernel's flat arrays feed a vectorized bit-majority
-    (per-bit affine rehashes ``((ss*a_j+b_j) % P) & 1`` summed per doc via
-    ``np.add.reduceat``; see SIMHASH_AB for why raw hash bits are NOT
-    usable), so no explode, no shuffle, no 48-buffer aggregate. Identical
-    integer semantics to ``simhash_agg`` (majority rule
+def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
+    """(__id, __sim): ``SIMHASH_BITS``-bit SimHash fingerprints in ONE
+    fused Arrow pass — the shingle-hash kernel's flat arrays feed a
+    vectorized bit-majority (per-bit affine rehashes ``((ss*a_j+b_j) % P) &
+    1`` summed per doc via ``np.add.reduceat``; see SIMHASH_AB for why raw
+    hash bits are NOT usable), so no explode, no shuffle, no per-bit
+    aggregate. Identical integer semantics to ``simhash_agg`` (majority rule
     2·bitsum > n_shingles) and the DuckDB oracle."""
-    ab = np.array(SIMHASH_AB[:bits], dtype=np.int64)
-    weights = np.int64(1) << np.arange(bits, dtype=np.int64)
+    ab = np.array(SIMHASH_AB, dtype=np.int64)
+    weights = np.int64(1) << np.arange(SIMHASH_BITS, dtype=np.int64)
 
     def body(pdf):
         flat = _shingle_flat(pdf, n)
@@ -199,6 +195,13 @@ def simhash_fingerprints(
     return _map_text(df, id_col, text_col, body, "__id {id}, __sim long")
 
 
+def _jaccard(inter: Column, na: Column, nb: Column) -> Column:
+    """|A∩B| / |A∪B| as a double, from the intersection and the set sizes:
+    the one Jaccard expression of the pair operators (the SQL oracles spell
+    the same division)."""
+    return inter.cast("double") / (na + nb - inter).cast("double")
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -206,82 +209,37 @@ def jaccard_pairs(
     n: int = 3,
     tau: float = 0.5,
     max_df_frac: float | None = MAX_DF_FRAC,
-    collapse: bool | str = "auto",
     shingled: DataFrame | None = None,
 ) -> DataFrame:
     """Exact word-n-gram Jaccard near-dup pairs (id_a < id_b, jaccard >= tau)
-    via inverted-index join.
+    via inverted-index join: the co-occurrence count IS |A∩B|, so Jaccard
+    falls out of one pair aggregate with no separate verification pass.
 
-    ``shingled``: optional caller-cached precomputed shingle table (see
-    ``_cooccurrence``) — lets a query that also runs the MinHash pipeline
-    reuse ONE tokenize/hash kernel pass for both.
+    ``shingled``: optional caller-cached ``(__id, __sh[, __k])`` table
+    bit-identical to ``_hashed_shingled`` output (``minhash_signatures``'
+    is), so a query that also runs the MinHash pipeline tokenizes once. It
+    is collapsed to representatives exactly when it carries ``__k``.
 
-    Set sizes ride along with each posting, so Jaccard falls out of the
-    co-occurrence groupBy directly — one shuffle keyed by shingle, one by
-    pair, no extra joins.
+    ``max_df_frac`` (default 0.5): shingles in more than that fraction of
+    all documents are dropped from the shingle universe (``_cooccurrence``),
+    which caps the Σ df(s)² join cost of a boilerplate-heavy corpus. On a
+    corpus of >= ``GATE_MIN_DOCS`` documents where some shingle's df exceeds
+    the cap, the emitted similarity is the exact Jaccard over the FILTERED
+    universe; ``None`` keeps the raw contract over all shingles.
 
-    ``max_df_frac`` (DEFAULT ON at 0.5): shingles present in more than
-    that fraction of all documents are boilerplate separating nothing;
-    they are dropped from the shingle UNIVERSE (both the intersection
-    count and the set sizes — see ``_cooccurrence``), which caps the
-    quadratic Σ df(s)² join cost a boilerplate-heavy corpus would
-    otherwise pay. On a corpus with no such shingles (the packaged
-    testdata's max df is 25 of 5000 docs) the gate provably changes
-    nothing. Pass ``None`` for the raw exact-pair contract over ALL
-    shingles (the sub-quadratic scale path is ``minhash_lsh_pairs``).
-
-    .. note:: On a corpus of >= ``GATE_MIN_DOCS`` documents where some
-       shingle's df exceeds the cap, the emitted similarity is the exact
-       Jaccard over the FILTERED shingle universe, not over all shingles;
-       callers needing the raw contract pass ``max_df_frac=None``.
-
-    .. note:: NOT a pure lazy plan: the gate's purge probe, the adaptive
-       collapse probe, and the pair-key range probe each run ONE small
-       eager Spark job at call time (the data decides the plan shape), and
-       the plan holds a ``cache()`` on the collapse/kernel table — like
-       ``minhash_lsh_pairs`` / ``simhash_pairs`` / ``semantic_dedup``;
-       long-lived sessions calling these repeatedly should
-       ``spark.catalog.clearCache()`` between corpus passes, as
-       bench/stress do.
+    .. note:: NOT a pure lazy plan: the collapse probe and the pair-key
+       range probe run small eager jobs at call time, and the plan holds a
+       ``cache()``; long-lived sessions should ``spark.catalog.clearCache()``
+       between corpus passes (DESIGN.md, "Caches are scoped").
     """
-    # Inverted-index co-occurrence join: explode shingles (sizes ride along
-    # with each posting), pair docs sharing a shingle, and count — the count
-    # IS |A∩B|, so Jaccard falls out of one groupBy with partial (map-side)
-    # aggregation and no separate verification pass.
-    #
-    # REPRESENTATIVE COLLAPSE (same scheme as minhash_lsh_pairs): documents
-    # with identical shingle sets are first grouped, the inverted index runs
-    # over one representative per distinct set, and group members expand
-    # back afterward via streamed joins. Without this, g exact duplicates
-    # put g entries in EVERY posting list, and the co-occurrence join
-    # explodes as g^2 x |shingles| — a 10x-replicated stress corpus showed
-    # 22x wall-clock before the collapse, 1.xx after. The grouping keys on
-    # __k (32-byte sha256 of the sorted shingle bytes, computed inside the
-    # Arrow kernel) so the collapse shuffle hashes and compares fixed-width
-    # keys, never full arrays; the rep's array rides once as a first()
-    # payload for the posting explode. Identical-set pairs (Jaccard exactly
-    # 1) are emitted as rep self-pairs and expand through the SAME member
-    # joins as cross-set pairs — one code path, two fewer stages.
-    #
-    # Design note: AllPairs/SSJoin prefix filtering (index only the
-    # rarest-first (1-tau)|d|+1 shingles, then verify candidates) was
-    # benchmarked here and LOST (36s vs 14s at sf0.1): it only prunes under
-    # a skewed (Zipfian) document-frequency distribution, and its per-pair
-    # array_intersect verification is far costlier than counting. On a
-    # Zipf-like real corpus, revisit; for guaranteed sub-quadratic behavior
-    # use minhash_lsh_pairs.
+    # prefix filtering (AllPairs/SSJoin) loses to counting on corpora
+    # without a Zipfian df tail (DESIGN.md, Dedup; OPTIMIZATION_r11.md);
+    # minhash_lsh_pairs is the sub-quadratic path
     grp, co, kept = _cooccurrence(
-        df, id_col, text_col, n, max_df_frac, collapse, shingled=shingled,
-        # exact tau-implied size-ratio prefilter on the co-posting stream
-        # (see _cooccurrence docstring: provably drops no J >= tau pair)
-        min_size_ratio=tau,
+        df, id_col, text_col, n, max_df_frac, shingled=shingled, min_size_ratio=tau
     )
     verified = (
-        co.withColumn(
-            "jaccard",
-            F.col("__inter").cast("double")
-            / (F.col("__na") + F.col("__nb") - F.col("__inter")).cast("double"),
-        )
+        co.withColumn("jaccard", _jaccard(F.col("__inter"), F.col("__na"), F.col("__nb")))
         .filter(F.col("jaccard") >= tau)
         .select("__ra", "__rb", "jaccard")
     )
@@ -359,6 +317,39 @@ def winnowing_fingerprints_native(
     )
 
 
+def _winnow_postings(fps: DataFrame, id_col: str, max_df: int | None):
+    """``(postings, fps)``: the distinct ``(id_col, fp)`` postings of a
+    ``winnowing_fingerprints`` table (cached: both sides of the pair join
+    read them) and the table itself, both purged of fingerprints found in
+    more than ``max_df`` documents. Document frequency counts distinct
+    postings, so a purged span row is exactly one that could not count
+    towards its pair's ``shared_fps``."""
+    postings = fps.select(id_col, "fp").distinct().cache()
+    if max_df is None:
+        return postings, fps
+    keep = (
+        postings.groupBy("fp")
+        .agg(F.count(F.lit(1)).alias("__df"))
+        .filter(F.col("__df") <= max_df)
+        .select("fp")
+    )
+    return postings.join(keep, "fp"), fps.join(keep, "fp")
+
+
+def _winnow_pair_join(postings: DataFrame, id_col: str, min_shared: int) -> DataFrame:
+    """``(id_a < id_b, shared_fps >= min_shared)`` over distinct
+    ``(id_col, fp)`` postings: the posting self-join and pair count."""
+    a = postings.select(F.col(id_col).alias("id_a"), "fp")
+    b = postings.select(F.col(id_col).alias("id_b"), "fp")
+    return (
+        a.join(b, "fp")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("shared_fps"))
+        .filter(F.col("shared_fps") >= min_shared)
+    )
+
+
 def winnowing_pairs(
     df: DataFrame,
     id_col: str,
@@ -367,7 +358,6 @@ def winnowing_pairs(
     w: int = 4,
     min_shared: int = 2,
     max_df: int | None = None,
-    fingerprints: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup candidate pairs sharing winnowed fingerprints
     (id_a < id_b, ``shared_fps`` = count of common distinct fingerprint
@@ -377,43 +367,13 @@ def winnowing_pairs(
     length; higher ``min_shared`` trades recall for precision.
 
     Plan: row-local winnow -> distinct (doc, fp) postings -> equi-join on
-    fp -> pair groupBy. Candidate volume is Σ df(fp)² over fingerprint
-    document frequencies — the same cost law as every inverted-index
-    join here. At corpus scale, boilerplate shared by thousands of
-    documents dominates that sum while separating nothing: ``max_df``
-    drops fingerprints appearing in more than that many documents before
-    the join (the sparse-cosine ``max_df_frac`` / ER block-purge lever,
-    applied to winnowed postings).
+    fp -> pair groupBy, costing Σ df(fp)² like every inverted-index join
+    here. ``max_df`` drops fingerprints found in more than that many
+    documents before the join: boilerplate dominates that sum while
+    separating nothing.
     """
-    # cache the distinct postings: both join sides read them, and without
-    # the cache each side re-scans the corpus and re-runs the winnow fold
-    # (same clearCache() convention as jaccard_pairs/minhash_lsh_pairs —
-    # bench/stress clear between corpus passes). ``fingerprints`` is a
-    # caller-cached ``winnowing_fingerprints(df, id_col, text_col, k, w)``
-    # table, so a caller that also needs the positions runs the kernel once.
-    src = (
-        fingerprints
-        if fingerprints is not None
-        else winnowing_fingerprints(df, id_col, text_col, k=k, w=w)
-    )
-    sel = src.select(id_col, "fp").distinct().cache()
-    if max_df is not None:
-        keep = (
-            sel.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") <= max_df)
-            .select("fp")
-        )
-        sel = sel.join(keep, "fp")
-    a = sel.select(F.col(id_col).alias("id_a"), "fp")
-    b = sel.select(F.col(id_col).alias("id_b"), "fp")
-    return (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared_fps"))
-        .filter(F.col("shared_fps") >= min_shared)
-    )
+    fps = winnowing_fingerprints(df, id_col, text_col, k=k, w=w)
+    return _winnow_pair_join(_winnow_postings(fps, id_col, max_df)[0], id_col, min_shared)
 
 
 def winnowing_overlap_spans(
@@ -433,39 +393,16 @@ def winnowing_overlap_spans(
     produce position-aligned chains that downstream span-merging can
     stitch).
 
-    Plan: the per-doc fingerprints (row-local) explode once; the gated
-    pair list (id_a, id_b) is output-sized, so joining it back to the two
-    position postings is two equi-joins on (doc, fp)-shaped keys — no
-    quadratic stage beyond the already-bounded pair join.
-
-    ``max_df`` gates the SPAN postings with the same document-frequency
-    purge ``winnowing_pairs`` applies to its candidate join: a fingerprint
-    appearing in more than ``max_df`` documents is boilerplate, and
-    without the gate the span join would re-pay exactly the Σ df(fp)²
-    cost the pair-stage purge removed (spans for surviving pairs would
-    also report boilerplate overlaps the pair gate never counted).
+    Plan: the gated pair list (id_a, id_b) is output-sized, so joining it
+    back to the two position postings is two equi-joins on (doc, fp)-shaped
+    keys — no quadratic stage beyond the pair join. ``max_df`` purges the
+    pair postings and the span postings with one gate, so the span join
+    does not re-pay the Σ df(fp)² cost the purge removed.
     """
-    # the cached fingerprint table feeds winnowing_pairs too, so the Arrow
-    # winnow kernel runs once for the pair gate and the span postings
-    raw_fps = winnowing_fingerprints(df, id_col, text_col, k=k, w=w).cache()
-    fps = raw_fps
-    if max_df is not None:
-        # df is counted over DISTINCT (doc, fp) postings — identical to the
-        # pair stage's gate, so a span row exists iff its fingerprint could
-        # have contributed to the pair's shared_fps count
-        keep = (
-            fps.select(id_col, "fp")
-            .distinct()
-            .groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") <= max_df)
-            .select("fp")
-        )
-        fps = fps.join(keep, "fp")
-    pairs = winnowing_pairs(
-        df, id_col, text_col, k=k, w=w, min_shared=min_shared, max_df=max_df,
-        fingerprints=raw_fps,
-    ).select("id_a", "id_b")
+    # one cached kernel run feeds the pair gate and the span postings
+    fps = winnowing_fingerprints(df, id_col, text_col, k=k, w=w).cache()
+    postings, fps = _winnow_postings(fps, id_col, max_df)
+    pairs = _winnow_pair_join(postings, id_col, min_shared).select("id_a", "id_b")
     a = fps.select(
         F.col(id_col).alias("id_a"), F.col("fp"), F.col("pos").alias("pos_a")
     )
@@ -485,95 +422,45 @@ def _cooccurrence(
     text_col: str,
     n: int,
     max_df_frac: float | None = None,
-    collapse: bool | str = "auto",
     shingled: DataFrame | None = None,
     min_size_ratio: float | None = None,
 ):
     """Shared inverted-index core of ``jaccard_pairs`` / ``containment_pairs``:
-    the representative-collapse table and the per-rep-pair co-occurrence
-    counts (__ra < __rb, set sizes __na/__nb, |A∩B| __inter).
+    ``(grp, co, kept)`` — the collapse table of ``_representatives``, the
+    per-rep-pair co-occurrence counts (__ra < __rb, set sizes __na/__nb,
+    |A∩B| __inter) and the per-rep filtered set sizes.
 
-    ``max_df_frac`` is the boilerplate purge lever (the winnowing
-    ``max_df`` / sparse-cosine ``max_df_frac`` pattern applied to the
-    exact-pair contract): shingles whose DOCUMENT frequency exceeds
-    ``max_df_frac * N`` are removed from the shingle UNIVERSE — excluded
-    from both the co-occurrence counts AND the set sizes, so the emitted
-    similarity is the exact Jaccard/containment over the surviving
-    (informative) shingles. That bounds the Σ df(s)² candidate-join cost
-    at df_cap², degrading gracefully on boilerplate-heavy corpora where
-    the ungated operator is quadratic. Cost of the gate: one NARROW
-    (shingle, gsz) aggregate plus two broadcast joins of the purged list
-    (tiny by construction — only shingles in > max_df_frac of ALL
-    documents qualify) — the posting stream itself is never reshuffled.
-    Returns a third element: the per-rep FILTERED set sizes (``__rid``,
-    ``__n``), which callers use to suppress identical-set self-pairs
-    whose surviving set is empty (0/0 similarity — such a pair shares
-    only boilerplate and is exactly what the gate is asked to drop; the
-    SQL oracles' filtered posting join has no row for it either).
+    ``max_df_frac``: shingles whose DOCUMENT frequency exceeds
+    ``max_df_frac * N`` are removed from the shingle universe — from the
+    co-occurrence counts AND the set sizes — so the similarity is exact
+    over the informative shingles and the Σ df(s)² join cost is bounded.
+    The purged list is tiny by construction and broadcast; the posting
+    stream is not reshuffled. ``kept`` (``__rid``, ``__n``) lets callers
+    drop identical-set self-pairs whose surviving set is empty (they
+    share only boilerplate; the SQL oracles have no row for them either).
 
-    ``collapse`` is the same adaptive three-valued knob as
-    ``minhash_lsh_pairs``: the representative collapse pays a corpus-wide
-    groupBy that shuffles every shingle ARRAY, which buys nothing on a
-    duplication-light corpus (every group a singleton — 0.16% duplicates
-    on the 100x stress table, yet the shuffle cost ~6.5s). ``"auto"``
-    probes ``_duplicate_fraction`` (one narrow JVM aggregate) and skips
-    the collapse below ``COLLAPSE_DUP_FRAC``; the no-collapse branch
-    returns ``grp=None`` (``_expand_rep_pairs`` then emits the pairs as
-    they are — identical-set pairs surface through the ordinary
-    co-occurrence join at similarity exactly 1, so the emitted pair set
-    is bit-identical).
+    ``shingled``: a caller-cached table, see ``jaccard_pairs``.
 
-    NOTE the returned frames embed EAGER probe results (duplicate
-    fraction, purge list, id range) — the plan branch is frozen to the
-    data at call time, not re-decided per action, and the no-collapse /
-    gated branches hold a ``cache()`` (see ``jaccard_pairs``).
+    ``min_size_ratio``: a Jaccard caller keeping ``J >= tau`` passes tau,
+    and co-posting rows with ``least(na,nb)/greatest(na,nb) < tau`` are
+    dropped inside the posting self-join. Exact: ``J = inter/union <=
+    min/max`` (inter <= min, union >= max) and correctly-rounded division
+    is monotone, so no ``J >= tau`` pair is lost, including pairs on tau.
+    Not valid for containment (``inter/min`` has no size-ratio bound).
 
-    ``shingled``: a precomputed ``(__id, __sh[, __k])`` frame that is
-    bit-identical to ``_hashed_shingled(df, id_col, text_col, n)``
-    output (e.g. ``minhash_signatures``' fused table, whose shingle
-    columns come from the same ``grams._shingle_flat`` producer) and is
-    CACHED BY THE CALLER. When given, this operator runs no shingle
-    kernel of its own — an audit query running the exact and the
-    approximate pipeline side by side pays the tokenize/hash pass once.
-
-    ``min_size_ratio``: a Jaccard caller that will keep only pairs
-    with ``J >= tau`` may pass ``tau`` here, and co-posting rows whose
-    set-size ratio ``least(na,nb)/greatest(na,nb)`` falls below it are
-    dropped INSIDE the posting self-join, before the Σ df(s)²
-    co-occurrence aggregate — 23.7% of all co-posting rows (and 24.8% of
-    aggregated pairs) on the packaged corpus, measured at sf0.1.
-    EXACTNESS: rationally ``J = inter/union <= min(na,nb)/max(na,nb)``
-    (inter <= min, union >= max), and correctly-rounded double division
-    is monotone, so ``double(min/max) >= double(J)``; every pair the
-    caller's ``double(J) >= tau`` filter would keep therefore passes this
-    prefilter — the emitted pair set is bit-identical. NOT valid for
-    containment (``inter/min`` has no size-ratio bound) — containment
-    callers leave it None. Cost: the posting shuffle carries ``__n``
-    (8 bytes/row) up to the join instead of dropping it at the scan.
+    The returned frames embed eager probe results (collapse, purge list,
+    id range), frozen to the data at call time.
     """
-    if collapse == "auto":
-        collapse = _duplicate_fraction(df, text_col) >= COLLAPSE_DUP_FRAC
-    if shingled is None:
-        shingled = _hashed_shingled(df, id_col, text_col, n, with_key=collapse)
-        if not collapse:
-            # the kernel output doubles as the posting source and the probe
-            # table below
-            shingled = shingled.cache()
-    if collapse:
-        grp = _collapse(shingled, "__k", "__sh")
-        base = grp.select(F.col("__rid").alias("__id"), "__sh", "__gsz")
-    else:
-        grp = None
-        base = shingled.select("__id", "__sh", F.lit(1).alias("__gsz"))
+    grp, base = _representatives(df, id_col, text_col, n, shingled, _hashed_shingled, "__sh")
     postings = base.select(
-        "__id", F.size("__sh").alias("__n"), "__gsz",
+        "__rid", F.size("__sh").alias("__n"), "__gsz",
         F.explode("__sh").alias("__s"),
     )
     # id min/max/count of the collapse/kernel table: the pair-key range
     # probe, and the broadcast bound of the size re-join
     id_stats = [
-        F.min("__id").alias("mn"),
-        F.max("__id").alias("mx"),
+        F.min("__rid").alias("mn"),
+        F.max("__rid").alias("mx"),
         F.count(F.lit(1)).alias("n"),
     ]
     kept = None
@@ -603,9 +490,9 @@ def _cooccurrence(
         # the identity, and the ungated plan below is bit-identical
         if stats["np"] > 0:
             cut = (
-                postings.select("__id", "__s")
+                postings.select("__rid", "__s")
                 .join(F.broadcast(purged), "__s")
-                .groupBy("__id")
+                .groupBy("__rid")
                 .agg(F.count(F.lit(1)).alias("__cut"))
             )
             # cache the gated postings: both co-occurrence sides, the kept
@@ -613,22 +500,20 @@ def _cooccurrence(
             # otherwise re-run the purge subtree
             postings = (
                 postings.join(F.broadcast(purged), "__s", "left_anti")
-                .join(F.broadcast(cut), "__id", "left")
+                .join(F.broadcast(cut), "__rid", "left")
                 .withColumn("__n", F.col("__n") - F.coalesce("__cut", F.lit(0)))
                 .drop("__cut", "__gsz")
                 .cache()
             )
             # per-rep surviving set sizes; a rep whose shingles were all
             # purged has no postings left, so it is absent here
-            kept = postings.select(F.col("__id").alias("__rid"), "__n").distinct()
+            kept = postings.select("__rid", "__n").distinct()
     postings = postings.drop("__gsz")
     a, b = postings.alias("a"), postings.alias("b")
-    join_cond = (F.col("a.__s") == F.col("b.__s")) & (
-        F.col("a.__id") < F.col("b.__id")
-    )
+    ida, idb = F.col("a.__rid"), F.col("b.__rid")
+    join_cond = (F.col("a.__s") == F.col("b.__s")) & (ida < idb)
     if min_size_ratio is not None:
-        # exact prefilter (docstring): min/max size ratio upper-bounds J,
-        # and double division is monotone, so no >= tau pair can be lost
+        # exact prefilter (docstring): min/max upper-bounds J
         join_cond = join_cond & (
             F.least(F.col("a.__n"), F.col("b.__n")).cast("double")
             / F.greatest(F.col("a.__n"), F.col("b.__n")).cast("double")
@@ -639,13 +524,13 @@ def _cooccurrence(
     # representative; the re-join broadcasts while the table is small
     # (~8M rows ≈ 100 MB) and stays a shuffle join above that
     sizes = kept if kept is not None else base.select(
-        F.col("__id").alias("__rid"), F.size("__sh").alias("__n")
+        "__rid", F.size("__sh").alias("__n")
     )
     if stats["n"] <= 8_000_000:
         sizes = F.broadcast(sizes)
-    id_type = base.schema["__id"].dataType
+    id_type = base.schema["__rid"].dataType
     co = (
-        _pair_aggregate(joined, F.count(F.lit(1)).alias("__inter"), id_type, stats)
+        _pair_aggregate(joined, ida, idb, F.count(F.lit(1)).alias("__inter"), id_type, stats)
         .join(sizes.select(F.col("__rid").alias("__ra"), F.col("__n").alias("__na")), "__ra")
         .join(sizes.select(F.col("__rid").alias("__rb"), F.col("__n").alias("__nb")), "__rb")
         .select("__ra", "__rb", "__na", "__nb", "__inter")
@@ -653,16 +538,17 @@ def _cooccurrence(
     return grp, co, kept
 
 
-def _pair_aggregate(joined: DataFrame, agg: Column, id_type, stats) -> DataFrame:
-    """``(__ra, __rb, agg)``: a co-posting self-join (sides aliased ``a``
-    and ``b``, ids ``__id``) aggregated per id pair, ids in ``id_type``.
+def _pair_aggregate(
+    joined: DataFrame, a: Column, b: Column, agg: Column, id_type, stats
+) -> DataFrame:
+    """``(__ra, __rb, agg)``: a co-posting self-join aggregated per id pair
+    ``(a, b)``, ids in ``id_type``.
 
     The aggregate shuffles one row per co-posting (Σ df(s)² rows), so its
     key width dominates the pair pipelines. Integral ids inside
     [0, 2^31) — ``stats`` holds their ``mn``/``mx`` — pack into ONE int64
     key ``a << 32 | b`` (49.4 → 17.1 s on the 100x stress co-occurrence
     step, OPTIMIZATION_r10.md); any other ids group on the pair itself."""
-    a, b = F.col("a.__id"), F.col("b.__id")
     if not (
         isinstance(id_type, IntegralType)
         and stats["mn"] is not None and stats["mn"] >= 0 and stats["mx"] < 2**31
@@ -684,12 +570,8 @@ def _collapse(sh: DataFrame, key: str, *payload: str) -> DataFrame:
     """The representative collapse: one cached row per distinct ``key``
     with the min id ``__rid``, the member ids ``__members``, the group
     size ``__gsz`` and the ``payload`` columns of one member (functions
-    of the key, so any member's)."""
-    if key not in sh.columns:
-        raise ValueError(
-            f"collapse=True needs the {key} set-identity column "
-            "(with_key=True upstream)"
-        )
+    of the key, so any member's). g copies of a document would otherwise
+    put g entries in every posting or band and square the candidate join."""
     return (
         sh.groupBy(key)
         .agg(
@@ -702,6 +584,33 @@ def _collapse(sh: DataFrame, key: str, *payload: str) -> DataFrame:
     )
 
 
+def _representatives(
+    df: DataFrame, id_col: str, text_col: str, n: int,
+    table: DataFrame | None, kernel: Callable, *payload: str,
+):
+    """``(grp, reps)`` of a shingle-set pair join: ``reps`` holds one row
+    per representative (``__rid``, ``__gsz`` and the ``payload`` columns),
+    and ``grp`` is the ``_collapse`` table, or None when every document is
+    its own representative.
+
+    A caller-cached ``table`` (``kernel`` output) is collapsed exactly when
+    it carries the set-identity key ``__k``. Without one, ``kernel`` runs
+    here and emits the key only when ``_duplicate_fraction`` reaches
+    ``COLLAPSE_DUP_FRAC``: the collapse shuffles every shingle array, which
+    pays only on a duplicate-heavy corpus (DESIGN.md, Dedup). Both branches
+    emit the same pairs: identical sets share every shingle and band."""
+    if table is None:
+        keyed = _duplicate_fraction(df, text_col) >= COLLAPSE_DUP_FRAC
+        table = kernel(df, id_col, text_col, n, with_key=keyed)
+        if not keyed:
+            # several branches read the kernel output: run it once
+            table = table.cache()
+    if "__k" in table.columns:
+        grp = _collapse(table, "__k", *payload)
+        return grp, grp
+    return None, table.withColumnRenamed("__id", "__rid").withColumn("__gsz", F.lit(1))
+
+
 def containment_pairs(
     df: DataFrame,
     id_col: str,
@@ -709,7 +618,6 @@ def containment_pairs(
     n: int = 3,
     tau: float = 0.8,
     max_df_frac: float | None = MAX_DF_FRAC,
-    collapse: bool | str = "auto",
 ) -> DataFrame:
     """Shingle-set CONTAINMENT near-dup pairs (id_a < id_b, containment >=
     tau): containment = |A∩B| / min(|A|, |B|) — the asymmetric-duplication
@@ -720,14 +628,11 @@ def containment_pairs(
     expansion through the shared representative collapse is direction-free
     (identical sets expand at containment exactly 1).
 
-    Scale: identical to ``jaccard_pairs`` — same collapse, same inverted
-    index, same output-sized expansion, same ``max_df_frac`` boilerplate
-    gate (see ``jaccard_pairs`` — DEFAULT ON at 0.5, filtered-universe
-    semantics, a no-op on corpora without >50%-df shingles); only the
-    verification expression differs. No reference parity claim:
-    fink-filters has no text-dedup surface; this serves the engine's
-    LLM-curation mandate."""
-    grp, co, kept = _cooccurrence(df, id_col, text_col, n, max_df_frac, collapse)
+    Scale: identical to ``jaccard_pairs`` — same collapse, inverted index,
+    expansion and ``max_df_frac`` gate; only the verification expression
+    differs, and there is no size-ratio prefilter. No reference parity
+    claim: fink-filters has no text-dedup surface."""
+    grp, co, kept = _cooccurrence(df, id_col, text_col, n, max_df_frac)
     verified = (
         co.withColumn(
             "containment",
@@ -819,6 +724,19 @@ def _expand_rep_pairs(
     )
 
 
+def _shingle_postings(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(__id, __s): one row per distinct hashed shingle of each document."""
+    return _hashed_shingled(df, id_col, text_col, n).select(
+        "__id", F.explode("__sh").alias("__s")
+    )
+
+
+def _eval_shingles(eval_df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(__s): the distinct shingles of the evaluation set, broadcast — an
+    eval suite is benchmark-sized, so the corpus side never shuffles."""
+    return F.broadcast(_shingle_postings(eval_df, id_col, text_col, n).select("__s").distinct())
+
+
 def decontaminate(
     df: DataFrame,
     eval_df: DataFrame,
@@ -836,16 +754,9 @@ def decontaminate(
     the whole pass is one corpus scan + broadcast semi join + anti join on
     the id; no shuffle of corpus text ever happens.
     """
-    eval_sh = (
-        _hashed_shingled(eval_df, id_col, text_col, n)
-        .select(F.explode("__sh").alias("__s"))
-        .distinct()
-    )
-    train_sh = _hashed_shingled(df, id_col, text_col, n).select(
-        "__id", F.explode("__sh").alias("__s")
-    )
     contaminated = (
-        train_sh.join(F.broadcast(eval_sh), "__s", "left_semi")
+        _shingle_postings(df, id_col, text_col, n)
+        .join(_eval_shingles(eval_df, id_col, text_col, n), "__s", "left_semi")
         .select(F.col("__id").alias(id_col))
         .distinct()
     )
@@ -874,16 +785,8 @@ def contamination_fraction(
     per-doc re-aggregation partial-aggregates map-side before the one
     shuffle on the doc id.
     """
-    eval_sh = (
-        _hashed_shingled(eval_df, id_col, text_col, n)
-        .select(F.explode("__sh").alias("__s"))
-        .distinct()
-        .withColumn("__hit", F.lit(1))
-    )
-    train_sh = _hashed_shingled(df, id_col, text_col, n).select(
-        "__id", F.explode("__sh").alias("__s")
-    )
-    flagged = train_sh.join(F.broadcast(eval_sh), "__s", "left")
+    eval_sh = _eval_shingles(eval_df, id_col, text_col, n).withColumn("__hit", F.lit(1))
+    flagged = _shingle_postings(df, id_col, text_col, n).join(eval_sh, "__s", "left")
     return (
         flagged.groupBy("__id")
         .agg(
@@ -927,6 +830,14 @@ def _span_flags(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     return spans.join(dup_grams, "__g").select("__id", "__pos", "__dup")
 
 
+def _covered_positions(flags: DataFrame, n: int) -> DataFrame:
+    """(__id, __pos): every token position covered by a duplicated span of
+    ``_span_flags`` output, once per covering span."""
+    return flags.filter(F.col("__dup")).select(
+        "__id", F.explode(F.sequence(F.col("__pos"), F.col("__pos") + (n - 1))).alias("__pos")
+    )
+
+
 def duplicated_spans(
     df: DataFrame,
     id_col: str,
@@ -952,9 +863,8 @@ def duplicated_spans(
     and the exact interval union via explode + count_distinct (positions,
     not pairs: O(n x spans)) — whose shared flagged-postings exchange
     executes once through Spark's runtime exchange reuse, so nothing is
-    cached and nothing recomputes. (A per-doc array-HOF union was tried
-    and rejected: interpreted flatten/array_distinct measured 5x at 10x
-    stress under full duplication; the codegen path stays linear.)
+    cached and nothing recomputes. A per-doc array-HOF union would run as
+    interpreted lambdas; the codegen path stays linear.
     """
     # The explicit hash exchange on __id is the ONE subtree both per-doc
     # aggregations consume: runtime exchange reuse executes the upstream
@@ -967,13 +877,9 @@ def duplicated_spans(
         F.sum(F.when(F.col("__dup"), 1).otherwise(0)).alias("n_dup_spans"),
     )
     cov = (
-        flat.filter(F.col("__dup"))
-        .select(
-            "__id",
-            F.explode(F.sequence(F.col("__pos"), F.col("__pos") + (n - 1))).alias("__p"),
-        )
+        _covered_positions(flat, n)
         .groupBy("__id")
-        .agg(F.count_distinct("__p").alias("covered_tokens"))
+        .agg(F.count_distinct("__pos").alias("covered_tokens"))
     )
     return counts.join(cov, "__id", "left").select(
         F.col("__id").alias(id_col),
@@ -1014,16 +920,7 @@ def trim_duplicated_spans(
             F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
         ).alias("__pos", "__tok"),
     )
-    cov = (
-        _span_flags(df, id_col, text_col, n)
-        .filter(F.col("__dup"))
-        .select(
-            "__id",
-            F.explode(
-                F.sequence(F.col("__pos"), F.col("__pos") + (n - 1))
-            ).alias("__pos"),
-        )
-    )
+    cov = _covered_positions(_span_flags(df, id_col, text_col, n), n)
     kept = toks.join(cov, ["__id", "__pos"], "left_anti")
     agg = kept.groupBy("__id").agg(
         F.count(F.lit(1)).alias("kept_tokens"),
@@ -1139,8 +1036,8 @@ def _band_key_cols() -> list[Column]:
     return cols
 
 
-#: ``collapse="auto"`` collapses only when the probed duplicate fraction
-#: exceeds this. 5% sits well above the probe's ~1% estimation error and
+#: ``_representatives`` collapses a corpus whose probed duplicate fraction
+#: reaches this. 5% sits well above the probe's ~1% estimation error and
 #: well below the duplication level where the collapse shuffle pays for
 #: itself (duplicate groups shrink the band self-join quadratically).
 COLLAPSE_DUP_FRAC = 0.05
@@ -1150,12 +1047,11 @@ def _duplicate_fraction(df: DataFrame, text_col: str) -> float:
     """Probed fraction of rows whose text duplicates another row's.
 
     One narrow JVM-only aggregate over the text column (xxhash64 +
-    HyperLogLog++ at rsd=0.02 — measured ~2x cheaper than 0.01 with error
-    still far inside the decision threshold): no shuffle of document
-    bodies, no Python worker, and Catalyst prunes the scan to the single
-    column. Identical text implies an identical shingle set, so this
-    lower-bounds the collapse opportunity ``minhash_lsh_pairs`` would find
-    (normalization can only merge more sets, never fewer)."""
+    HyperLogLog++ at rsd=0.02, whose error stays far inside the decision
+    threshold): no shuffle of document bodies, no Python worker, and
+    Catalyst prunes the scan to the single column. Identical text implies
+    an identical shingle set, so this lower-bounds the collapse
+    opportunity (normalization can only merge more sets, never fewer)."""
     row = df.agg(
         F.count(text_col).alias("__n"),
         F.approx_count_distinct(F.xxhash64(text_col), rsd=0.02).alias("__d"),
@@ -1166,97 +1062,72 @@ def _duplicate_fraction(df: DataFrame, text_col: str) -> float:
     return max(0.0, (n - row["__d"]) / n)
 
 
+def _band_pairs(a: DataFrame, b: DataFrame | None, keys: list[Column], *payload: str) -> DataFrame:
+    """The band-bucket join: distinct ``(__ra, __rb)`` pairs of an ``a`` row
+    and a ``b`` row (ids ``__rid``) sharing at least one band key of
+    ``keys``, with each side's ``payload`` columns as ``<col>_a`` /
+    ``<col>_b``. ``b=None`` joins ``a`` with itself and keeps
+    ``__ra < __rb``. A pair sharing several bands is emitted once."""
+
+    def bands(t: DataFrame) -> DataFrame:
+        return t.select("__rid", *payload, F.explode(F.array(*keys)).alias("__bk"))
+
+    x, y = bands(a).alias("a"), bands(a if b is None else b).alias("b")
+    cond = F.col("a.__bk") == F.col("b.__bk")
+    if b is None:
+        cond = cond & (F.col("a.__rid") < F.col("b.__rid"))
+    return x.join(y, cond).select(
+        F.col("a.__rid").alias("__ra"),
+        F.col("b.__rid").alias("__rb"),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for s in "ab" for c in payload],
+    ).distinct()
+
+
+def _verified_jaccard(cand: DataFrame, a: DataFrame, b: DataFrame, tau: float) -> DataFrame:
+    """``(__ra, __rb, jaccard)``: the candidate pairs whose exact Jaccard
+    over the ``__sh`` arrays of ``a`` and ``b`` (ids ``__rid``) reaches tau."""
+    sh_a = a.select(F.col("__rid").alias("__ra"), F.col("__sh").alias("__sha"))
+    sh_b = b.select(F.col("__rid").alias("__rb"), F.col("__sh").alias("__shb"))
+    return (
+        cand.join(sh_a, "__ra")
+        .join(sh_b, "__rb")
+        .withColumn("__inter", F.size(F.array_intersect("__sha", "__shb")))
+        .withColumn("jaccard", _jaccard(F.col("__inter"), F.size("__sha"), F.size("__shb")))
+        .filter(F.col("jaccard") >= tau)
+        .select("__ra", "__rb", "jaccard")
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     n: int = 3,
     tau: float = 0.5,
-    collapse: bool | str = "auto",
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash-LSH candidate generation + exact-Jaccard verification.
-
-    ``signatures``: optional caller-cached precomputed
-    ``minhash_signatures(df, id_col, text_col, n, with_key=collapse)``
-    table — an audit query running this pipeline next to the
-    exact-pair one pays the fused tokenize/hash/minima kernel once and
-    hands each consumer the same cached frame. Pass an explicit bool
-    ``collapse`` alongside it (with_key must match).
 
     Returns (id_a < id_b, jaccard) for candidate pairs sharing >=1 LSH band
     whose true Jaccard >= tau. Semantics are the *algorithm* (candidates may
     miss sub-threshold-probability pairs); the exact operator is
     ``jaccard_pairs``.
 
-    Representative collapse (scale fix, ADAPTIVE): documents with an
-    IDENTICAL shingle set have identical signatures, identical band keys,
-    and pairwise Jaccard exactly 1 — so the corpus can first be grouped by
-    shingle-set identity (``__k``, 32-byte sha256 of the sorted shingle
-    bytes — fixed-width AND collision-resistant, so the collapse stays
-    exact even adversarially; cache-lifetime note on ``jaccard_pairs``
-    applies here too) and LSH run on ONE representative per distinct set.
-    Exact-duplicate groups (the dominant near-dup class in a web-scale
-    corpus, and what a replicated stress corpus is made of) then cost
-    O(distinct sets) in the band join instead of O(docs), and the
-    quadratic within-group pair explosion happens only at the final
-    output-sized expansion, never in the candidate join or the
-    array_intersect verification. The emitted pair set is bit-identical to
-    running the naive algorithm per document: members inherit their
-    representative's bands (same set -> same bands), so rep-level
-    band-sharing <=> member-level band-sharing.
+    ``signatures``: optional caller-cached ``minhash_signatures`` table, so
+    an audit query running this next to the exact pipeline runs the fused
+    kernel once. It is collapsed exactly when it carries ``__k``.
 
-    The collapse itself costs one corpus-wide groupBy that shuffles the
-    shingle arrays; on a duplication-LIGHT corpus that shuffle buys
-    nothing (every group is a singleton), so ``collapse`` is three-valued:
-
-    - ``True``: always collapse (replicated / web-crawl corpora).
-    - ``False``: never collapse — band join runs per document. Output is
-      bit-identical (identical sets share all bands, so their pairs
-      surface through the ordinary candidate join at Jaccard 1).
-    - ``"auto"`` (default): one cheap JVM-only probe
-      (``_duplicate_fraction``: count + approx_count_distinct over
-      xxhash64(text), rsd=0.02 — a single column scan, no Python, no wide
-      shuffle) picks the branch at ``COLLAPSE_DUP_FRAC``. Callers that
-      know their corpus shape should pass an explicit bool and skip the
-      probe's extra scan.
+    Documents with an identical shingle set have identical bands and
+    Jaccard 1, so ``_representatives`` may run the band join over one
+    representative per set and expand members at the output; the pairs are
+    the same either way. Cache-lifetime note on ``jaccard_pairs``.
     """
-    if collapse == "auto":
-        collapse = _duplicate_fraction(df, text_col) >= COLLAPSE_DUP_FRAC
-    sig = signatures  # the caller holds its cache
-    if sig is None:
-        sig = minhash_signatures(df, id_col, text_col, n, with_key=collapse)
-        if not collapse:
-            # the band source and the verification lookup: one kernel run
-            sig = sig.cache()
-    nperm = len(MINHASH_AB)
-    if collapse:
-        # the signature is a function of the set: any member's will do
-        grp = reps = _collapse(sig, "__k", "__sh", *[f"m{i}" for i in range(nperm)])
-    else:
-        grp, reps = None, sig.withColumnRenamed("__id", "__rid")
-    bands = reps.select("__rid", F.explode(F.array(*_band_key_cols())).alias("__bk"))
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, (F.col("a.__bk") == F.col("b.__bk")) & (F.col("a.__rid") < F.col("b.__rid")))
-        .select(F.col("a.__rid").alias("__ra"), F.col("b.__rid").alias("__rb"))
-        .distinct()
+    grp, reps = _representatives(
+        df, id_col, text_col, n, signatures, minhash_signatures,
+        "__sh", *[f"m{i}" for i in range(len(MINHASH_AB))],
     )
-    sh_a = reps.select(F.col("__rid").alias("__ra"), F.col("__sh").alias("__sha"))
-    sh_b = reps.select(F.col("__rid").alias("__rb"), F.col("__sh").alias("__shb"))
-    verified = (
-        cand.join(sh_a, "__ra")
-        .join(sh_b, "__rb")
-        .withColumn("__inter", F.size(F.array_intersect("__sha", "__shb")))
-        .withColumn(
-            "jaccard",
-            F.col("__inter").cast("double")
-            / (F.size("__sha") + F.size("__shb") - F.col("__inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= tau)
-        .select("__ra", "__rb", "jaccard")
-    )
-    return _expand_rep_pairs(grp, verified)
+    cand = _band_pairs(reps, None, _band_key_cols())
+    return _expand_rep_pairs(grp, _verified_jaccard(cand, reps, reps, tau))
 
 
 def minhash_signatures(
@@ -1299,35 +1170,27 @@ def _bit_of(h, j: int):
     ).bitwiseAND(F.lit(1))
 
 
-def simhash_agg(hashed: DataFrame, hashes_col: str = "__hs",
-                bits: int = SIMHASH_BITS) -> DataFrame:
-    """(__id, __sim): SimHash via explode + codegen hash aggregate.
+def simhash_agg(hashed: DataFrame, hashes_col: str = "__hs") -> DataFrame:
+    """(__id, __sim): SimHash via explode + codegen hash aggregate, the
+    all-Catalyst reference of ``simhash_fingerprints``.
 
-    An array-fold formulation would evaluate 48 interpreted higher-order
-    lambdas per row — HOFs sit outside whole-stage codegen. Exploding the shingle hashes and computing the 48 bit-sums as
-    ordinary aggregate expressions over the AFFINE REHASH low bit
-    (``_bit_of``: ``((h*a_j + b_j) % P) & 1`` — NOT the raw ``(h >> j) & 1``,
-    whose upper bits are constant zero and collapse an LSH band to one
-    bucket; see SIMHASH_AB) keeps the whole pass inside one codegen'd
-    HashAggregate: map-side partials collapse the exploded rows back to
-    one row per doc before the (tiny) shuffle. ~4x faster at sf0.1;
-    identical integer semantics (majority rule 2*bitsum > n_shingles).
+    An array fold would evaluate ``SIMHASH_BITS`` interpreted higher-order
+    lambdas per row. Exploding the shingle hashes and summing the AFFINE
+    REHASH low bits (``_bit_of``; see SIMHASH_AB) as ordinary aggregate
+    expressions keeps the pass inside one codegen'd HashAggregate whose
+    map-side partials shrink it to one row per doc before the shuffle.
+    Identical integer semantics (majority rule 2*bitsum > n_shingles).
     """
-    if bits > len(SIMHASH_AB):
-        raise ValueError(
-            f"simhash_agg: bits={bits} exceeds the {len(SIMHASH_AB)} "
-            "packaged rehash constants — extend SIMHASH_AB before widening"
-        )
     ex = hashed.select("__id", F.explode(hashes_col).alias("__h"))
     agg = ex.groupBy("__id").agg(
         F.count(F.lit(1)).alias("__nw"),
         *[
             F.sum(_bit_of(F.col("__h"), j)).alias(f"__b{j}")
-            for j in range(bits)
+            for j in range(SIMHASH_BITS)
         ],
     )
     sim = F.lit(0).cast("long")
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         sim = sim + F.when(
             F.col(f"__b{j}") * 2 > F.col("__nw"), F.lit(1 << j).cast("long")
         ).otherwise(F.lit(0).cast("long"))
@@ -1346,32 +1209,19 @@ def simhash_pairs(
     popcount verify.
 
     Scale lever: with uniform fingerprint bits (see SIMHASH_AB) random
-    band collisions run at the birthday bound ~N^2/2^band_bits per band
-    (measured: 32M candidates/band at N=500k, 12-bit bands, 19s on 32
-    cores) — so band_bits must grow ~2*log2(N): at larger corpora widen
-    the bands, e.g. SIMHASH_BITS=60 with 4 x 15-bit bands (still lossless
-    for Hamming <= 3; stay <= 63 bits — bit 63 is the int64 sign bit, and
-    1 << 63 overflows the long weights in every path), or require 2-of-4
-    band agreement. The pre-fix raw-bit fingerprints were far worse than
-    the birthday bound: every bit above log2(FP_MOD) was constant, one
-    band held the ENTIRE corpus in one bucket. Fingerprints come from the fused Arrow kernel
-    (``simhash_fingerprints``); ``simhash_agg`` is the all-Catalyst
-    explode+aggregate alternative (equality-tested).
+    band collisions run at the birthday bound ~N^2/2^band_bits per band, so
+    band_bits must grow ~2*log2(N): at larger corpora widen the bands (e.g.
+    60 bits as 4 x 15, still lossless for Hamming <= 3; stay <= 63 bits,
+    bit 63 being the int64 sign) or require 2-of-4 band agreement
+    (DESIGN.md, Dedup). ``simhash_agg`` is the all-Catalyst alternative to
+    the fused fingerprint kernel (equality-tested).
 
-    Representative collapse (same scheme as ``minhash_lsh_pairs``, keyed
-    directly on the 48-bit fingerprint — already fixed-width): documents
-    with an IDENTICAL SimHash are grouped first, the band join runs over
-    one representative per distinct fingerprint, and member pairs expand
-    afterward (identical-fingerprint pairs at Hamming 0, cross-fingerprint
-    pairs inheriting the rep pair's popcount). Without it, g copies of a
-    document put g entries in every band bucket and the candidate join
-    grows as g^2 — a 10x-replicated stress corpus measured 4.7x
-    wall-clock pre-collapse; post-collapse the band join is
-    distinct-fingerprint-sized. Cache-lifetime note on ``jaccard_pairs``
-    applies here too.
+    Documents with an IDENTICAL fingerprint are collapsed first (keyed on
+    the fixed-width fingerprint itself): the band join runs over one
+    representative per fingerprint and member pairs expand afterward, at
+    Hamming 0 within a group. Cache-lifetime note on ``jaccard_pairs``.
     """
     grp = _collapse(simhash_fingerprints(df, id_col, text_col, n), "__sim")
-    n_bands = SIMHASH_BITS // SIMHASH_BAND_BITS
     band_cols = [
         F.concat_ws(
             "_",
@@ -1380,20 +1230,11 @@ def simhash_pairs(
             .bitwiseAND(F.lit((1 << SIMHASH_BAND_BITS) - 1))
             .cast("string"),
         )
-        for j in range(n_bands)
+        for j in range(SIMHASH_BITS // SIMHASH_BAND_BITS)
     ]
-    bands = grp.select("__rid", "__sim", F.explode(F.array(*band_cols)).alias("__bk"))
-    a, b = bands.alias("a"), bands.alias("b")
     verified = (
-        a.join(b, (F.col("a.__bk") == F.col("b.__bk")) & (F.col("a.__rid") < F.col("b.__rid")))
-        .select(
-            F.col("a.__rid").alias("__ra"),
-            F.col("b.__rid").alias("__rb"),
-            F.col("a.__sim").alias("__sa"),
-            F.col("b.__sim").alias("__sb"),
-        )
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb"))))
+        _band_pairs(grp, None, band_cols, "__sim")
+        .withColumn("hamming", F.bit_count(F.col("__sim_a").bitwiseXOR(F.col("__sim_b"))))
         .filter(F.col("hamming") <= max_hamming)
         .select("__ra", "__rb", "hamming")
     )
@@ -1959,7 +1800,8 @@ def sparse_cosine_pairs(
         F.min(F.col(id_col)).alias("mn"), F.max(F.col(id_col)).alias("mx")
     ).collect()[0]
     dot = _pair_aggregate(
-        joined, F.sum(F.col("a.__wgt") * F.col("b.__wgt")).alias("__dot"), id_type, stats
+        joined, F.col("a.__id"), F.col("b.__id"),
+        F.sum(F.col("a.__wgt") * F.col("b.__wgt")).alias("__dot"), id_type, stats,
     )
     na = nrm.select(F.col("__id").alias("__ra"), F.col("__nn").alias("__na"))
     nb = nrm.select(F.col("__id").alias("__rb"), F.col("__nn").alias("__nb"))
@@ -1994,46 +1836,21 @@ def minhash_lookup(
 ) -> DataFrame:
     """INCREMENTAL near-dup lookup: match a (small) new batch against an
     existing corpus through the MinHash-LSH band index — the daily-ingest
-    shape at 100 TB, where the corpus index is persisted (bands bucketed
-    by key at rest) and only the new batch is shingled fresh; nothing
-    corpus-sized is rebuilt per batch and the band probe is an equi join
-    that prunes to matching buckets. Returns (new_id, match_id, jaccard)
-    for band-sharing pairs with exact Jaccard >= tau.
+    shape, where the corpus index is persisted (bands bucketed by key at
+    rest) and only the new batch is shingled fresh; the band probe is an
+    equi join that prunes to matching buckets. Returns (new_id, match_id,
+    jaccard) for band-sharing pairs with exact Jaccard >= tau.
 
-    Both sides run the same fused signature kernel here (the persisted
-    form of the corpus side is exactly ``minhash_signatures`` output —
-    write it once, reuse every batch). The corpus signature table feeds
-    both its band explode and the verification join: cached, with the
-    usual clearCache-between-passes lifetime note."""
-
-    def bands_of(sig: DataFrame, idn: str) -> DataFrame:
-        return sig.select(
-            F.col("__id").alias(idn),
-            F.explode(F.array(*_band_key_cols())).alias("__bk"),
-        )
-
-    sig_new = minhash_signatures(new_df, id_col, text_col, n).cache()
-    sig_old = minhash_signatures(corpus_df, id_col, text_col, n).cache()
-    cand = (
-        bands_of(sig_new, "__idn").join(bands_of(sig_old, "__ido"), "__bk")
-        .select("__idn", "__ido")
-        .distinct()
-    )
-    sh_n = sig_new.select(F.col("__id").alias("__idn"), F.col("__sh").alias("__shn"))
-    sh_o = sig_old.select(F.col("__id").alias("__ido"), F.col("__sh").alias("__sho"))
-    return (
-        cand.join(sh_n, "__idn")
-        .join(sh_o, "__ido")
-        .withColumn("__inter", F.size(F.array_intersect("__shn", "__sho")))
-        .withColumn(
-            "jaccard",
-            F.col("__inter").cast("double")
-            / (F.size("__shn") + F.size("__sho") - F.col("__inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= tau)
-        .select(
-            F.col("__idn").alias("new_id"),
-            F.col("__ido").alias("match_id"),
-            F.round("jaccard", 6).alias("jaccard"),
-        )
+    Both sides run the same fused signature kernel here (the persisted form
+    of the corpus side is exactly ``minhash_signatures`` output). Each
+    signature table feeds its band explode and the verification join, so
+    both are cached (cache-lifetime note on ``jaccard_pairs``)."""
+    new = minhash_signatures(new_df, id_col, text_col, n).cache()
+    old = minhash_signatures(corpus_df, id_col, text_col, n).cache()
+    new, old = (t.withColumnRenamed("__id", "__rid") for t in (new, old))
+    cand = _band_pairs(new, old, _band_key_cols())
+    return _verified_jaccard(cand, new, old, tau).select(
+        F.col("__ra").alias("new_id"),
+        F.col("__rb").alias("match_id"),
+        F.round("jaccard", 6).alias("jaccard"),
     )

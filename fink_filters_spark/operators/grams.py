@@ -34,9 +34,10 @@ def _spread(df: DataFrame) -> DataFrame:
     """Repartition to the cluster's parallelism before CPU-heavy per-row
     stages. Document corpora often arrive as few large files; inheriting
     file-partitioning would run the expensive shingle/hash expressions on a
-    handful of cores regardless of cluster size."""
+    handful of cores regardless of cluster size. At a parallelism of 1
+    there is nothing to spread, so the input is returned as it is."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(par)
+    return df if par <= 1 else df.repartition(par)
 
 
 def _map_text(

@@ -39,7 +39,7 @@ def interval_join(
     Only ``how="inner"`` is supported: the exact BETWEEN residual runs as
     a post-join FILTER, which silently degenerates any outer how to inner
     (an unmatched left row's NULL start/end fails the residual and the
-    row vanishes — round-7 review finding). Compose a left variant as
+    row vanishes). Compose a left variant as
     inner UNION left_anti(points, inner-keys) at the call site, where a
     row identity exists.
     """

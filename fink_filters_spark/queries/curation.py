@@ -481,15 +481,12 @@ def pipe_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The top-50 cut is ``orderBy().limit()`` — TakeOrderedAndProject keeps
     a 50-row heap PER PARTITION and merges heaps, never moving the scored
-    corpus to one task (the round-9 verdict flagged the previous global
-    rank window as single-partition; same shape as text_bm25's TOPK cut,
+    corpus to one task (same shape as text_bm25's TOPK cut,
     queries/text.py).
 
-    Round 10: the weight fit runs as ONE flagged tokenize/hash pass over
-    the whole table (``dsir_bucket_weights_flagged``) instead of one pass
-    per slice — target and raw are both slices of ``documents``, so the
-    stage profile showed three near-equal Arrow kernel stages where two
-    are fundamental (fit + score); same integers, oracle unchanged."""
+    The weight fit runs as ONE flagged tokenize/hash pass over the whole
+    table (``dsir_bucket_weights_flagged``), since target and raw are both
+    slices of ``documents`` (OPTIMIZATION_r10.md)."""
     from ..operators.dsir import dsir_bucket_weights_flagged, dsir_scores
 
     docs = load_table(spark, sf_dir, "documents")
@@ -559,17 +556,10 @@ def pipe_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import QUALITY_THRESHOLD_PPM, quality_expr
 
     docs = load_table(spark, sf_dir, "documents")
-    # Round 10 (guide §2.4): the train-split count is a predicate on the
-    # exact-dedup survivor table, so stages 3+4 come out of ONE
-    # conditional aggregate over it — one fewer branch re-deriving the
-    # survivor aggregation. Two rejected variants, both measured a same-
-    # session LOSS at sf0.1 (A/B vs the pre-change tree): (a) cache()ing
-    # the survivor table for the remaining consumers — the columnar
-    # serialization of the normalized text costs more than the parallel
-    # recomputes it saves (1.84 -> 2.43s); (b) scan_floor on the quality
-    # scan — unlike the pq/pareto cases, this query's branches already
-    # fan out in parallel, and the round-robin shuffle of full text
-    # costs more than the per-branch single-task scans (1.63 -> 1.86s).
+    # the train-split count is a predicate on the exact-dedup survivor
+    # table, so stages 3+4 come out of ONE conditional aggregate over it;
+    # caching the survivors and scan_floor on the quality scan both
+    # measured slower (OPTIMIZATION_r10.md)
     q = docs.withColumn("__ok", quality_expr() >= QUALITY_THRESHOLD_PPM)
     s2 = q.filter("__ok")
     s3 = s2.filter(F.col("lang") == "en")
@@ -680,15 +670,10 @@ def pipe_pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    # Two fixes from the round-10 stage profile (1.78s of a 2.3-core-second
-    # query in ONE task): (1) scan_floor parallelizes the quality scoring —
-    # a single-row-group file otherwise pins the regex/HOF projection to
-    # one core; (2) the hash repartition on doc_id makes the scored table
-    # ONE exchange subtree shared by both consumers (the per-quality
-    # aggregate and the front join-back), so runtime exchange reuse
-    # computes the quality projection once instead of once per branch —
-    # at corpus scale that is one full text scan saved, and the reused
-    # exchange carries only (doc_id, q_micro, n_tok).
+    # scan_floor spreads the quality scoring over the cores, and the hash
+    # repartition on doc_id makes the scored table ONE exchange both
+    # consumers reuse, so the quality projection runs once
+    # (OPTIMIZATION_r10.md)
     scored = (
         scan_floor(docs)
         .select(

@@ -231,11 +231,12 @@ def q_dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-join and three single-row aggregates combined by broadcast
     cross joins — output is one row regardless of corpus size.
 
-    Both pipelines consume the same corpus, so the adaptive-collapse
-    probe runs ONCE here and the fused ``minhash_signatures`` table (whose
+    Both pipelines consume the same corpus, so the collapse probe runs
+    ONCE here and the fused ``minhash_signatures`` table (whose
     ``(__id, __sh)`` columns are bit-identical to the exact path's
     ``_hashed_shingled`` — same ``grams._shingle_flat`` producer) is
-    cached and handed to BOTH operators: one tokenize/hash kernel pass
+    cached and handed to BOTH operators, which collapse it exactly when
+    the probe gave it the ``__k`` key: one tokenize/hash kernel pass
     instead of two, one duplicate-fraction scan instead of two.
     """
     from ..operators.dedup import (
@@ -243,15 +244,15 @@ def q_dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    collapse = _duplicate_fraction(docs, "text") >= COLLAPSE_DUP_FRAC
-    sig = minhash_signatures(docs, "doc_id", "text", 3, with_key=collapse).cache()
+    keyed = _duplicate_fraction(docs, "text") >= COLLAPSE_DUP_FRAC
+    sig = minhash_signatures(docs, "doc_id", "text", 3, with_key=keyed).cache()
     true_p = jaccard_pairs(  # ungated: exact dual of this query's oracle
         docs, "doc_id", "text", n=3, tau=JACCARD_TAU, max_df_frac=None,
-        collapse=collapse, shingled=sig).select(
+        shingled=sig).select(
         "id_a", "id_b", F.lit(1).alias("__t")
     )
     found = minhash_lsh_pairs(docs, "doc_id", "text", n=3, tau=JACCARD_TAU,
-                              collapse=collapse, signatures=sig).select(
+                              signatures=sig).select(
         "id_a", "id_b", F.lit(1).alias("__f")
     )
     # ONE full-outer join on the pair key + ONE aggregate: each heavy pair

@@ -207,7 +207,7 @@ def q_pipe_unimax_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     water-filling closed form over the per-source token counts
     (operators/chunking.unimax_allocation; exact-integer saturation test
     AND exact-integer micro-units — no double arithmetic anywhere in the
-    allocation since round 7)."""
+    allocation)."""
     docs = load_table(spark, sf_dir, "documents")
     per_source = docs.groupBy("source").agg(
         F.sum(F.size(_toks("text"))).alias("n_tok")
@@ -278,14 +278,11 @@ def q_dedup_chunk_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the dup set (output-sized; AQE broadcasts it when small), one
     per-doc aggregation. No text ever shuffles — only hashes.
 
-    Round 10 (guide §2.4, §2.5): ``scan_floor`` parallelizes the CDC
-    chunking — the single-row-group fixture otherwise pins the whole
-    rolling-hash/md5 projection to ONE task — and the explicit
-    ``repartition("chunk_md5")`` makes the chunk stream ONE exchange
-    subtree shared by the dup-count aggregate and the anti-join probe
-    (both cluster on chunk_md5), so the chunking computes once instead of
-    once per branch. The shared exchange carries only narrow chunk
-    metadata (ids, positions, 32-char hashes) — never text."""
+    ``scan_floor`` spreads the CDC chunking over the cores, and
+    ``repartition("chunk_md5")`` makes the chunk stream ONE exchange that
+    the dup-count aggregate and the anti-join probe reuse, so the chunking
+    runs once; it carries chunk metadata, never text
+    (OPTIMIZATION_r10.md)."""
     from ..tables import scan_floor
 
     docs = load_table(spark, sf_dir, "documents")
@@ -432,8 +429,8 @@ def q_pipe_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     packing a shard writer uses to equalize training-shard token budgets.
 
     Scale: the global position is NOT an unpartitioned rank window (that
-    is a single-partition WindowExec over every doc row — round-9 verdict
-    finding). n_tok has a bounded value DOMAIN (max tokens per document,
+    is a single-partition WindowExec over every doc row; see
+    tests/test_plans.py). n_tok has a bounded value DOMAIN (max tokens per document,
     independent of corpus size), so operators/rank.grid_rank decomposes
     the rank into domain-table cumulative counts + a window partitioned
     BY n_tok: one distributed corpus shuffle, then the 16-group

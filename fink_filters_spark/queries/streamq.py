@@ -89,12 +89,9 @@ def _run_to_memory(
     state can be evicted — but an INNER stream-stream join emits every
     result row during the data batch itself, so for a bounded availableNow
     run the no-data batch only re-commits all state stores and changes no
-    output. Profiled round 9 (tools/stream_profile.py): the stream-stream
-    join's no-data batch alone cost ~7s (one full commit cycle across
-    partitions x 4 join state stores) with byte-identical results.
+    output; it only re-commits every state store (PLANS.md).
 
-    Round 11 extends the same reasoning to every UNWATERMARKED query:
-    a complete-mode aggregation re-emits its full state each batch
+    The same holds for every UNWATERMARKED query: a complete-mode aggregation re-emits its full state each batch
     regardless, and an unwatermarked ``dropDuplicates`` emits new keys
     during the data batch and can never evict — in both cases the no-data
     batch advances no watermark and changes no output; it only re-commits
@@ -246,16 +243,11 @@ def stream_event_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     only for rows inside the watermark delay — pairs older than the
     2-hour watermark are dropped, by design.
 
-    Round-9 bench fix (VERDICT r8 'What's wrong #1'): per-batch profiling
-    showed the 13.7s driver-bench number was state-store COMMIT overhead,
-    not the join — a symmetric hash join opens 4 state stores per shuffle
-    partition (left/right key-to-count + key-with-index-to-value), so 8
-    partitions = 32 store commits per batch, plus a trailing no-data batch
-    re-committing all 32 for zero output (inner joins emit during the data
-    batch). Pinning 2 partitions (8 stores) and skipping the no-data batch
-    cut the measured wall 8.5s -> 1.6s with identical output. At production
-    scale the partition count is sized to key cardinality instead — the
-    state per partition, not the store count, is then the binding cost."""
+    The run pins 2 shuffle partitions and skips the no-data batch: a
+    symmetric hash join commits 4 state stores per partition every batch,
+    and that commit overhead, not the join, dominated (PLANS.md). At
+    production scale the partition count is sized to key cardinality
+    instead."""
     ev = _events_stream(spark, sf_dir).filter(F.col("user_id") % 10 == 0)
     a = (
         ev.select(

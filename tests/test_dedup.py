@@ -219,12 +219,13 @@ def test_jaccard_gate_drops_boilerplate_only_identical_pair(spark):
     assert not gated  # doc 100's survivors overlap nothing; 101 is alone
 
 
-def test_minhash_lsh_collapse_branches_bit_identical(spark):
-    """collapse=True / collapse=False / "auto" must emit the SAME pair set
-    with the SAME rounded jaccard values — the collapse is a pure physical
-    rewrite (identical shingle sets share all band keys, so their pairs
-    surface through the ordinary candidate join at Jaccard 1)."""
-    from fink_filters_spark.operators.dedup import minhash_lsh_pairs
+def test_minhash_lsh_collapse_branches_bit_identical(spark, monkeypatch):
+    """The collapsed, the per-document and the probed branch must emit the
+    SAME pair set with the SAME rounded jaccard values — the collapse is a
+    pure physical rewrite (identical shingle sets share all band keys, so
+    their pairs surface through the ordinary candidate join at Jaccard 1).
+    The branches are forced through the probe's threshold."""
+    import fink_filters_spark.operators.dedup as d
 
     base = "the quick brown fox jumps over the lazy dog tonight and runs away"
     rows = (
@@ -234,8 +235,9 @@ def test_minhash_lsh_collapse_branches_bit_identical(spark):
     )
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {}
-    for mode in (True, False, "auto"):
-        got = minhash_lsh_pairs(df, "doc_id", "text", 3, 0.5, collapse=mode)
+    for mode, frac in ((True, 0.0), (False, 2.0), ("auto", d.COLLAPSE_DUP_FRAC)):
+        monkeypatch.setattr(d, "COLLAPSE_DUP_FRAC", frac)
+        got = d.minhash_lsh_pairs(df, "doc_id", "text", 3, 0.5)
         out[mode] = sorted((r.id_a, r.id_b, r.jaccard) for r in got.collect())
         spark.catalog.clearCache()
     assert out[True] == out[False] == out["auto"]
@@ -1048,15 +1050,13 @@ def test_shingle_kernel_unigrams_and_tab_padding(spark):
 
 
 @pytest.mark.parametrize("id_type", ["int", "long", "string"])
-def test_shingle_family_any_id_type(spark, id_type):
+def test_shingle_family_any_id_type(spark, id_type, monkeypatch):
     """The shingle, MinHash and SimHash kernels pass the id column through
     in its own type: every pair operator over them returns the pairs of
     the long-id run mapped through the id map (zero-padded strings keep
     the id order), with id_a/id_b in the input's type, on both collapse
-    paths."""
-    from fink_filters_spark.operators.dedup import (
-        containment_pairs, jaccard_pairs, minhash_lsh_pairs, simhash_pairs,
-    )
+    paths (forced through the probe's threshold)."""
+    import fink_filters_spark.operators.dedup as d
 
     base = "the quick brown fox jumps over the lazy dog tonight and runs away"
     texts = (
@@ -1069,14 +1069,18 @@ def test_shingle_family_any_id_type(spark, id_type):
     df = spark.createDataFrame(
         [(to_id(i), t) for i, t in enumerate(texts)], f"doc_id {id_type}, text string"
     )
+    def forced(op, frac):
+        def run(t):
+            monkeypatch.setattr(d, "COLLAPSE_DUP_FRAC", frac)
+            return op(t, "doc_id", "text", 3, 0.5)
+        return run
+
     ops = {
-        f"{op.__name__}[{mode}]": (
-            lambda d, op=op, mode=mode: op(d, "doc_id", "text", 3, 0.5, collapse=mode)
-        )
-        for op in (jaccard_pairs, containment_pairs, minhash_lsh_pairs)
-        for mode in (True, False)
+        f"{op.__name__}[{collapse}]": forced(op, 0.0 if collapse else 2.0)
+        for op in (d.jaccard_pairs, d.containment_pairs, d.minhash_lsh_pairs)
+        for collapse in (True, False)
     }
-    ops["simhash_pairs"] = lambda d: simhash_pairs(d, "doc_id", "text")
+    ops["simhash_pairs"] = lambda t: d.simhash_pairs(t, "doc_id", "text")
     for name, op in ops.items():
         want = [(to_id(a), to_id(b), v) for a, b, v in sorted(op(long_df).collect())]
         out = op(df)
@@ -1295,43 +1299,39 @@ def test_winnowing_kernel_matches_native_hof_path(spark):
         assert got == want and got, (k, w)
 
 
-def test_precomputed_signature_sharing_bit_identical(corpus):
-    """Round 10: the ``shingled=``/``signatures=`` seams (one fused kernel
-    pass shared by the exact and approximate pipelines, as
-    q_dedup_lsh_recall uses them) must be bit-identical to the default
-    per-operator kernels — in BOTH collapse branches."""
-    from fink_filters_spark.operators.dedup import (
-        jaccard_pairs, minhash_lsh_pairs, minhash_signatures,
-    )
+def test_precomputed_signature_sharing_bit_identical(corpus, monkeypatch):
+    """The ``shingled=``/``signatures=`` seams (one fused kernel pass shared
+    by the exact and approximate pipelines, as q_dedup_lsh_recall uses
+    them) must be bit-identical to the per-operator kernels — in BOTH
+    collapse branches: a table with the ``__k`` key against a corpus the
+    probe collapses, a keyless one against a corpus it does not."""
+    import fink_filters_spark.operators.dedup as d
 
     df, _pdf = corpus
     for collapse in (False, True):
-        sig = minhash_signatures(
+        monkeypatch.setattr(d, "COLLAPSE_DUP_FRAC", 0.0 if collapse else 2.0)
+        sig = d.minhash_signatures(
             df, "doc_id", "text", 3, with_key=collapse
         ).cache()
         try:
             want_j = sorted(
-                jaccard_pairs(
+                d.jaccard_pairs(
                     df, "doc_id", "text", n=3, tau=0.5, max_df_frac=None,
-                    collapse=collapse,
                 ).collect()
             )
             got_j = sorted(
-                jaccard_pairs(
+                d.jaccard_pairs(
                     df, "doc_id", "text", n=3, tau=0.5, max_df_frac=None,
-                    collapse=collapse, shingled=sig,
+                    shingled=sig,
                 ).collect()
             )
             assert got_j == want_j
             want_m = sorted(
-                minhash_lsh_pairs(
-                    df, "doc_id", "text", n=3, tau=0.5, collapse=collapse
-                ).collect()
+                d.minhash_lsh_pairs(df, "doc_id", "text", n=3, tau=0.5).collect()
             )
             got_m = sorted(
-                minhash_lsh_pairs(
-                    df, "doc_id", "text", n=3, tau=0.5, collapse=collapse,
-                    signatures=sig,
+                d.minhash_lsh_pairs(
+                    df, "doc_id", "text", n=3, tau=0.5, signatures=sig,
                 ).collect()
             )
             assert got_m == want_m
@@ -1339,49 +1339,25 @@ def test_precomputed_signature_sharing_bit_identical(corpus):
             sig.unpersist()
 
 
-def test_signature_sharing_collapse_requires_key(corpus):
-    """collapse=True with a keyless precomputed table must fail loudly,
-    not group on a missing column."""
-    from fink_filters_spark.operators.dedup import (
-        jaccard_pairs, minhash_lsh_pairs, minhash_signatures,
-    )
-
-    df, _pdf = corpus
-    sig = minhash_signatures(df, "doc_id", "text", 3, with_key=False)
-    with pytest.raises(ValueError, match="__k"):
-        jaccard_pairs(df, "doc_id", "text", collapse=True, shingled=sig)
-    with pytest.raises(ValueError, match="__k"):
-        minhash_lsh_pairs(df, "doc_id", "text", collapse=True, signatures=sig)
-
-
 def test_winnowing_pairs_precomputed_fingerprints_bit_identical(corpus):
-    """Round 10: winnowing_pairs(fingerprints=...) (the shared-kernel seam
-    winnowing_overlap_spans uses) must equal the self-computed path."""
+    """The pair join over a caller-cached fingerprint table (the seam
+    winnowing_overlap_spans uses) must equal winnowing_pairs, with and
+    without the df purge."""
     from fink_filters_spark.operators.dedup import (
-        winnowing_fingerprints, winnowing_pairs,
+        _winnow_pair_join, _winnow_postings, winnowing_fingerprints,
+        winnowing_pairs,
     )
 
     df, _pdf = corpus
     fps = winnowing_fingerprints(df, "doc_id", "text", k=3, w=4).cache()
     try:
-        want = sorted(
-            winnowing_pairs(df, "doc_id", "text", k=3, w=4, min_shared=2).collect()
-        )
-        got = sorted(
-            winnowing_pairs(
-                df, "doc_id", "text", k=3, w=4, min_shared=2, fingerprints=fps
-            ).collect()
-        )
-        assert got == want
-        # and with the df purge on, as the spans operator passes it
-        want_g = sorted(
-            winnowing_pairs(df, "doc_id", "text", k=3, w=4, min_shared=2,
-                            max_df=5).collect()
-        )
-        got_g = sorted(
-            winnowing_pairs(df, "doc_id", "text", k=3, w=4, min_shared=2,
-                            max_df=5, fingerprints=fps).collect()
-        )
-        assert got_g == want_g
+        for max_df in (None, 5):
+            want = sorted(
+                winnowing_pairs(df, "doc_id", "text", k=3, w=4, min_shared=2,
+                                max_df=max_df).collect()
+            )
+            postings, _ = _winnow_postings(fps, "doc_id", max_df)
+            got = sorted(_winnow_pair_join(postings, "doc_id", 2).collect())
+            assert got == want and want, max_df
     finally:
         fps.unpersist()

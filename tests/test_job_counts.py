@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -136,3 +137,71 @@ def test_write_partitioned_job_budget(spark, ztf_df, tmp_path):
     assert _jobs(spark, lambda: write_partitioned(
         ztf_df, str(tmp_path / "archive"), ["roid"], files_per_partition=4
     )) <= 2
+
+
+_TEXTS = (
+    ["the quick brown fox jumps over the lazy dog tonight"] * 4
+    + [f"the quick brown fox jumps over the lazy dog variant {i}" for i in range(6)]
+    + [f"unique document {i} with words {i * 7} and {i * 13} only here" for i in range(20)]
+)
+
+
+def _dedup_ops(spark):
+    """Each touched dedup operator, built over one small corpus with an
+    exact-duplicate group (so the collapse probe collapses it)."""
+    from fink_filters_spark.operators import dedup as d
+
+    docs = spark.createDataFrame(list(enumerate(_TEXTS)), "doc_id long, text string")
+    new, old = docs.filter("doc_id % 5 = 0"), docs.filter("doc_id % 5 != 0")
+    ev = docs.filter("doc_id in (0, 12)")
+    args = (docs, "doc_id", "text")
+    return {
+        "jaccard_pairs": lambda: d.jaccard_pairs(*args, 3, 0.5),
+        "containment_pairs": lambda: d.containment_pairs(*args, 3, 0.8),
+        "minhash_lsh_pairs": lambda: d.minhash_lsh_pairs(*args, 3, 0.5),
+        "simhash_pairs": lambda: d.simhash_pairs(*args),
+        "minhash_lookup": lambda: d.minhash_lookup(new, old, "doc_id", "text"),
+        "winnowing_overlap_spans": lambda: d.winnowing_overlap_spans(*args),
+        "decontaminate": lambda: d.decontaminate(docs, ev, "doc_id", "text"),
+        "contamination_fraction": lambda: d.contamination_fraction(docs, ev, "doc_id", "text"),
+        "duplicated_spans": lambda: d.duplicated_spans(*args),
+        "trim_duplicated_spans": lambda: d.trim_duplicated_spans(*args),
+    }
+
+
+# jobs to build each operator and collect its rows: (parallelism above 1,
+# parallelism 1, where ``grams._spread`` does not repartition the input and
+# the plans differ)
+DEDUP_JOB_BUDGETS = {
+    "jaccard_pairs": (20, 19),
+    "containment_pairs": (20, 19),
+    "minhash_lsh_pairs": (18, 17),
+    "simhash_pairs": (11, 10),
+    "minhash_lookup": (10, 9),
+    "winnowing_overlap_spans": (10, 9),
+    "decontaminate": (8, 6),
+    "contamination_fraction": (6, 4),
+    "duplicated_spans": (9, 10),
+    "trim_duplicated_spans": (9, 11),
+}
+
+
+@pytest.mark.parametrize("op", sorted(DEDUP_JOB_BUDGETS))
+def test_dedup_operator_job_budget(spark, op):
+    """Building a pair-join, span or decontamination operator (its
+    collapse, purge and id-range probes included) and collecting its rows
+    stays within its job budget, so no driver-side probe creeps in.
+
+    Adaptive re-planning on a loaded host now and then adds one job to a
+    run; a probe adds one to every run, so the smaller of two runs is
+    compared."""
+    build = _dedup_ops(spark)[op]
+    runs = []
+    try:
+        for _ in range(2):
+            spark.catalog.clearCache()  # a warm cache would hide the kernel jobs
+            runs.append(_jobs(spark, lambda: build().collect()))
+    finally:
+        spark.catalog.clearCache()
+    single = spark.sparkContext.defaultParallelism <= 1
+    assert min(runs) <= DEDUP_JOB_BUDGETS[op][single], runs

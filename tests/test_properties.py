@@ -1015,6 +1015,104 @@ def test_sparse_cosine_dense_and_posting_paths_agree(spark, corpus):
     assert [(a, b) for a, b, _ in dense[1]] == want
 
 
+def _shingle_sets(rows, n):
+    """Brute-force word n-gram sets of ``(id, text)`` rows, over the
+    engine's tokenization (lower, trim, whitespace split)."""
+    out = {}
+    for i, t in rows:
+        toks = t.lower().split()
+        sh = {tuple(toks[j:j + n]) for j in range(len(toks) - n + 1)}
+        if sh:
+            out[i] = sh
+    return out
+
+
+def _pair_values(sets, measure):
+    return {
+        (a, b): measure(len(sets[a] & sets[b]), len(sets[a]), len(sets[b]))
+        for a in sets for b in sets if a < b
+    }
+
+
+def _jac(i, na, nb):
+    return i / (na + nb - i)
+
+
+def _cont(i, na, nb):
+    return i / min(na, nb)
+
+
+@st.composite
+def _nested_corpora(draw):
+    """(id type, rows, tau_j, tau_c): word-bigram documents that are
+    prefixes of one base text, copies of earlier documents or fresh. A
+    prefix's set is a subset of a longer prefix's, so its Jaccard equals
+    the size ratio the prune compares with; copies make the probe's
+    collapse worth taking. Each tau is drawn from the values the corpus
+    attains, so some pairs sit exactly on it."""
+    typ = draw(st.sampled_from(["int", "long", "string"]))
+    word = st.sampled_from(["a", "b", "c", "d", "e", "f"])
+    base = draw(st.lists(word, min_size=2, max_size=9))
+    docs = []
+    for _ in range(draw(st.integers(min_value=2, max_value=7))):
+        kind = draw(st.sampled_from(["prefix", "copy", "fresh"]))
+        if kind == "prefix":
+            docs.append(base[:draw(st.integers(min_value=0, max_value=len(base)))])
+        elif kind == "copy" and docs:
+            docs.append(draw(st.sampled_from(docs)))
+        else:
+            docs.append(draw(st.lists(word, max_size=8)))
+    lo = 0 if typ == "string" else -30
+    ids = draw(st.lists(st.integers(min_value=lo, max_value=30),
+                        min_size=len(docs), max_size=len(docs), unique=True))
+    if typ == "string":
+        ids = [f"d{i:03d}" for i in ids]
+    rows = [(i, " ".join(d)) for i, d in zip(ids, docs)]
+    sets = _shingle_sets(rows, 2)
+    taus = []
+    for measure in (_jac, _cont):
+        attained = sorted({v for v in _pair_values(sets, measure).values() if v > 0})
+        taus.append(draw(st.sampled_from(attained)) if attained else 0.5)
+    return typ, rows, taus[0], taus[1]
+
+
+_ON_THE_BOUND = [(1, "p q r s t"), (2, "p q r s t u v w"), (3, "x y"), (4, "x y")]
+
+
+@SLOW
+@given(corpus=_nested_corpora())
+@example(corpus=("long", _ON_THE_BOUND, 4 / 7, 1.0))
+def test_jaccard_size_ratio_prune_and_collapse_are_exact(spark, corpus):
+    """``jaccard_pairs`` (whose size-ratio prune drops a co-posting when
+    min/max < tau) and ``containment_pairs`` return exactly the
+    brute-force pairs at or above tau, including pairs on tau where the
+    prune's bound is tight, for int, long and string ids; the collapsed and
+    the per-document branch, forced through the probe's threshold, return
+    identical rows and schema."""
+    from unittest import mock
+
+    import fink_filters_spark.operators.dedup as d
+
+    typ, rows, tau_j, tau_c = corpus
+    df = spark.createDataFrame(rows, f"doc_id {typ}, text string")
+    sets = _shingle_sets(rows, 2)
+    for op, tau, measure in ((d.jaccard_pairs, tau_j, _jac),
+                             (d.containment_pairs, tau_c, _cont)):
+        runs = []
+        for frac in (0.0, 2.0):  # always / never collapse
+            with mock.patch.object(d, "COLLAPSE_DUP_FRAC", frac):
+                out = op(df, "doc_id", "text", n=2, tau=tau, max_df_frac=None)
+                runs.append((out.schema, sorted(map(tuple, out.collect()))))
+            spark.catalog.clearCache()
+        assert runs[0] == runs[1], op.__name__
+        want = {k: v for k, v in _pair_values(sets, measure).items() if v >= tau}
+        got = {(a, b): v for a, b, v in runs[0][1]}
+        assert set(got) == set(want), op.__name__
+        for k, v in got.items():
+            assert v == pytest.approx(want[k], abs=1e-6)
+        assert runs[0][0]["id_a"].dataType == df.schema["doc_id"].dataType
+
+
 @settings(max_examples=50, deadline=None)
 @given(
     st.lists(

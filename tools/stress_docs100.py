@@ -444,10 +444,10 @@ def _run(spark, entry) -> None:
         "  the ratio floors at fixed-overhead amortization, not at 1).",
         "  The sub-quadratic duals for the same contract remain",
         "  dedup_minhash_lsh and winnowing.",
-        "- the representative collapse (`collapse=\"auto\"`, round 9: now on",
-        "  the exact-pair operators too, not just minhash): this corpus has",
+        "- the representative collapse (decided by the duplicate-fraction",
+        "  probe on the exact-pair operators and minhash): this corpus has",
         "  ZERO duplicate texts by construction (`_duplicate_fraction` == 0",
-        "  at 100x), so auto skips the corpus-wide array groupBy — a pure",
+        "  at 100x), so the probe skips the corpus-wide array groupBy — a pure",
         "  no-op when every shingle set is distinct. The TRUE branch's",
         "  regime is naive duplication; measured round 8 (PLANS.md",
         "  \"naive-duplication experiment\"): on 20 identical copies of each",
