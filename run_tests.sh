@@ -3,7 +3,7 @@
 #  1. unit + property tests
 #  2. the plan lint and shuffle budgets again at local[1], where a
 #     round-robin repartition prints as a counted SinglePartition exchange
-#  3. DuckDB-oracle correctness replica at sf0.01 (the driver's check)
+#  3. DuckDB-oracle correctness replica at sf0.01
 set -euo pipefail
 cd "$(dirname "$0")"
 # the same environment as the tier-1 command: one Spark core per host core
